@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift detection between partitions (SURVEY.md §2.5 drift
@@ -10,37 +11,37 @@ import org.apache.spark.sql.functions._
   *
   * Only the first `groupBy(part_id, col)` touches big data (and it partial-
   * aggregates map-side to ≤ parts × |vocab| rows); everything after operates
-  * on that tiny contingency table, including the parts × vocab cross join
-  * that restores zero cells (a category absent from a partition still
-  * contributes its expected count).
+  * on that tiny contingency table.
   */
 object Drift {
 
   /** Per-partition chi-square statistic over `category` frequencies.
     * Output: (part_id, chi2, dof, n, drifted).
+    *
+    * A zero cell adds its `e`, and a partition's `e`s sum to its row total
+    * `r`, so Σ (o − e)²/e over all cells = Σ o²/e over present cells − r.
+    * The contingency table is coalesced into one task, where the totals are
+    * window sums: one shuffle for the whole statistic.
     */
   def chiSquare(
       df: DataFrame,
       category: String,
       threshold: Double = 30.0): DataFrame = {
-    val counts = df
+    val all = Window.partitionBy()
+    val r = sum("o").over(Window.partitionBy("part_id"))
+    df
       .groupBy(col("part_id"), coalesce(col(category), lit("__null__")).as("cat"))
       .agg(count(lit(1)).as("o"))
-    val rowTot = counts.groupBy("part_id").agg(sum("o").as("r"))
-    val colTot = counts.groupBy("cat").agg(sum("o").as("c"))
-    val grand = counts.agg(sum("o").as("g"))
-
-    rowTot
-      .crossJoin(broadcast(colTot))
-      .join(counts, Seq("part_id", "cat"), "left_outer")
-      .crossJoin(broadcast(grand))
-      .withColumn("e", col("r") * col("c") / col("g"))
-      .withColumn("term",
-        pow(coalesce(col("o"), lit(0L)) - col("e"), 2) / col("e"))
+      .coalesce(1)
+      .withColumn("k", dense_rank().over(Window.orderBy("cat")))
+      .select(col("part_id"), col("o"), r.as("r"),
+        (r * sum("o").over(Window.partitionBy("cat")) / sum("o").over(all))
+          .as("e"),
+        max("k").over(all).as("k"))
       .groupBy("part_id")
       .agg(
-        sum("term").as("chi2"),
-        (count(lit(1)) - 1).as("dof"),
+        (sum(col("o") * col("o") / col("e")) - max("r")).as("chi2"),
+        (max("k") - 1).cast("long").as("dof"),
         max("r").as("n"))
       .withColumn("drifted", col("chi2") > threshold)
   }
@@ -48,9 +49,9 @@ object Drift {
   /** Population Stability Index of each partition's category distribution
     * against the pooled table: Σ (p − q)·ln(p/q), proportions floored at
     * `eps` so zero cells contribute finitely (the standard PSI smoothing).
-    * Same shuffle shape as [[chiSquare]]: one big groupBy, then arithmetic
-    * on the tiny contingency table. Common reading: < 0.1 stable, 0.1–0.25
-    * moderate, > 0.25 drifted.
+    * One big groupBy, then arithmetic on the tiny contingency table, where
+    * a parts × vocab cross join restores the zero cells. Common reading:
+    * < 0.1 stable, 0.1–0.25 moderate, > 0.25 drifted.
     */
   def psi(
       df: DataFrame,

@@ -66,12 +66,17 @@ object Runner {
       .write.mode("overwrite").partitionBy("part_id")
       .parquet(s"$outDir/violations")
     val writtenViolations = spark.read.parquet(s"$outDir/violations")
-    val verdicts = Validator.verdicts(todo, writtenViolations).cache()
-    verdicts.coalesce(1).write.mode("overwrite").partitionBy("part_id")
+    // At most one verdict row per part_id: collect once, write both sinks
+    // from the rows (one file per verdicts/part_id=* directory).
+    val verdictPlan = Validator.verdicts(todo, writtenViolations)
+    val verdictRows = verdictPlan.collect()
+    val verdicts = spark.createDataFrame(
+      java.util.Arrays.asList(verdictRows: _*), verdictPlan.schema)
+    verdicts.write.mode("overwrite").partitionBy("part_id")
       .parquet(s"$outDir/verdicts")
     val wallMs = (System.nanoTime() - t0) / 1000000L
 
-    val manifest = verdicts.select(
+    verdicts.select(
       lit(runId).as("run_id"),
       col("part_id"),
       lit(snapshot).as("snapshot"),
@@ -79,15 +84,13 @@ object Runner {
       col("n_rows"),
       col("n_violations"),
       lit(wallMs).as("wall_ms"))
-    manifest.write.mode("append").parquet(manifestPath(outDir))
+      .write.mode("append").parquet(manifestPath(outDir))
 
-    val nNew = verdicts.count()
-    verdicts.unpersist()
     Result(
       violations = spark.read.parquet(s"$outDir/violations"),
       verdicts = spark.read.parquet(s"$outDir/verdicts"),
       manifest = spark.read.parquet(manifestPath(outDir)),
-      validatedParts = nNew,
+      validatedParts = verdictRows.length.toLong,
       skippedParts = done.size.toLong)
   }
 }

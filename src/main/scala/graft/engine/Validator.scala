@@ -119,16 +119,30 @@ object Validator {
       .groupBy(col("conv_id"), col("turn_idx"))
       .agg(min("part_id").as("part_id"), min("p").as("p"),
         min("text").as("text"))
-      .select(
-        col("conv_id"), col("turn_idx"), col("part_id"),
-        lit("TS_ORDER_ts").as("rule_id"),
-        lit("ts").as("field"),
-        format_string("Non-monotonic ts in conv %s at turn %d: %s < %s",
-          col("conv_id"), col("turn_idx"),
-          col("p.ts").cast("string"), col("p.prev_ts").cast("string"))
-          .as("message"),
-        col("text"))
+      .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
+        tsOrderRule :+ col("text"): _*)
   }
+
+  /** `rule_id`, `field` and `message` of a TS_ORDER_ts violation, from the
+    * key and its first violating pair `p = (ts, prev_ts)`. Shared by every
+    * ts-order face so their bytes cannot drift apart.
+    */
+  private def tsOrderRule: Seq[Column] = Seq(
+    lit("TS_ORDER_ts").as("rule_id"),
+    lit("ts").as("field"),
+    format_string("Non-monotonic ts in conv %s at turn %d: %s < %s",
+      col("conv_id"), col("turn_idx"),
+      col("p.ts").cast("string"), col("p.prev_ts").cast("string"))
+      .as("message"))
+
+  /** `rule_id`, `field` and `message` of a DUPLICATE_KEY violation, from the
+    * key and its row count `n`. Shared like [[tsOrderRule]].
+    */
+  private def dupKeyRule: Seq[Column] = Seq(
+    lit("DUPLICATE_KEY").as("rule_id"),
+    lit("conv_id,turn_idx").as("field"),
+    format_string("%d duplicate rows for key (conv_id, turn_idx)=(%s, %d)",
+      col("n"), col("conv_id"), col("turn_idx")).as("message"))
 
   /** `(conv_id, turn_idx)` uniqueness via explicit two-phase *salted* hash
     * aggregate (SURVEY.md §2.5): phase 1 groups by (key, salt) so a hot
@@ -170,13 +184,8 @@ object Validator {
       .join(dupKeys, Seq("conv_id", "turn_idx"))
       .groupBy(col("conv_id"), col("turn_idx"))
       .agg(min("text").as("text"), min("n").as("n"), min("part_id").as("part_id"))
-      .select(
-        col("conv_id"), col("turn_idx"), col("part_id"),
-        lit("DUPLICATE_KEY").as("rule_id"),
-        lit("conv_id,turn_idx").as("field"),
-        format_string("%d duplicate rows for key (conv_id, turn_idx)=(%s, %d)",
-          col("n"), col("conv_id"), col("turn_idx")).as("message"),
-        col("text"))
+      .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
+        dupKeyRule :+ col("text"): _*)
   }
 
   /** Referential integrity of `conv_id` against the conversations dim — the
@@ -370,84 +379,61 @@ object Validator {
         col("text"))
   }
 
+  /** Merged tail of [[tsOrderViolations]] + [[dupViolations]] for
+    * [[allViolations]], row-identical to them (asserted in ValidatorSpec).
+    * Duplicate keys are peers in the ts-order window's key order, so a
+    * peer-range `count(1)` beside `lag(ts)` finds them in ONE window; the
+    * `groupBy` over the rare surviving rows reuses the window's conv_id
+    * partitioning, and both rules share one text-attach scan, join and
+    * aggregate. Null keys drop at that join, as in the standalone faces.
+    */
+  private def tsDupViolations(turns: DataFrame): DataFrame = {
+    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    val tsBad = col("prev_ts").isNotNull && col("prev_ts") > col("ts")
+    val badKeys = turns
+      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("ts"),
+        lag("ts", 1).over(w).as("prev_ts"),
+        count(lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
+          .as("n"))
+      .filter(tsBad || col("n") > 1)
+      .groupBy(col("conv_id"), col("turn_idx"))
+      .agg(min(when(tsBad, col("part_id"))).as("ts_pid"),
+        min(when(tsBad, struct(col("ts"), col("prev_ts")))).as("p"),
+        min("part_id").as("dup_pid"), max("n").as("n"))
+    turns
+      .select(col("conv_id"), col("turn_idx"), col("text"))
+      .join(badKeys, Seq("conv_id", "turn_idx"))
+      .groupBy(col("conv_id"), col("turn_idx"))
+      .agg(min("ts_pid").as("ts_pid"), min("p").as("p"),
+        min("dup_pid").as("dup_pid"), min("n").as("n"),
+        min("text").as("text"))
+      .select(col("conv_id"), col("turn_idx"), col("text"),
+        explode(array(
+          when(col("p").isNotNull,
+            struct(col("ts_pid").as("part_id") +: tsOrderRule: _*)),
+          when(col("n") > 1,
+            struct(col("dup_pid").as("part_id") +: dupKeyRule: _*))))
+          .as("v"))
+      .filter(col("v").isNotNull)
+      .select(col("conv_id"), col("turn_idx"), col("v.*"), col("text"))
+  }
+
   /** Full violations table: per-row ∪ window ∪ dedup ∪ referential, in the
     * stable `(conv_id, turn_idx)` sort-within-partitions output ordering
     * mandated by the north star (no global sort — no extra shuffle).
     *
-    * Scale note — why each branch re-scans the source instead of sharing one
-    * repartition(conv_id) exchange: the branches prune to different column
-    * subsets (dup phase A never reads `text`; the row branch never shuffles
-    * at all), so N column-pruned parquet scans cost less than N shuffle-fetch
-    * passes over one full-width reused exchange. On a 100 TB table the
-    * exchange would ship `text` (the dominant bytes) through the network
-    * once per consumer; pruned scans read it exactly once, map-side.
+    * Scale note — each branch re-reads the source pruned to its own columns
+    * instead of sharing one repartition(conv_id) exchange, which on a 100 TB
+    * table would ship `text`, the dominant bytes, once per consumer. The
+    * row checks never shuffle; the key window shuffles only (conv_id,
+    * turn_idx, part_id, ts) and runs a hot conversation in one task (the
+    * skew-proof faces are [[tsOrderViolationsSegmented]] and the salted
+    * [[dupViolations]]).
     */
-  /** Merged tail of [[tsOrderViolations]] + [[dupViolations]] for
-    * [[allViolations]]: row-identical output (asserted in ValidatorSpec —
-    * same keys, same aggregated minima, same message bytes), but the two
-    * branches' text-attach stages share ONE (conv_id, turn_idx, text) scan,
-    * one broadcast join, and one aggregate instead of two of each — at any
-    * scale the text column dominates scan bytes, so this removes a full
-    * text pass per validate run (guide §1.2: fewer passes first). The
-    * standalone branch functions remain the single-check entry points
-    * (t04, skew bench, streaming parity).
-    */
-  private def tsDupViolations(
-      turns: DataFrame, saltFactor: Int): DataFrame = {
-    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    val tsBad = turns
-      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("ts"))
-      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("ts"),
-        lag("ts", 1).over(w).as("prev_ts"))
-      .filter(col("prev_ts").isNotNull && col("prev_ts") > col("ts"))
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(min("part_id").as("part_id"),
-        min(struct(col("ts"), col("prev_ts"))).as("p"))
-    val pType = tsBad.schema("p").dataType
-    // narrow phase A+B (see dupViolations — the salt reads no text)
-    val salted = turns
-      .groupBy(
-        col("conv_id"), col("turn_idx"),
-        pmod(xxhash64(col("role"), col("ts")), lit(saltFactor))
-          .as("salt"))
-      .agg(count(lit(1)).as("c"), min("part_id").as("pid"))
-    val dupBad = salted
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(sum("c").as("n"), min("pid").as("part_id"))
-      .filter(col("n") > 1)
-    val badAll = tsBad
-      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("p"),
-        lit(null).cast("long").as("n"), lit("ts").as("__tag"))
-      .unionByName(dupBad
-        .select(col("conv_id"), col("turn_idx"), col("part_id"),
-          lit(null).cast(pType).as("p"), col("n"), lit("dup").as("__tag")))
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .join(badAll, Seq("conv_id", "turn_idx"))
-      .groupBy(col("conv_id"), col("turn_idx"), col("__tag"))
-      .agg(min("part_id").as("part_id"), min("p").as("p"), min("n").as("n"),
-        min("text").as("text"))
-      .select(
-        col("conv_id"), col("turn_idx"), col("part_id"),
-        when(col("__tag") === "ts", lit("TS_ORDER_ts"))
-          .otherwise(lit("DUPLICATE_KEY")).as("rule_id"),
-        when(col("__tag") === "ts", lit("ts"))
-          .otherwise(lit("conv_id,turn_idx")).as("field"),
-        when(col("__tag") === "ts",
-          format_string("Non-monotonic ts in conv %s at turn %d: %s < %s",
-            col("conv_id"), col("turn_idx"),
-            col("p.ts").cast("string"), col("p.prev_ts").cast("string")))
-          .otherwise(format_string(
-            "%d duplicate rows for key (conv_id, turn_idx)=(%s, %d)",
-            col("n"), col("conv_id"), col("turn_idx"))).as("message"),
-        col("text"))
-  }
-
   def allViolations(
       turns: DataFrame,
       conversations: Option[DataFrame] = None,
       checks: Seq[Check] = Checks.transcriptChecks,
-      saltFactor: Int = 16,
       sortOutput: Boolean = true): DataFrame = {
     // When the dim's key set fits the broadcast budget (the
     // orphanViolations stats gate), the referential check rides the SAME
@@ -476,7 +462,7 @@ object Validator {
       } else None
     }
     val base = merged.getOrElse(rowViolations(turns, checks))
-      .unionByName(tsDupViolations(turns, saltFactor))
+      .unionByName(tsDupViolations(turns))
     val all = conversations match {
       case Some(dim) if merged.isEmpty =>
         base.unionByName(orphanViolations(turns, dim))

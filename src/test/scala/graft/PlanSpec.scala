@@ -61,6 +61,24 @@ class PlanSpec extends AnyFunSuite {
       p.contains("partial_sum") || p.contains("Partial"))
   }
 
+  test("merged violations plan: one key window, no salted dedup aggregate") {
+    // read from parquet so the only xxhash64 a plan can hold is the salt
+    val dir = java.nio.file.Files.createTempDirectory("graft_tail").toString
+    turns.write.mode("overwrite").parquet(s"$dir/turns")
+    convs.write.mode("overwrite").parquet(s"$dir/convs")
+    val onDisk = spark.read.parquet(s"$dir/turns")
+    val merged = Validator.allViolations(onDisk,
+      Some(spark.read.parquet(s"$dir/convs")))
+    val windows = merged.queryExecution.sparkPlan.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.size === 1, s"expected one Window in:\n${plan(merged)}")
+    // the standalone face still salts, so the absence below is meaningful
+    assert(plan(Validator.dupViolations(onDisk)).contains("xxhash64"))
+    assert(!plan(merged).contains("xxhash64"),
+      s"salted aggregate in:\n${plan(merged)}")
+  }
+
   test("column pruning reaches the parquet scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
     turns.write.mode("overwrite").parquet(dir)

@@ -133,6 +133,29 @@ class RunnerSpec extends AnyFunSuite {
     assert(m.filter(col("wall_ms") >= 0).count() === 8)
   }
 
+  test("verdicts: one file per part_id directory, validatedParts matches " +
+    "the run's manifest and verdict rows, nothing left persisted") {
+    turns.count(); convs.count() // materialize the cached inputs first
+    // compared as id sets, not sizes: the registry holds its RDDs weakly,
+    // so other suites' cached frames may be collected during the call
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val out = java.nio.file.Files.createTempDirectory("graft_run5").toString
+    val r = Runner.run(spark, turns, Some(convs), out, "runV")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
+    val partDirs = new java.io.File(s"$out/verdicts").listFiles()
+      .filter(_.getName.startsWith("part_id="))
+    assert(partDirs.length === 8)
+    partDirs.foreach { d =>
+      val files = d.listFiles().map(_.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      assert(files.length === 1, s"${d.getName}: ${files.mkString(", ")}")
+    }
+    assert(r.validatedParts === 8)
+    assert(r.manifest.filter(col("run_id") === "runV").count() ===
+      r.validatedParts)
+    assert(r.verdicts.count() === r.validatedParts)
+  }
+
   test("spark-submit Main: sft mode renders deduped conversations as " +
     "parseable JSONL messages") {
     val in = java.nio.file.Files.createTempDirectory("graft_sft_in").toString

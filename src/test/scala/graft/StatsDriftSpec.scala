@@ -130,6 +130,63 @@ class StatsDriftSpec extends AnyFunSuite {
     assert(chi > 0.0)
   }
 
+  /** The cross-join formulation [[Drift.chiSquare]] replaced: restores every
+    * zero cell with a parts × vocab cross join and sums (o − e)²/e over all
+    * cells. Kept here as the reference the shortcut must agree with.
+    */
+  private def referenceChiSquare(
+      df: org.apache.spark.sql.DataFrame, category: String,
+      threshold: Double = 30.0): org.apache.spark.sql.DataFrame = {
+    val counts = df
+      .groupBy(col("part_id"), coalesce(col(category), lit("__null__")).as("cat"))
+      .agg(count(lit(1)).as("o"))
+    val rowTot = counts.groupBy("part_id").agg(sum("o").as("r"))
+    val colTot = counts.groupBy("cat").agg(sum("o").as("c"))
+    val grand = counts.agg(sum("o").as("g"))
+    rowTot
+      .crossJoin(broadcast(colTot))
+      .join(counts, Seq("part_id", "cat"), "left_outer")
+      .crossJoin(broadcast(grand))
+      .withColumn("e", col("r") * col("c") / col("g"))
+      .withColumn("term",
+        pow(coalesce(col("o"), lit(0L)) - col("e"), 2) / col("e"))
+      .groupBy("part_id")
+      .agg(
+        sum("term").as("chi2"),
+        (count(lit(1)) - 1).as("dof"),
+        max("r").as("n"))
+      .withColumn("drifted", col("chi2") > threshold)
+  }
+
+  test("chi-square equals the cross-join reference on zero cells, a null " +
+    "category, one category and one part") {
+    val inputs = Seq(
+      "zero cells" -> Seq((0, "a"), (0, "a"), (0, "b"), (0, "b"), (0, "c"),
+        (1, "a"), (1, "a"), (1, "a"), (1, "a"), (2, "c"), (2, "b")),
+      "null category" -> Seq((0, "a"), (0, null), (0, null), (1, "a"),
+        (1, "b"), (2, null), (2, "b"), (2, "b")),
+      "one category" -> Seq((0, "a"), (0, "a"), (1, "a"), (2, "a")),
+      "one part" -> Seq((4, "a"), (4, "b"), (4, "b"), (4, null)))
+    inputs.foreach { case (name, rows) =>
+      val df = rows.toDF("part_id", "role")
+      val got = Drift.chiSquare(df, "role", threshold = 1.0)
+      val ref = referenceChiSquare(df, "role", threshold = 1.0)
+      assert(got.schema.map(f => f.name -> f.dataType) ===
+        ref.schema.map(f => f.name -> f.dataType), name)
+      def byPart(d: org.apache.spark.sql.DataFrame) = d
+        .as[(Int, Double, Long, Long, Boolean)].collect()
+        .map(r => r._1 -> r).toMap
+      val (g, e) = (byPart(got), byPart(ref))
+      assert(g.keySet === e.keySet, name)
+      e.foreach { case (p, (_, chi2, dof, n, drifted)) =>
+        val (_, gChi2, gDof, gN, gDrifted) = g(p)
+        assert(math.abs(gChi2 - chi2) <= 1e-9 * math.abs(chi2),
+          s"$name part $p: chi2 $gChi2 vs reference $chi2")
+        assert((gDof, gN, gDrifted) === (dof, n, drifted), s"$name part $p")
+      }
+    }
+  }
+
   test("klDivergence: a slice distributed like the corpus scores exactly " +
     "0; a skewed slice scores positive and matches the scalar replica") {
     // slices A and B identical (2:1 over x:y) → every cell's p == q

@@ -225,18 +225,82 @@ class ValidatorSpec extends AnyFunSuite {
       (3L, 3L, "mob", "zzz")))
   }
 
+  /** Hand-built keys the generator never plants: a duplicate pair with a
+    * null turn_idx, rows with a null conv_id, a duplicate key whose copies
+    * differ in part_id and text, and duplicate copies on a hot conversation.
+    * Copies share their ts and inversions sit on single-copy keys, so the
+    * peer order inside the window cannot change any output byte.
+    */
+  private lazy val adversarial = {
+    val t0 = 1767225600000L // 2026-01-01 00:00:00 UTC
+    def row(conv: String, idx: Option[Int], sec: Long, text: String,
+        part: Int) =
+      (conv, idx, "user", text, Option.empty[String],
+        new java.sql.Timestamp(t0 + sec * 1000L), part)
+    val hot = (0 until 400).map(i =>
+      row("hot", Some(i), if (i == 200) 5L else i * 10L, s"h$i", i % 3))
+    val hotCopies = Seq(
+      row("hot", Some(10), 100L, "h10 copy", 5),
+      row("hot", Some(199), 1990L, "h199 copy", 7),
+      row("hot", Some(300), 3000L, "h300 copy", 1),
+      row("hot", Some(300), 3000L, "h300 copy 2", 4))
+    val odd = Seq(
+      row("a", None, 50L, "null idx 1", 0),
+      row("a", None, 50L, "null idx 2", 1),
+      row("a", Some(0), 30L, "a0", 0),
+      row(null, Some(0), 20L, "null conv 0", 0),
+      row(null, Some(1), 10L, "null conv 1", 1),
+      row(null, Some(1), 10L, "null conv 1 copy", 2),
+      row("b", Some(0), 60L, "b0", 3),
+      row("b", Some(1), 70L, "b1 first", 6),
+      row("b", Some(1), 70L, "b1 second", 2),
+      row("b", Some(2), 65L, "b2", 3))
+    (hot ++ hotCopies ++ odd)
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "part_id")
+  }
+
   test("merged ts+dup tail is row-identical to the standalone branch " +
       "functions (the shared text-attach optimization changes the plan, " +
       "never a byte)") {
-    val merged = violations
+    val cols = Seq("conv_id", "turn_idx", "part_id", "rule_id", "field",
+      "message", "text")
+    def tsDup(all: org.apache.spark.sql.DataFrame) = all
       .filter(col("rule_id").isin("TS_ORDER_ts", "DUPLICATE_KEY"))
-      .select("conv_id", "turn_idx", "part_id", "rule_id", "field",
-        "message", "text")
-    val branches = Validator.tsOrderViolations(turns)
-      .unionByName(Validator.dupViolations(turns))
-      .select("conv_id", "turn_idx", "part_id", "rule_id", "field",
-        "message", "text")
-    assert(merged.exceptAll(branches).isEmpty &&
-      branches.exceptAll(merged).isEmpty)
+      .select(cols.map(col): _*)
+    def branches(t: org.apache.spark.sql.DataFrame) =
+      Validator.tsOrderViolations(t)
+        .unionByName(Validator.dupViolations(t))
+        .select(cols.map(col): _*)
+    val advMerged = tsDup(Validator.allViolations(adversarial))
+    Seq("generated" -> (tsDup(violations), branches(turns)),
+      "adversarial" -> (advMerged, branches(adversarial)))
+      .foreach { case (name, (merged, expected)) =>
+        assert(merged.exceptAll(expected).isEmpty &&
+          expected.exceptAll(merged).isEmpty, s"$name input")
+      }
+    // pins today's null-key behaviour: rows with a null conv_id or
+    // turn_idx are dropped at the text-attach join, and (a, 0) is flagged
+    // because the null-index rows sort before it in the window
+    val got = advMerged
+      .select("conv_id", "turn_idx", "part_id", "rule_id", "message", "text")
+      .as[(String, Int, Int, String, String, String)].collect().toSet
+    assert(got === Set(
+      ("hot", 10, 1, "DUPLICATE_KEY",
+        "2 duplicate rows for key (conv_id, turn_idx)=(hot, 10)", "h10"),
+      ("hot", 199, 1, "DUPLICATE_KEY",
+        "2 duplicate rows for key (conv_id, turn_idx)=(hot, 199)", "h199"),
+      ("hot", 200, 2, "TS_ORDER_ts",
+        "Non-monotonic ts in conv hot at turn 200: " +
+          "2026-01-01 00:00:05 < 2026-01-01 00:33:10", "h200"),
+      ("hot", 300, 0, "DUPLICATE_KEY",
+        "3 duplicate rows for key (conv_id, turn_idx)=(hot, 300)", "h300"),
+      ("a", 0, 0, "TS_ORDER_ts",
+        "Non-monotonic ts in conv a at turn 0: " +
+          "2026-01-01 00:00:30 < 2026-01-01 00:00:50", "a0"),
+      ("b", 1, 2, "DUPLICATE_KEY",
+        "2 duplicate rows for key (conv_id, turn_idx)=(b, 1)", "b1 first"),
+      ("b", 2, 3, "TS_ORDER_ts",
+        "Non-monotonic ts in conv b at turn 2: " +
+          "2026-01-01 00:01:05 < 2026-01-01 00:01:10", "b2")))
   }
 }
