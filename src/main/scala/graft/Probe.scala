@@ -3,20 +3,22 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.checks.Checks
-import graft.engine.Validator
-import graft.sources.TranscriptGen
-
-/** Ad-hoc stage profiler for the validation pipeline (not part of the driver
-  * contract). Times isolated variants to attribute costs.
+/** Ad-hoc profiler for [[SparkEntry.queries]] entries, in a session with
+  * [[Bench]]'s conf so an entry is priced as the bench prices it.
+  * Layer-by-layer timings of the validate job come from perfbench's traced
+  * `audit` run instead.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        (16L << 20).toString)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.files.maxPartitionBytes", (32L << 20).toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -125,34 +127,6 @@ object Probe {
       return
     }
 
-    // mode: `Probe runner <tPath> <cPath>` — phase attribution for the
-    // headline validate job: pipeline compute (noop), violations write,
-    // verdicts derive+write, per sink.
-    if (args.headOption.contains("runner")) {
-      val turns = spark.read.parquet(args(1))
-      val convs = spark.read.parquet(args(2))
-      (1 to 2).foreach { rep =>
-        val outDir = java.nio.file.Files
-          .createTempDirectory(s"probe_runner$rep").toString
-        time(s"rep$rep allViolations noop")(noop(
-          Validator.allViolations(turns, Some(convs), sortOutput = false)))
-        time(s"rep$rep violations write")(
-          Validator.allViolations(turns, Some(convs), sortOutput = false)
-            .repartition(col("part_id"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite").partitionBy("part_id")
-            .parquet(s"$outDir/violations"))
-        val written = spark.read.parquet(s"$outDir/violations")
-        time(s"rep$rep verdicts noop")(noop(Validator.verdicts(turns, written)))
-        time(s"rep$rep verdicts write")(
-          Validator.verdicts(turns, written).coalesce(1)
-            .write.mode("overwrite").partitionBy("part_id")
-            .parquet(s"$outDir/verdicts"))
-      }
-      spark.stop()
-      return
-    }
-
     // mode: `Probe control` — the zero-engine-code host-ceiling control the
     // BASELINE.md scaling sections cite: marginal pure-codegen work (a
     // 12e9-row aggregate minus a 3e9-row one cancels session/JIT startup),
@@ -172,68 +146,8 @@ object Probe {
       return
     }
 
-    val tPath = args.headOption.getOrElse("/tmp/graft_bench/transcripts_n8000000")
-    val turns = spark.read.parquet(tPath)
-
-    val checks = Checks.transcriptChecks
-
-    time("scan all cols")(noop(turns))
-    // pure predicate cost, no array/struct/explode
-    time("predicates only")(noop(turns.select(
-      checks.map(c => coalesce(c.violated, lit(false)).cast("int"))
-        .reduce(_ + _).as("nv"))))
-    // predicates + guard + array build + HOF filter + explode (current impl)
-    time("rowViolations current")(noop(Validator.rowViolations(turns)))
-    // variant: explode all entries then relational filter (no HOF)
-    val structsAll = array(checks.map(c =>
-      when(c.violated, struct(lit(c.ruleId).as("rule_id"),
-        lit(c.field).as("field"), c.message.as("message")))): _*)
-    val anyV = checks.map(c => coalesce(c.violated, lit(false))).reduce(_ || _)
-    time("rowViolations explode+where")(noop(
-      turns
-        .where(anyV)
-        .select(col("conv_id"), col("turn_idx"), col("part_id"), col("text"),
-          explode(structsAll).as("v"))
-        .where(col("v").isNotNull)
-        .select(col("conv_id"), col("turn_idx"), col("part_id"),
-          col("v.rule_id"), col("v.field"), col("v.message"), col("text"))))
-    // variant: union of per-check filtered scans
-    time("rowViolations union-scans")(noop(
-      checks.map { c =>
-        turns.where(c.violated).select(
-          col("conv_id"), col("turn_idx"), col("part_id"),
-          lit(c.ruleId).as("rule_id"), lit(c.field).as("field"),
-          c.message.as("message"), col("text"))
-      }.reduce(_ unionByName _)))
-    // variant: shuffle only xxhash64(conv_id, turn_idx) — 8-byte keys both
-    // phases; candidate hashes re-verified exactly (and text attached) at
-    // the rare join-back, so 64-bit collisions cannot emit false duplicates
-    def dupHashed(): DataFrame = {
-      val kh = xxhash64(col("conv_id"), col("turn_idx"))
-      val salted = turns
-        .groupBy(kh.as("kh"),
-          pmod(xxhash64(col("role"), col("text"), col("ts")), lit(16))
-            .as("salt"))
-        .agg(count(lit(1)).as("c"))
-      val candidates = salted
-        .groupBy("kh").agg(sum("c").as("n")).filter(col("n") > 1)
-        .select("kh")
-      turns
-        .select(col("conv_id"), col("turn_idx"), col("part_id"), col("text"),
-          kh.as("kh"))
-        .join(candidates, Seq("kh"))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("n"), min("text").as("text"),
-          min("part_id").as("part_id"))
-        .filter(col("n") > 1)
-    }
-    // alternate the variants: host speed drifts run to run, so only
-    // same-round adjacency is comparable
-    (1 to 3).foreach { r =>
-      time(s"dup current   r$r")(noop(Validator.dupViolations(turns)))
-      time(s"dup hashed    r$r")(noop(dupHashed()))
-    }
-    time("tsOrder")(noop(Validator.tsOrderViolations(turns)))
     spark.stop()
+    throw new IllegalArgumentException(
+      "usage: Probe q|jq|qtime|plans|control <args...>")
   }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,9 +125,10 @@ object Validator {
 
   /** `rule_id`, `field` and `message` of a TS_ORDER_ts violation, from the
     * key and its first violating pair `p = (ts, prev_ts)`. Shared by every
-    * ts-order face so their bytes cannot drift apart.
+    * ts-order face, the streaming one included, so their bytes cannot
+    * drift apart.
     */
-  private def tsOrderRule: Seq[Column] = Seq(
+  private[graft] def tsOrderRule: Seq[Column] = Seq(
     lit("TS_ORDER_ts").as("rule_id"),
     lit("ts").as("field"),
     format_string("Non-monotonic ts in conv %s at turn %d: %s < %s",
@@ -188,30 +189,43 @@ object Validator {
         dupKeyRule :+ col("text"): _*)
   }
 
+  /** ORPHAN_CONV as a compiled row check over the `__dim` marker of a
+    * left join against the dim's keys (null marker: no dim row).
+    */
+  private val orphanCheck: Check = new Check {
+    val ruleId = "ORPHAN_CONV"
+    val field = "conv_id"
+    def violated: Column = col("__dim").isNull
+    def message: Column =
+      format_string("Dangling conv_id reference: %s", col("conv_id"))
+  }
+
+  /** The referential checks' stats gate: hint `df` for broadcast when its
+    * optimizer-estimated size fits `budget`, else leave the strategy to the
+    * planner (SMJ/shuffled-hash, SURVEY.md §2.4).
+    */
+  private def broadcastIfFits(df: DataFrame, budget: Long = 64L << 20): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget) broadcast(df)
+    else df
+
   /** Referential integrity of `conv_id` against the conversations dim — the
     * engine surfaces what the reference silently drops (dangling `@id` refs,
-    * `models.py:246`). Join strategy chosen from table stats: broadcast the
-    * dim when its optimizer-estimated size fits under the threshold, else let
-    * the planner pick SMJ/shuffled-hash (SURVEY.md §2.4).
+    * `models.py:246`). A standalone anti-join, the reference the merged
+    * check in [[allViolations]] is compared against; same rule and message.
     */
   def orphanViolations(
       turns: DataFrame,
       conversations: DataFrame,
-      broadcastThresholdBytes: Long = 64L << 20): DataFrame = {
-    val dimKeys = conversations.select("conv_id")
-    val dimSize = dimKeys.queryExecution.optimizedPlan.stats.sizeInBytes
-    val dim =
-      if (dimSize <= broadcastThresholdBytes) broadcast(dimKeys) else dimKeys
+      broadcastThresholdBytes: Long = 64L << 20): DataFrame =
     turns
-      .join(dim, Seq("conv_id"), "left_anti")
+      .join(broadcastIfFits(conversations.select("conv_id"),
+        broadcastThresholdBytes), Seq("conv_id"), "left_anti")
       .select(
         col("conv_id"), col("turn_idx"), col("part_id"),
-        lit("ORPHAN_CONV").as("rule_id"),
-        lit("conv_id").as("field"),
-        format_string("Dangling conv_id reference: %s", col("conv_id"))
-          .as("message"),
+        lit(orphanCheck.ruleId).as("rule_id"),
+        lit(orphanCheck.field).as("field"),
+        orphanCheck.message.as("message"),
         col("text"))
-  }
 
   /** Cross-table temporal consistency — the referential check's TIME
     * axis: a child row whose event time precedes its parent's creation
@@ -222,9 +236,8 @@ object Validator {
     *
     * Scale shape = [[orphanViolations]]: the parent side reduces to
     * (key, ts) in its scan projection and the join strategy is driven by
-    * the optimizer's size stats (broadcast under the threshold, SMJ
-    * above); the child's payload columns never widen the join — only
-    * `idCols` and the timestamp ride it.
+    * the same stats gate; the child's payload columns never widen the
+    * join — only `idCols` and the timestamp ride it.
     *
     * A duplicate-keyed parent (the corruption the DUPLICATE_KEY check
     * hunts) is pre-aggregated to its EARLIEST timestamp, so each offending
@@ -239,19 +252,15 @@ object Validator {
       parentTsCol: String,
       idCols: Seq[String],
       ruleId: String = "TS_BEFORE_PARENT",
-      parentKeyCol: Option[String] = None,
-      broadcastThresholdBytes: Long = 64L << 20): DataFrame = {
+      parentKeyCol: Option[String] = None): DataFrame = {
     val dim = parent
       .select(col(parentKeyCol.getOrElse(keyCol)).as(keyCol),
         col(parentTsCol).as("__pts"))
       .groupBy(keyCol).agg(min("__pts").as("__pts"))
-    val dimSize = dim.queryExecution.optimizedPlan.stats.sizeInBytes
-    val dimHinted =
-      if (dimSize <= broadcastThresholdBytes) broadcast(dim) else dim
     child
       .select((keyCol +: idCols).distinct.map(col) :+
         col(childTsCol).as("__cts"): _*)
-      .join(dimHinted, Seq(keyCol))
+      .join(broadcastIfFits(dim), Seq(keyCol))
       .filter(col("__cts") < col("__pts"))
       .select((keyCol +: idCols).distinct.map(col) ++ Seq(
         lit(ruleId).as("rule_id"),
@@ -362,23 +371,6 @@ object Validator {
     }
   }
 
-  /** Soft checks — the engine's deterministic stand-in for the reference's
-    * warning channel (URL reachability, `verification.py:152-173`, is
-    * network I/O and excluded; the issue/warning two-channel split is kept).
-    */
-  def warnings(turns: DataFrame): DataFrame = {
-    turns
-      .filter(col("text").isNotNull && length(col("text")) > 1000 &&
-        length(col("text")) <= 2000)
-      .select(
-        col("conv_id"), col("turn_idx"), col("part_id"),
-        lit("SOFT_LENGTH_text").as("rule_id"),
-        lit("text").as("field"),
-        concat(lit("Long text (soft cap 1000): length "),
-          length(col("text")).cast("string")).as("message"),
-        col("text"))
-  }
-
   /** Merged tail of [[tsOrderViolations]] + [[dupViolations]] for
     * [[allViolations]], row-identical to them (asserted in ValidatorSpec).
     * Duplicate keys are peers in the ts-order window's key order, so a
@@ -435,39 +427,22 @@ object Validator {
       conversations: Option[DataFrame] = None,
       checks: Seq[Check] = Checks.transcriptChecks,
       sortOutput: Boolean = true): DataFrame = {
-    // When the dim's key set fits the broadcast budget (the
-    // orphanViolations stats gate), the referential check rides the SAME
-    // scan as the row checks: one broadcast left-join marks dim presence
-    // and ORPHAN_CONV becomes one more compiled rule in the row-check
-    // explode — removing the orphan branch's separate full-width text scan
-    // per validate run (guide §1.2). The dim keys are deduped first so the
-    // 1:1 join can never duplicate turn rows (a left_anti is insensitive
-    // to dim duplicates; the marker join must be made so). Over-budget
-    // dims keep the standalone anti-join branch unchanged.
-    val merged = conversations.flatMap { dim =>
-      val dimKeys = dim.select("conv_id").distinct()
-      val dimSize = dimKeys.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (dimSize <= (64L << 20)) {
-        val orphanCheck: Check = new Check {
-          val ruleId = "ORPHAN_CONV"
-          val field = "conv_id"
-          def violated: Column = col("__dim").isNull
-          def message: Column =
-            format_string("Dangling conv_id reference: %s", col("conv_id"))
-        }
-        val joined = turns.join(
-          broadcast(dimKeys.withColumn("__dim", lit(1))),
-          Seq("conv_id"), "left")
-        Some(rowViolations(joined, checks :+ orphanCheck))
-      } else None
+    // The referential check rides the SAME scan as the row checks: a
+    // left join marks dim presence and ORPHAN_CONV is one more compiled
+    // rule in the row-check explode (guide §1.2). The join broadcasts when
+    // the dim's key set passes the stats gate, else it is a plain join.
+    // The dim keys are deduped first so the join can never duplicate turn
+    // rows (a left_anti is insensitive to dim duplicates; the marker join
+    // must be made so).
+    val rows = conversations match {
+      case Some(dim) =>
+        val marked = broadcastIfFits(dim.select("conv_id").distinct())
+          .withColumn("__dim", lit(1))
+        rowViolations(turns.join(marked, Seq("conv_id"), "left"),
+          checks :+ orphanCheck)
+      case None => rowViolations(turns, checks)
     }
-    val base = merged.getOrElse(rowViolations(turns, checks))
-      .unionByName(tsDupViolations(turns))
-    val all = conversations match {
-      case Some(dim) if merged.isEmpty =>
-        base.unionByName(orphanViolations(turns, dim))
-      case _ => base
-    }
+    val all = rows.unionByName(tsDupViolations(turns))
     // sortOutput=false lets a sink that repartitions by part_id apply the
     // stable ordering once, after its exchange, instead of sorting twice.
     if (sortOutput) all.sortWithinPartitions("conv_id", "turn_idx") else all
@@ -476,6 +451,9 @@ object Validator {
   /** Per-partition verdicts (reference `as_dict`, `verification.py:239-245`):
     * status "valid" iff zero issues; warnings counted separately and never
     * flip the verdict (reference: warnings don't enter `self.issues`).
+    * The one soft check, a text length in (1000, 2000], is the engine's
+    * deterministic stand-in for the reference's warning channel (URL
+    * reachability, `verification.py:152-173`, is network I/O and excluded).
     */
   def verdicts(
       turns: DataFrame,

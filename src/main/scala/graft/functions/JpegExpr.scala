@@ -184,13 +184,6 @@ object JpegDecode {
     try decode(bytes, histBins, maxPixels)
     catch { case _: Exception => null }
 
-  /** Test/diagnosis variant: corrupt input throws instead of nulling, so a
-    * spec can see WHERE an expected-decodable blob fell out of envelope.
-    */
-  private[graft] def statsStrict(
-      bytes: Array[Byte], histBins: Int, maxPixels: Int): InternalRow =
-    decode(bytes, histBins, maxPixels)
-
   // one frame component: id, sampling factors, quant table id, and (after
   // SOS) huffman table ids + its decoded plane
   private final class Comp(val id: Int, val h: Int, val v: Int, val tq: Int) {

@@ -16,13 +16,6 @@ object TextOps {
     when(c.isNull || length(trim(c)) === 0, lit(0))
       .otherwise(size(split(trim(c), "\\s+")))
 
-  /** Occurrences of `needle` in `c` via the length-difference trick — the
-    * only portable pure-SQL substring counter (no regexp dialect issues).
-    */
-  def countOccurrences(c: Column, needle: String): Column =
-    ((length(c) - length(replace(c, lit(needle), lit("")))) / needle.length)
-      .cast("long")
-
   /** Stopword-set language-ID heuristic: tokenize ONCE ([^a-z]+ split over
     * lowered text), then score per language = number of DISTINCT stopwords
     * present (`array_intersect` against each 4-word set — codegen'd, no HOF

@@ -184,12 +184,6 @@ object TranscriptGen {
           .as("created_ts"))
   }
 
-  /** Closed tool vocabulary dim (FIXTURES.md §A2). */
-  def toolCatalog(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    tools.toDF("tool")
-  }
-
   /** Tool-call payload table for `role = 'tool'` turns: (conv_id, turn_idx,
     * tool, args) with per-tool JSON args and planted schema violations at
     * ~8/11 of rows clean (m = xxhash64(seed,"argm",conv_id,turn_idx) mod 11

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.checks.{Check, Checks}
+import graft.engine.Validator
 
 /** Typed rows for the stateful streaming path. */
 final case class StreamTurn(
@@ -14,26 +15,16 @@ final case class StreamTurn(
 /** Per-conversation order state carried across micro-batches. */
 final case class ConvOrderState(lastTurnIdx: Int, lastTsMicros: Long)
 
-/** Cross-batch violation row (same shape/message as the batch validator). */
-final case class StreamOrderViolation(
-    conv_id: String, turn_idx: Int, part_id: Int, rule_id: String,
-    field: String, message: String, text: String)
-
-/** Per-conversation grammar state carried across micro-batches. */
-final case class ConvGrammarState(lastTurnIdx: Int, lastRole: String)
-
-/** Cross-batch transition-grammar violation row (same shape as the batch
-  * `Grammar.transitionViolations` output).
+/** A turn whose ts precedes its predecessor's, which may have arrived in an
+  * earlier micro-batch (`prev_ts_micros` is the carried state's ts).
   */
-final case class StreamGrammarViolation(
-    conv_id: String, turn_idx: Int, part_id: Int, prev_state: String,
-    state: String, rule: String)
+final case class StreamTsInversion(
+    conv_id: String, turn_idx: Int, part_id: Int, text: String,
+    ts: java.sql.Timestamp, prev_ts_micros: Long)
 
-/** Streaming validation: the identical constraint catalog applied to a
+/** Streaming validation: the batch [[Validator]]'s rules over a
   * `readStream` of transcript appends (SURVEY.md §2.10 stance — the batch
-  * `Column` predicates transfer unchanged; no stateful ops are required by
-  * the reference semantics, so violations are a stateless map and verdicts
-  * are a watermarked windowed aggregate).
+  * `Column` predicates and messages transfer unchanged).
   *
   * Usage:
   * {{{
@@ -48,178 +39,13 @@ final case class StreamGrammarViolation(
   */
 object StreamValidator {
 
-  /** Stateless per-row violation stream — same codegen'd projection as the
-    * batch path (`Validator.rowViolations`), safe in append mode.
+  /** Stateless per-row violation stream: [[Validator.rowViolations]]
+    * itself, safe in append mode; stream and batch sinks share one schema.
     */
   def violations(
       stream: DataFrame,
       checks: Seq[Check] = Checks.transcriptChecks): DataFrame =
-    stream
-      .select(
-        col("conv_id"), col("turn_idx"), col("part_id"), col("text"),
-        col("ts"),
-        explode(Checks.violationsArray(checks)).as("v"))
-      .select(
-        col("conv_id"), col("turn_idx"), col("part_id"),
-        col("v.rule_id").as("rule_id"),
-        col("v.field").as("field"),
-        col("v.message").as("message"),
-        col("text"), col("ts"))
-
-  /** Windowed verdict stream: per (event-time window × part_id) violation
-    * counts with a watermark bounding state. Append-mode compatible.
-    */
-  def windowedVerdicts(
-      stream: DataFrame,
-      window_ : String = "10 minutes",
-      watermark: String = "30 minutes",
-      checks: Seq[Check] = Checks.transcriptChecks): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("part_id"),
-        size(Checks.violationsArray(checks)).as("n_viol"))
-      .groupBy(window(col("ts"), window_), col("part_id"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("n_viol")).as("n_violations"))
-      .select(
-        col("window.start").as("window_start"),
-        col("part_id"),
-        col("n_rows"),
-        col("n_violations"),
-        when(col("n_violations") === 0, lit("valid")).otherwise(lit("invalid"))
-          .as("status"))
-
-  /** Windowed distribution-drift stream — the chi-square drift check's
-    * streaming face. Batch drift compares partitions against the pooled
-    * whole-table distribution; a stream has no "whole table", so the
-    * comparison target is an explicit REFERENCE distribution (the batch
-    * profile of accepted data — exactly how production drift monitors work).
-    *
-    * Single stateful aggregation (append-safe, no chained stateful ops):
-    * per-category counts are conditional sums inside one windowed `agg` —
-    * categories are a small fixed enum (roles), so the row stays narrow.
-    * Chi-square against expected `n·p_cat` is then pure Column math on the
-    * aggregate output, identical in spirit to `engine/Drift`. Categories
-    * outside `refProps` pool into an `__other__` cell with the leftover
-    * reference mass (floored at 1e-6 to keep the division ANSI-safe).
-    *
-    * The per-category count columns are named by POSITION (`n_0`, `n_1`, …
-    * over the sorted category list), never by embedding the category text in
-    * an identifier — a category containing a dot, space, or backtick would
-    * break column resolution (or collide). Requires an event-time `ts`
-    * timestamp column on `stream`, like the sibling stream ops.
-    */
-  def windowedDrift(
-      stream: DataFrame,
-      categoryCol: String,
-      refProps: Map[String, Double],
-      window_ : String = "10 minutes",
-      watermark: String = "30 minutes",
-      chi2Threshold: Double = 50.0): DataFrame = {
-    require(refProps.nonEmpty && refProps.values.forall(p => p > 0 && p < 1),
-      "refProps: category -> expected proportion in (0,1)")
-    val cats = refProps.keys.toSeq.sorted
-    val counts = cats.zipWithIndex.map { case (c, i) =>
-      sum(when(col(categoryCol) === c, 1L).otherwise(0L)).as(s"n_$i")
-    }
-    val agged = stream
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_))
-      .agg(count(lit(1)).as("n"), counts: _*)
-    val otherP = math.max(1.0 - refProps.values.sum, 1e-6)
-    val otherN = col("n") - cats.indices.map(i => col(s"n_$i")).reduce(_ + _)
-    def cell(obs: org.apache.spark.sql.Column, p: Double) = {
-      val exp = col("n").cast("double") * p
-      (obs.cast("double") - exp) * (obs.cast("double") - exp) / exp
-    }
-    val chi2 = cats.zipWithIndex.map { case (c, i) => cell(col(s"n_$i"), refProps(c)) }
-      .reduce(_ + _) + cell(otherN, otherP)
-    agged.select(
-      col("window.start").as("window_start"),
-      col("n"),
-      round(chi2, 4).as("chi2"),
-      (chi2 > chi2Threshold).as("drifted"))
-  }
-
-  /** Event-time sessionization — the q28 batch operator's streaming face,
-    * on Spark's NATIVE `session_window` (gap-based, state merges sessions
-    * whose rows arrive in different micro-batches; watermark closes and
-    * emits a session once event time passes its end + gap). Emits one row
-    * per closed (conv_id, session): start/end, turn count, turn_idx span.
-    *
-    * Append-mode compatible (sessions emit on close, exactly once); state
-    * is bounded by OPEN sessions inside the watermark horizon — at any
-    * corpus scale that is the live-conversation working set, not history.
-    */
-  def sessions(
-      stream: DataFrame,
-      gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .groupBy(col("conv_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_turns"),
-        min("turn_idx").as("first_turn"), max("turn_idx").as("last_turn"))
-      .select(col("conv_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_turns"), col("first_turn"), col("last_turn"))
-
-  /** Streaming uniqueness — the DUPLICATE_KEY check's streaming face:
-    * first-writer-wins dedup on (conv_id, turn_idx) with watermark-bounded
-    * state (`dropDuplicatesWithinWatermark`: a duplicate arriving within the
-    * watermark window of its first occurrence is dropped; state for keys
-    * older than the watermark is evicted, so state size is bounded by keys
-    * in the watermark window, not the whole history).
-    */
-  def dedupKeys(
-      stream: DataFrame,
-      watermark: String = "30 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
-
-  /** Streaming incremental ingest dedup — [[graft.ops.Dedup.incrementalNew]]'s
-    * streaming face: an arriving turn/document drops when its md5 content
-    * hash exists in the STATIC historical store (stream-static left_anti
-    * join, re-planned per micro-batch; the store carries hashes only,
-    * never text — TBs vs 100s of TBs at 10^12 docs), then exact-dedups
-    * WITHIN the stream via `dropDuplicatesWithinWatermark` on the same
-    * hash. State is bounded by content hashes inside the watermark window
-    * — deduping against deep history is the store's job, not state's.
-    *
-    * @param historyHashes static frame with one `h` (md5 hex) column
-    */
-  def incrementalNew(
-      stream: DataFrame,
-      historyHashes: DataFrame,
-      textCol: String,
-      watermark: String = "30 minutes"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .withColumn("__h",
-        md5(coalesce(col(textCol).cast("string"), lit(""))))
-      .join(historyHashes.select(col("h").as("__h")), Seq("__h"), "left_anti")
-      .dropDuplicatesWithinWatermark("__h")
-      .drop("__h")
-
-  /** Spark-style UTC timestamp rendering (what `cast(ts as string)` emits):
-    * no fraction for whole seconds, trailing zeros trimmed otherwise — keeps
-    * the stateful path's messages byte-identical to the batch validator's
-    * `format_string(..., col("ts").cast("string"))`.
-    */
-  private def fmtTs(micros: Long): String = {
-    val ldt = java.time.LocalDateTime.ofEpochSecond(
-      Math.floorDiv(micros, 1000000L),
-      (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-      java.time.ZoneOffset.UTC)
-    val base = ldt.format(
-      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-    val frac = Math.floorMod(micros, 1000000L)
-    if (frac == 0) base
-    else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
-  }
+    Validator.rowViolations(stream, checks)
 
   private def tsMicros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
@@ -236,85 +62,17 @@ object StreamValidator {
     *    per live conversation, not the turns themselves;
     *  - event-time timeout evicts conversations `stateGapMs` past the
     *    watermark, bounding total state at (live convs in the gap window);
-    *  - messages byte-match the batch validator (spec-asserted).
+    *  - the state function emits only the violating pair; `rule_id`,
+    *    `field` and `message` are the batch validator's own columns, so
+    *    the bytes match it in every session time zone (spec-asserted).
     *
     * In-batch ordering is (turn_idx, ts) — same key-level semantics as the
     * batch window variant for unique keys.
     */
-  /** Scala twins of `Grammar.roleRules` with SQL null semantics (a null
-    * role never fires a rule, matching the Column comparisons' null
-    * propagation); batch/stream row parity is StreamingSpec-asserted.
-    */
-  private val roleRulesScala: Seq[(String, (String, String) => Boolean)] = Seq(
-    ("FIRST_ROLE", (prev, cur) =>
-      prev == null && cur != null && cur != "system" && cur != "user"),
-    ("SYSTEM_RESTART", (prev, cur) => prev != null && cur == "system"),
-    ("TOOL_CONTEXT", (prev, cur) =>
-      cur == "tool" && (prev == null || (prev != "assistant" && prev != "tool"))),
-    ("USER_ECHO", (prev, cur) => prev == "user" && cur == "user"))
-
-  /** STATEFUL cross-batch role grammar — `Grammar.transitionViolations`'
-    * streaming face: a conversation's turns arrive across micro-batches,
-    * and "may this role follow the previous turn's role" needs the previous
-    * batch's last (turn_idx, role) per conversation. Same state discipline
-    * as [[statefulTsOrder]]: ~16 bytes per live conversation (never the
-    * turns), event-time timeout eviction, in-batch ordering by (turn_idx,
-    * ts). Emits the same rows as the batch operator run over the
-    * accumulated turns, provided arrival respects turn order across batches
-    * (the append-log contract; StreamingSpec asserts the parity).
-    */
-  def statefulRoleGrammar(
-      stream: DataFrame,
-      watermark: String = "30 minutes",
-      stateGapMs: Long = 60L * 60 * 1000): Dataset[StreamGrammarViolation] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream
-      .withWatermark("ts", watermark)
-      .select(col("conv_id"), col("turn_idx"), col("part_id"),
-        col("role").as("text"), col("ts"))
-      .as[StreamTurn]
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvGrammarState, StreamGrammarViolation](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (convId: String, rows: Iterator[StreamTurn],
-         state: GroupState[ConvGrammarState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val turns = rows.toArray.sortBy(t => (t.turn_idx, tsMicros(t.ts)))
-            if (turns.isEmpty) Iterator.empty
-            else {
-              var prev = state.getOption.map(_.lastRole).orNull
-              var first = state.getOption.isEmpty
-              val out =
-                scala.collection.mutable.ArrayBuffer[StreamGrammarViolation]()
-              turns.foreach { t =>
-                val cur = t.text // role rides the narrow text slot
-                val p = if (first) null else prev
-                roleRulesScala.foreach { case (name, fires) =>
-                  if (fires(p, cur))
-                    out += StreamGrammarViolation(
-                      t.conv_id, t.turn_idx, t.part_id, p, cur, name)
-                }
-                prev = cur
-                first = false
-              }
-              state.update(ConvGrammarState(turns.last.turn_idx, prev))
-              val maxEventMs = turns.map(_.ts.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxEventMs) + stateGapMs)
-              out.iterator
-            }
-          }
-      }
-  }
-
   def statefulTsOrder(
       stream: DataFrame,
       watermark: String = "30 minutes",
-      stateGapMs: Long = 60L * 60 * 1000): Dataset[StreamOrderViolation] = {
+      stateGapMs: Long = 60L * 60 * 1000): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
     stream
@@ -323,7 +81,7 @@ object StreamValidator {
         col("ts"))
       .as[StreamTurn]
       .groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvOrderState, StreamOrderViolation](
+      .flatMapGroupsWithState[ConvOrderState, StreamTsInversion](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (convId: String, rows: Iterator[StreamTurn],
          state: GroupState[ConvOrderState]) =>
@@ -337,15 +95,12 @@ object StreamValidator {
               var lastTs =
                 state.getOption.map(_.lastTsMicros).getOrElse(Long.MinValue)
               val out =
-                scala.collection.mutable.ArrayBuffer[StreamOrderViolation]()
+                scala.collection.mutable.ArrayBuffer[StreamTsInversion]()
               turns.foreach { t =>
                 val m = tsMicros(t.ts)
                 if (lastTs != Long.MinValue && lastTs > m)
-                  out += StreamOrderViolation(
-                    t.conv_id, t.turn_idx, t.part_id, "TS_ORDER_ts", "ts",
-                    s"Non-monotonic ts in conv ${t.conv_id} at turn " +
-                      s"${t.turn_idx}: ${fmtTs(m)} < ${fmtTs(lastTs)}",
-                    t.text)
+                  out += StreamTsInversion(
+                    t.conv_id, t.turn_idx, t.part_id, t.text, t.ts, lastTs)
                 lastTs = m
               }
               state.update(ConvOrderState(turns.last.turn_idx, lastTs))
@@ -356,5 +111,10 @@ object StreamValidator {
             }
           }
       }
+      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("text"),
+        struct(col("ts"), timestamp_micros(col("prev_ts_micros")).as("prev_ts"))
+          .as("p"))
+      .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
+        Validator.tsOrderRule :+ col("text"): _*)
   }
 }

@@ -18,7 +18,7 @@ class IngestAuditSpec extends AnyFunSuite {
     StructField("score", DoubleType)))
 
   private def writeJsonl(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl")
+    val dir = SparkTestSession.tempDir("graft_jsonl")
     java.nio.file.Files.writeString(dir.resolve("part-0.jsonl"),
       lines.mkString("\n"))
     dir.toString

@@ -17,7 +17,7 @@ class IngestMergeSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("text ingest: stable (priority, path) order, budget truncation") {
-    val dir = Files.createTempDirectory("graft_ingest")
+    val dir = SparkTestSession.tempDir("graft_ingest")
     def w(name: String, content: String): Unit =
       Files.writeString(dir.resolve(name), content)
     w("zeta.md", "DOC_Z")   // docs first (priority 0), path-ordered
@@ -91,10 +91,10 @@ class IngestMergeSpec extends AnyFunSuite {
   }
 
   test("combined text write + null-dropping JSON form") {
-    val dir = Files.createTempDirectory("graft_wt")
+    val dir = SparkTestSession.tempDir("graft_wt")
     Files.writeString(dir.resolve("a.md"), "HELLO")
     val combined = TextIngest.combine(TextIngest.readFiles(spark, dir.toString))
-    val out = Files.createTempDirectory("graft_wt_out").toString + "/txt"
+    val out = SparkTestSession.tempDir("graft_wt_out").toString + "/txt"
     TextIngest.writeText(combined, out)
     assert(spark.read.text(out).as[String].collect().mkString === "HELLO")
     val js = Seq((1, null: String, "x")).toDF("a", "b", "c")

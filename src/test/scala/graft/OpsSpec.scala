@@ -362,7 +362,7 @@ class OpsSpec extends AnyFunSuite {
     val pngBad = b(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A,
       0x00, 0x00, 0x00, 0x0D) ++ "IHDR".getBytes ++
       b(0xFF, 0xFF, 0xFF, 0xFF, 0x00, 0x00, 0x01, 0xE0, 0x08, 0x02)
-    val dir = java.nio.file.Files.createTempDirectory("mm_hdr").toString
+    val dir = SparkTestSession.tempDir("mm_hdr").toString
     Seq((1, png), (2, gif), (3, jpeg), (4, junk), (5, bmp), (6, bmpBad),
       (7, pngBad))
       .toDF("id", "media")
@@ -401,7 +401,7 @@ class OpsSpec extends AnyFunSuite {
     val bmpHuge = b(0x42, 0x4D, 0x46, 0, 0, 0, 0, 0, 0, 0, 0x36, 0, 0, 0,
       0x28, 0, 0, 0, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF,
       1, 0, 24, 0, 0, 0, 0, 0)
-    val dir = java.nio.file.Files.createTempDirectory("mm_pix").toString
+    val dir = SparkTestSession.tempDir("mm_pix").toString
     Seq((1, bmp), (2, ppm), (3, pgm), (4, junk), (5, trunc),
       (6, adversarial), (7, bmpHuge))
       .toDF("id", "media").write.mode("overwrite").parquet(dir)
@@ -527,7 +527,7 @@ class OpsSpec extends AnyFunSuite {
       .map(_.toByte) ++
       chunk("IHDR", be32(0xFFFFFFFFL) ++ be32(0xFFFFFFFFL) ++ b(8, 2, 0, 0, 0)) ++
       chunk("IDAT", b(0x78, 0x01, 1, 2, 3)) ++ chunk("IEND", Array[Byte]())
-    val dir = java.nio.file.Files.createTempDirectory("mm_png").toString
+    val dir = SparkTestSession.tempDir("mm_png").toString
     Seq((1, rgb), (2, rgba), (3, gray), (4, split), (5, interlaced),
       (6, deep), (7, truncated), (8, badFilter), (9, huge))
       .toDF("id", "media").write.mode("overwrite").parquet(dir)
@@ -665,7 +665,7 @@ class OpsSpec extends AnyFunSuite {
     val gBadIdx = mkGif(2, 2, Array(0, 1, 7, 2), pal4, 3)
     val gNoPal = mkGif(2, 2, Array(0, 1, 1, 0), null, 2)
     val gHuge = mkGif(500, 500, Array(0, 1, 2, 3), pal4, 2)
-    val dir = java.nio.file.Files.createTempDirectory("mm_gif").toString
+    val dir = SparkTestSession.tempDir("mm_gif").toString
     Seq((1, g1), (2, g89ext), (3, g87), (4, gInter), (5, gLocal), (6, gBig),
       (7, gTrunc), (8, gBadIdx), (9, gNoPal), (10, gHuge))
       .toDF("id", "media").write.mode("overwrite").parquet(dir)
@@ -745,7 +745,7 @@ class OpsSpec extends AnyFunSuite {
     val mp3Id3 = "ID3".getBytes ++ b(0x03, 0x00, 0x00, 0x00)
     val mp3Sync = b(0xFF, 0xFB, 0x90, 0x00) // bare frame sync
     val junk = "definitely not audio".getBytes
-    val dir = java.nio.file.Files.createTempDirectory("mm_audio").toString
+    val dir = SparkTestSession.tempDir("mm_audio").toString
     Seq((1, wav), (2, ogg), (3, mp3Id3), (4, mp3Sync), (5, junk))
       .toDF("id", "media").write.mode("overwrite").parquet(dir)
     val got = spark.read.parquet(dir)

@@ -63,7 +63,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("merged violations plan: one key window, no salted dedup aggregate") {
     // read from parquet so the only xxhash64 a plan can hold is the salt
-    val dir = java.nio.file.Files.createTempDirectory("graft_tail").toString
+    val dir = SparkTestSession.tempDir("graft_tail").toString
     turns.write.mode("overwrite").parquet(s"$dir/turns")
     convs.write.mode("overwrite").parquet(s"$dir/convs")
     val onDisk = spark.read.parquet(s"$dir/turns")
@@ -80,7 +80,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("column pruning reaches the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val dir = SparkTestSession.tempDir("graft_prune").toString
     turns.write.mode("overwrite").parquet(dir)
     val onDisk = spark.read.parquet(dir)
     val p = plan(Stats.colStats(onDisk, Seq("role")))
@@ -91,7 +91,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("filter pushdown reaches the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_push").toString
+    val dir = SparkTestSession.tempDir("graft_push").toString
     turns.write.mode("overwrite").parquet(dir)
     val p = plan(spark.read.parquet(dir)
       .filter(col("role") === "tool").select("conv_id"))
@@ -101,7 +101,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("resume predicate prunes hive-style part_id partitions at the source") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = SparkTestSession.tempDir("graft_part").toString
     turns.write.mode("overwrite").partitionBy("part_id").parquet(dir)
     val p = plan(spark.read.parquet(dir)
       .filter(!col("part_id").isin(0, 1, 2)))

@@ -18,7 +18,7 @@ class RunnerSpec extends AnyFunSuite {
   private lazy val convs = TranscriptGen.conversations(spark, cfg).cache()
 
   test("full run then resume: second run validates nothing, data intact") {
-    val out = java.nio.file.Files.createTempDirectory("graft_run1").toString
+    val out = SparkTestSession.tempDir("graft_run1").toString
     val r1 = Runner.run(spark, turns, Some(convs), out, "run1")
     assert(r1.validatedParts === 8)
     assert(r1.skippedParts === 0)
@@ -34,7 +34,7 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("partial run then resume completes only the missing partitions") {
-    val out = java.nio.file.Files.createTempDirectory("graft_run2").toString
+    val out = SparkTestSession.tempDir("graft_run2").toString
     val firstHalf = turns.filter(col("part_id") < 4)
     val r1 = Runner.run(spark, firstHalf, Some(convs), out, "run1")
     assert(r1.validatedParts === 4)
@@ -44,7 +44,7 @@ class RunnerSpec extends AnyFunSuite {
     assert(r2.skippedParts === 4)
     assert(r2.manifest.count() === 8)
     // resumed result must equal a from-scratch full run
-    val fresh = java.nio.file.Files.createTempDirectory("graft_run3").toString
+    val fresh = SparkTestSession.tempDir("graft_run3").toString
     val full = Runner.run(spark, turns, Some(convs), fresh, "full", resume = false)
     assert(r2.violations.count() === full.violations.count())
     val a = r2.violations.select("conv_id", "turn_idx", "rule_id")
@@ -55,8 +55,8 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("spark-submit Main: audit end-to-end + resume; strict passes clean data") {
-    val in = java.nio.file.Files.createTempDirectory("graft_main_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_main_out").toString
+    val in = SparkTestSession.tempDir("graft_main_in").toString
+    val out = SparkTestSession.tempDir("graft_main_out").toString
     turns.write.mode("overwrite").parquet(s"$in/turns")
     convs.write.mode("overwrite").parquet(s"$in/convs")
     Main.main(Array("--input", s"$in/turns", "--conversations", s"$in/convs",
@@ -92,8 +92,8 @@ class RunnerSpec extends AnyFunSuite {
 
   test("spark-submit Main: corpus mode writes a split-partitioned corpus " +
     "and the funnel accounts for the drop") {
-    val in = java.nio.file.Files.createTempDirectory("graft_corpus_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_corpus_out").toString
+    val in = SparkTestSession.tempDir("graft_corpus_in").toString
+    val out = SparkTestSession.tempDir("graft_corpus_out").toString
     // 30 unique English docs. The doc number recurs every OTHER word, so
     // EVERY word 2-gram (and a fortiori every 8-gram) is doc-specific:
     //  - the default boilerplate gate is now the scale-invariant fraction
@@ -124,7 +124,7 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("manifest carries lineage fields") {
-    val out = java.nio.file.Files.createTempDirectory("graft_run4").toString
+    val out = SparkTestSession.tempDir("graft_run4").toString
     val r = Runner.run(spark, turns, Some(convs), out, "runX", snapshot = "snapA")
     val m = r.manifest.filter(col("run_id") === "runX")
     assert(m.count() === 8)
@@ -139,7 +139,7 @@ class RunnerSpec extends AnyFunSuite {
     // compared as id sets, not sizes: the registry holds its RDDs weakly,
     // so other suites' cached frames may be collected during the call
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val out = java.nio.file.Files.createTempDirectory("graft_run5").toString
+    val out = SparkTestSession.tempDir("graft_run5").toString
     val r = Runner.run(spark, turns, Some(convs), out, "runV")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
     val partDirs = new java.io.File(s"$out/verdicts").listFiles()
@@ -158,8 +158,8 @@ class RunnerSpec extends AnyFunSuite {
 
   test("spark-submit Main: sft mode renders deduped conversations as " +
     "parseable JSONL messages") {
-    val in = java.nio.file.Files.createTempDirectory("graft_sft_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sft_out").toString
+    val in = SparkTestSession.tempDir("graft_sft_in").toString
+    val out = SparkTestSession.tempDir("graft_sft_out").toString
     graft.sources.TranscriptGen
       .transcripts(spark, graft.sources.TranscriptGen.Config(nConvs = 40L))
       .write.mode("overwrite").parquet(s"$in/turns")
@@ -180,8 +180,8 @@ class RunnerSpec extends AnyFunSuite {
   test("spark-submit Main: sft mode's conversation-size gate drops a " +
     "planted mega-conversation up front (counted in the audit) while the " +
     "normal conversations still render") {
-    val in = java.nio.file.Files.createTempDirectory("graft_sft_in2").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sft_out2").toString
+    val in = SparkTestSession.tempDir("graft_sft_in2").toString
+    val out = SparkTestSession.tempDir("graft_sft_out2").toString
     val base = graft.sources.TranscriptGen
       .transcripts(spark, graft.sources.TranscriptGen.Config(nConvs = 20L))
     // mega-conversation: 300 turns on one conv key
@@ -204,8 +204,8 @@ class RunnerSpec extends AnyFunSuite {
 
   test("spark-submit Main: --tool-args and --temporal opt-in sinks carry " +
     "the deep-check violations alongside the default audit outputs") {
-    val in = java.nio.file.Files.createTempDirectory("graft_deep_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_deep_out").toString
+    val in = SparkTestSession.tempDir("graft_deep_in").toString
+    val out = SparkTestSession.tempDir("graft_deep_out").toString
     turns.write.mode("overwrite").parquet(s"$in/turns")
     convs.write.mode("overwrite").parquet(s"$in/convs")
     TranscriptGen.toolCalls(spark, cfg)

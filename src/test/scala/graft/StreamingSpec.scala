@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Turn
 import graft.streaming.StreamValidator
 
-/** Streaming path: the batch constraint catalog over a MemoryStream-driven
+/** Streaming path: the batch validator's rules over a MemoryStream-driven
   * micro-batch, results observed through an in-memory sink.
   */
 class StreamingSpec extends AnyFunSuite {
@@ -24,7 +24,10 @@ class StreamingSpec extends AnyFunSuite {
       Turn("c1", 0, "user", "hello", null, ts(0), 0),
       Turn("c1", 1, "operator", "bad role", null, ts(5), 0), // enum violation
       Turn("c2", 0, "user", "", null, ts(0), 1))             // required violation
-    val q = StreamValidator.violations(input.toDF())
+    val stream = StreamValidator.violations(input.toDF())
+    // one schema for stream and batch sinks
+    assert(stream.columns.toSeq === graft.engine.Validator.violationCols)
+    val q = stream
       .writeStream.format("memory").queryName("viol_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
@@ -33,212 +36,54 @@ class StreamingSpec extends AnyFunSuite {
     assert(rules.toSeq === Seq("ENUM_MEMBER_role", "REQUIRED_NONEMPTY_text"))
   }
 
-  test("windowed verdicts aggregate per window x partition with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    input.addData(
-      Turn("c1", 0, "user", "ok", null, ts(0), 0),
-      Turn("c1", 1, "operator", "bad", null, ts(10), 0),
-      Turn("c2", 0, "user", "fine", null, ts(0), 1))
-    val q = StreamValidator.windowedVerdicts(input.toDF(), "10 minutes", "1 hour")
-      .writeStream.format("memory").queryName("verd_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("verd_out")
-      .select("part_id", "n_rows", "n_violations", "status")
-      .as[(Int, Long, Long, String)].collect().toSet
-    assert(out === Set((0, 2L, 1L, "invalid"), (1, 1L, 0L, "valid")))
-  }
+  /** A violation row, in `Validator.violationCols` order. */
+  private type Row7 = (String, Int, Int, String, String, String, String)
 
-  test("streaming dedup drops cross-batch duplicate keys, state watermark-bounded") {
+  /** Feed `batches` to [[StreamValidator.statefulTsOrder]] one micro-batch
+    * each; returns its rows and the batch validator's rows over all of them.
+    */
+  private def tsOrderBothWays(name: String, batches: Seq[Seq[Turn]])
+      : (Seq[Row7], Seq[Row7]) = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Turn]
-    val q = StreamValidator.dedupKeys(input.toDF())
-      .writeStream.format("memory").queryName("dedup_out")
+    val q = StreamValidator.statefulTsOrder(input.toDF())
+      .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    input.addData(
-      Turn("c1", 0, "user", "first", null, ts(0), 0),
-      Turn("c1", 0, "user", "dup-in-batch", null, ts(1), 0))
-    q.processAllAvailable()
-    input.addData( // same key again in a LATER micro-batch
-      Turn("c1", 0, "user", "dup-cross-batch", null, ts(2), 0),
-      Turn("c1", 1, "user", "new-key", null, ts(3), 0))
-    q.processAllAvailable(); q.stop()
-    val texts = spark.table("dedup_out")
-      .select("text").as[String].collect().sorted
-    assert(texts.toSeq === Seq("first", "new-key"))
-  }
-
-  test("streaming incremental ingest: history hits drop via the static " +
-    "hash store; within-stream content dups drop cross-batch via " +
-    "watermark state") {
-    implicit val sqlCtx = spark.sqlContext
-    val history = Seq("known doc").toDF("t")
-      .select(org.apache.spark.sql.functions.md5(
-        org.apache.spark.sql.functions.col("t")).as("h"))
-    val input = MemoryStream[Turn]
-    val q = StreamValidator.incrementalNew(input.toDF(), history, "text")
-      .writeStream.format("memory").queryName("incr_out")
-      .outputMode("append").start()
-    input.addData(
-      Turn("c1", 0, "user", "known doc", null, ts(0), 0),   // history hit
-      Turn("c1", 1, "user", "fresh one", null, ts(1), 0),   // keep
-      Turn("c1", 2, "user", "fresh one", null, ts(2), 0))   // in-batch dup
-    q.processAllAvailable()
-    input.addData(
-      Turn("c2", 0, "user", "fresh one", null, ts(3), 0),   // cross-batch dup
-      Turn("c2", 1, "user", "another", null, ts(4), 0),     // keep
-      Turn("c2", 2, "user", "known doc", null, ts(5), 0))   // history, again
-    q.processAllAvailable(); q.stop()
-    val kept = spark.table("incr_out")
-      .select("text").as[String].collect().sorted
-    assert(kept.toSeq === Seq("another", "fresh one"))
-  }
-
-  test("windowed drift: skewed window fires chi2, conforming window stays quiet") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    // reference profile: half user / half assistant
-    val ref = Map("user" -> 0.5, "assistant" -> 0.5)
-    // window 1 (minute 0-9): 10 user + 10 assistant — conforming
-    val w1 = (0 until 10).flatMap(i => Seq(
-      Turn(s"a$i", 0, "user", "x", null, ts(i), 0),
-      Turn(s"b$i", 0, "assistant", "y", null, ts(i + 30), 0)))
-    // window 2 (minute 10-19): 20 user, 0 assistant — all mass on one cell
-    val w2 = (0 until 20).map(i =>
-      Turn(s"c$i", 0, "user", "z", null, ts(600 + i), 0))
-    input.addData(w1 ++ w2: _*)
-    val q = StreamValidator
-      .windowedDrift(input.toDF(), "role", ref, "10 minutes", "1 hour",
-        chi2Threshold = 10.0)
-      .writeStream.format("memory").queryName("drift_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("drift_out")
-      .select("n", "chi2", "drifted")
-      .as[(Long, Double, Boolean)].collect().sortBy(_._2)
-    assert(out.length === 2)
-    assert(out(0) === ((20L, 0.0, false)))         // perfectly conforming
-    val (n2, chi2, drifted2) = out(1)
-    assert(n2 === 20L && drifted2)
-    // exact chi2: obs (20,0), exp (10,10) -> 100/10 + 100/10 = 20 (+ ~0 other)
-    assert(math.abs(chi2 - 20.0) < 0.01)
+    batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    q.stop()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(graft.engine.Validator.violationCols.map(df.col): _*)
+        .as[Row7].collect().toSeq.sorted
+    (rows(spark.table(name)),
+      rows(graft.engine.Validator.tsOrderViolations(batches.flatten.toDF())))
   }
 
   test("stateful ts-order catches CROSS-micro-batch inversions, " +
     "messages byte-match the batch validator") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamValidator.statefulTsOrder(input.toDF())
-      .writeStream.format("memory").queryName("order_out")
-      .outputMode("append").start()
-    // batch 1: conv c1 turns 0,1 in order — carries state (1, ts(60))
-    input.addData(
-      Turn("c1", 0, "user", "a", null, ts(0), 0),
-      Turn("c1", 1, "assistant", "b", null, ts(60), 0))
-    q.processAllAvailable()
+    // batch 1: conv c1 turns 0,1 in order — carries state (1, ts(60));
     // batch 2: turn 2 arrives with ts BEFORE batch 1's last — only the
     // carried state can see the inversion (a per-batch window would not)
-    input.addData(Turn("c1", 2, "user", "c", null, ts(30), 0),
-      Turn("c2", 0, "user", "d", null, ts(0), 1)) // clean other conv
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("order_out")
-      .select("conv_id", "turn_idx", "rule_id", "message", "text")
-      .as[(String, Int, String, String, String)].collect()
-    assert(got.length === 1)
-    assert(got(0)._1 === "c1" && got(0)._2 === 2)
-    // byte-parity with the batch path on the same accumulated rows
-    val batchRows = Seq(
-      Turn("c1", 0, "user", "a", null, ts(0), 0),
-      Turn("c1", 1, "assistant", "b", null, ts(60), 0),
-      Turn("c1", 2, "user", "c", null, ts(30), 0),
-      Turn("c2", 0, "user", "d", null, ts(0), 1)).toDF()
-    val batch = graft.engine.Validator.tsOrderViolations(batchRows)
-      .select("conv_id", "turn_idx", "rule_id", "message", "text")
-      .as[(String, Int, String, String, String)].collect()
-    assert(batch.length === 1)
-    assert(got(0) === batch(0))
-  }
-
-  test("stateful role grammar: cross-batch prev-role carried; row parity " +
-    "with the batch operator on the accumulated turns") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamValidator.statefulRoleGrammar(input.toDF())
-      .writeStream.format("memory").queryName("grammar_out")
-      .outputMode("append").start()
-    // batch 1: c1 opens clean (system, user); c2 opens with assistant
-    // (FIRST_ROLE fires in-batch)
-    input.addData(
-      Turn("c1", 0, "system", "a", null, ts(0), 0),
-      Turn("c1", 1, "user", "b", null, ts(10), 0),
-      Turn("c2", 0, "assistant", "c", null, ts(0), 1))
-    q.processAllAvailable()
-    // batch 2: c1 sends user again (USER_ECHO — only carried state can see
-    // the batch-1 user), then tool after user (TOOL_CONTEXT); c2 goes
-    // system mid-stream (SYSTEM_RESTART via carried state)
-    input.addData(
-      Turn("c1", 2, "user", "d", null, ts(20), 0),
-      Turn("c1", 3, "tool", "e", null, ts(30), 0),
-      Turn("c2", 1, "system", "f", null, ts(10), 1))
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("grammar_out")
-      .select("conv_id", "turn_idx", "prev_state", "state", "rule")
-      .as[(String, Int, Option[String], String, String)].collect().toSet
-    val accumulated = Seq(
-      Turn("c1", 0, "system", "a", null, ts(0), 0),
-      Turn("c1", 1, "user", "b", null, ts(10), 0),
-      Turn("c1", 2, "user", "d", null, ts(20), 0),
-      Turn("c1", 3, "tool", "e", null, ts(30), 0),
-      Turn("c2", 0, "assistant", "c", null, ts(0), 1),
-      Turn("c2", 1, "system", "f", null, ts(10), 1)).toDF()
-    val batch = graft.engine.Grammar
-      .transitionViolations(accumulated, "conv_id", Seq("turn_idx"), "role",
-        graft.engine.Grammar.roleRules)
-      .select("conv_id", "turn_idx", "prev_state", "state", "rule")
-      .as[(String, Int, Option[String], String, String)].collect().toSet
-    assert(batch === Set(
-      ("c1", 2, Some("user"), "user", "USER_ECHO"),
-      ("c1", 3, Some("user"), "tool", "TOOL_CONTEXT"),
-      ("c2", 0, None, "assistant", "FIRST_ROLE"),
-      ("c2", 1, Some("assistant"), "system", "SYSTEM_RESTART")))
+    val (got, batch) = tsOrderBothWays("order_out", Seq(
+      Seq(Turn("c1", 0, "user", "a", null, ts(0), 0),
+        Turn("c1", 1, "assistant", "b", null, ts(60), 0)),
+      Seq(Turn("c1", 2, "user", "c", null, ts(30), 0),
+        Turn("c2", 0, "user", "d", null, ts(0), 1)))) // clean other conv
+    assert(got.map(r => (r._1, r._2)) === Seq(("c1", 2)))
     assert(got === batch)
-  }
-
-  test("streaming sessionization: cross-batch rows of one session MERGE; " +
-    "the gap splits sittings; sessions emit only once the watermark " +
-    "closes them") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamValidator.sessions(input.toDF(),
-        gap = "30 minutes", watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    input.addData(
-      Turn("c1", 0, "user", "a", null, ts(0), 0),
-      Turn("c1", 1, "assistant", "b", null, ts(300), 0),
-      Turn("c2", 0, "user", "x", null, ts(0), 1))
-    q.processAllAvailable()
-    input.addData( // same c1 session continues in a LATER micro-batch
-      Turn("c1", 2, "user", "c", null, ts(600), 0))
-    q.processAllAvailable()
-    assert(spark.table("sess_out").count() === 0,
-      "nothing may emit before the watermark passes a session end")
-    input.addData( // far-future sentinel advances the watermark past all ends
-      Turn("zz", 0, "user", "s", null,
-        java.sql.Timestamp.valueOf("2026-01-02 00:00:00"), 0))
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("sess_out")
-      .select("conv_id", "n_turns", "first_turn", "last_turn")
-      .as[(String, Long, Int, Int)].collect().toSet
-    // c1: one MERGED session of 3 turns (batch 2 extended batch 1's state);
-    // c2: its single-turn session; zz: still open, not emitted
-    assert(out === Set(("c1", 3L, 0, 2), ("c2", 1L, 0, 0)))
-    val Seq((st, en)) = spark.table("sess_out")
-      .filter($"conv_id" === "c1")
-      .select("session_start", "session_end")
-      .as[(java.sql.Timestamp, java.sql.Timestamp)].collect().toSeq
-    assert(st === ts(0) && en === ts(600 + 1800),
-      s"session span = first event .. last event + gap: $st .. $en")
+    // the message renders ts in the session time zone, fractions included
+    def at(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val (gotLa, batchLa) = tsOrderBothWays("order_out_la", Seq(
+        Seq(Turn("c3", 0, "user", "e", null, at("2026-01-01T10:00:00.5Z"), 2),
+          Turn("c3", 1, "assistant", "f", null,
+            at("2026-01-01T10:00:01.75Z"), 2)),
+        Seq(Turn("c3", 2, "user", "g", null,
+          at("2026-01-01T10:00:00.125Z"), 2))))
+      assert(gotLa.map(_._6) === Seq("Non-monotonic ts in conv c3 at turn 2: " +
+        "2026-01-01 02:00:00.125 < 2026-01-01 02:00:01.75"))
+      assert(gotLa === batchLa)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 }

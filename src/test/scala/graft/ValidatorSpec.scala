@@ -67,6 +67,27 @@ class ValidatorSpec extends AnyFunSuite {
     assert(expected > 0)
     val orphanConvs = orphans.select("conv_id").distinct()
     assert(orphanConvs.join(convs, Seq("conv_id"), "left_semi").count() === 0)
+    // allViolations' merged marker join emits exactly the anti-join's rows,
+    // here and on a dim with a duplicated and a null conv_id against turns
+    // with a null conv_id
+    def sameOrphans(t: org.apache.spark.sql.DataFrame,
+        c: org.apache.spark.sql.DataFrame): Long = {
+      val merged = Validator.allViolations(t, Some(c))
+        .filter(col("rule_id") === "ORPHAN_CONV")
+      val anti = Validator.orphanViolations(t, c)
+      assert(merged.exceptAll(anti).count() === 0)
+      assert(anti.exceptAll(merged).count() === 0)
+      anti.count()
+    }
+    assert(sameOrphans(turns, convs) === expected)
+    val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val handTurns = Seq(
+      graft.model.Turn("c1", 0, "user", "a", null, ts0, 0),
+      graft.model.Turn("c1", 1, "assistant", "b", null, ts0, 0),
+      graft.model.Turn("c2", 0, "user", "c", null, ts0, 1),
+      graft.model.Turn(null, 0, "user", "d", null, ts0, 1)).toDF()
+    val handDim = Seq(Some("c1"), Some("c1"), None).toDF("conv_id")
+    assert(sameOrphans(handTurns, handDim) === 2) // c2 and the null conv_id
   }
 
   test("ts-order parity with window recount (key-level semantics)") {
