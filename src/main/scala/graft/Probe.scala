@@ -114,8 +114,7 @@ object Probe {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       args.drop(3).foreach { name =>
         val df = SparkEntry.queries(name)(spark, sfDir)
-        try noop(df) catch { case e: Throwable =>
-          println(s"PROBE plans $name FAILED: ${e.getMessage}") }
+        noop(df) // a failing query aborts the dump: no plan file for it
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(

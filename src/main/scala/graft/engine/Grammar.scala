@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 /** Transition-grammar validation: cross-row constraint checks over an
   * ordered sequence within a partition key — the conversation-STRUCTURE
   * analog of the reference's per-record field checks
-  * (`/root/reference/src/core/verification.py` validates one record at a
-  * time and simply cannot see "a tool turn must follow an assistant turn";
-  * this operator family is what that rule set becomes on a 10¹²-turn
-  * table).
+  * (`src/core/verification.py` validates one record at a time and simply
+  * cannot see "a tool turn must follow an assistant turn"; this operator
+  * family is what that rule set becomes on a 10¹²-turn table).
   *
   * A [[Rule]] fires on a `(prev_state, state)` pair; `prev_state` is NULL
   * exactly at the sequence's first row, so first-row rules ("a
@@ -21,12 +20,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (same contract as [[Validator.tsOrderViolations]]): only
   * NARROW columns — partition key, order key(s), state — enter the window
-  * exchange; payload text never shuffles. The plain variant windows on the
-  * partition key; [[transitionViolationsSegmented]] is the row-identical
-  * skew escape hatch for pathological hot keys (one conversation with
-  * 10⁸ turns), range-splitting each key into bounded segments and
-  * stitching boundary pairs through a per-segment first/last aggregate —
-  * parallelism becomes #segments, not #keys.
+  * exchange; payload text never shuffles. The window partitions on the
+  * key, so one pathological hot key (a conversation with 10⁸ turns) is
+  * one task; [[Validator.tsOrderViolationsSegmented]] shows the
+  * segment-stitch shape that lifts that bound if a grammar entry needs it.
   */
 object Grammar {
 
@@ -90,46 +87,6 @@ object Grammar {
       .select((partCol +: orderCols).map(col) :+ col(stateCol).as("__cur"): _*)
       .withColumn("__prev", lag("__cur", 1).over(w))
     applyRules(paired, partCol +: orderCols, rules)
-  }
-
-  /** Skew-proof variant, row-identical to [[transitionViolations]] ordered
-    * by a single numeric `orderCol` (spec-asserted): each key is
-    * range-split into `segSize`-row segments (`seg = floor(order /
-    * segSize)`), adjacent pairs resolve within segments, and each
-    * segment's first row takes its `prev_state` from the nearest earlier
-    * non-empty segment's last row via a tiny per-segment window —
-    * the [[Validator.tsOrderViolationsSegmented]] stitch, applied to an
-    * arbitrary rule set.
-    */
-  def transitionViolationsSegmented(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      stateCol: String,
-      rules: Seq[Rule],
-      segSize: Int = 1 << 16): DataFrame = {
-    val narrow = df
-      .select(col(partCol), col(orderCol), col(stateCol).as("__cur"),
-        floor(col(orderCol).cast("double") / segSize).as("__seg"))
-    val wSeg = Window.partitionBy(partCol, "__seg").orderBy(orderCol)
-    val inSeg = narrow
-      .withColumn("__prev", lag("__cur", 1).over(wSeg))
-      .filter(col("__prev").isNotNull)
-    val segAgg = narrow
-      .groupBy(col(partCol), col("__seg"))
-      .agg(
-        min(struct(col(orderCol), col("__cur"))).as("first"),
-        max(struct(col(orderCol), col("__cur"))).as("last"))
-    val wKey = Window.partitionBy(partCol).orderBy("__seg")
-    val boundary = segAgg
-      .select(col(partCol),
-        col(s"first.$orderCol").as(orderCol),
-        col("first.__cur").as("__cur"),
-        lag("last.__cur", 1).over(wKey).as("__prev"))
-    applyRules(
-      inSeg.select(col(partCol), col(orderCol), col("__cur"), col("__prev"))
-        .unionByName(boundary),
-      Seq(partCol, orderCol), rules)
   }
 
   /** Corpus-wide transition matrix: how often each (prev_state, state)

@@ -130,29 +130,6 @@ object Stats {
         sum("__term_ppm").as("entropy_ppm_bits"))
   }
 
-  /** Schema drift between two snapshots of "the same" table — the day-2
-    * audit that catches an upstream producer adding, dropping, or
-    * re-typing a column before the data-level drift checks see a single
-    * row. PURE METADATA: both schemas come from the frames' catalogs, no
-    * data pass at any scale. One row per differing column:
-    * (column, status ∈ added|removed|type_changed, old_type, new_type).
-    */
-  def schemaDiff(oldDf: DataFrame, newDf: DataFrame): DataFrame = {
-    val spark = oldDf.sparkSession
-    import spark.implicits._
-    val o = oldDf.schema.fields.map(f => f.name -> f.dataType.sql).toMap
-    val n = newDf.schema.fields.map(f => f.name -> f.dataType.sql).toMap
-    val rows =
-      (n.keySet -- o.keySet).toSeq.sorted.map(c =>
-        (c, "added", null.asInstanceOf[String], n(c))) ++
-      (o.keySet -- n.keySet).toSeq.sorted.map(c =>
-        (c, "removed", o(c), null.asInstanceOf[String])) ++
-      (o.keySet & n.keySet).toSeq.sorted.collect {
-        case c if o(c) != n(c) => (c, "type_changed", o(c), n(c))
-      }
-    rows.toDF("column", "status", "old_type", "new_type")
-  }
-
   /** Per-group Wilson lower confidence bound on a boolean rate — the
     * small-sample-corrected way to RANK groups (sources, domains, crawls)
     * by quality: a source with 3/3 passing docs must not outrank one with

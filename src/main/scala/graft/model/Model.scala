@@ -21,63 +21,3 @@ final case class Turn(
     ts: Timestamp,
     part_id: Int
 )
-
-/** One violated rule on one turn. `message` byte-matches the reference's
-  * f-string message formats (reference `src/core/verification.py:40,51,60,70,
-  * 80,88,111,118,141,147`); `text` carries the original per-turn text
-  * untouched — the byte-parity invariant of the north star.
-  */
-final case class Violation(
-    conv_id: String,
-    turn_idx: Int,
-    part_id: Int,
-    rule_id: String,
-    field: String,
-    message: String,
-    text: String
-)
-
-/** Per-partition pass/fail verdict: `status = "valid"` iff zero issues,
-  * mirroring reference `src/core/verification.py:239-245` (`as_dict`).
-  */
-final case class PartitionVerdict(
-    part_id: Int,
-    status: String,
-    n_rows: Long,
-    n_violations: Long,
-    n_warnings: Long
-)
-
-/** One row of the single-pass wide column-stats aggregate (SURVEY.md §2.5). */
-final case class ColStats(
-    column: String,
-    n: Long,
-    null_rate: Double,
-    n_distinct_approx: Long,
-    min: String,
-    max: String,
-    q_tdigest: Seq[Double] // p50 / p90 / p99
-)
-
-/** Checkpoint-resume lineage record, one per validated partition
-  * (SURVEY.md §7.1 M5).
-  */
-final case class ManifestEntry(
-    run_id: String,
-    part_id: Int,
-    snapshot: String,
-    status: String,
-    n_rows: Long,
-    n_violations: Long,
-    wall_ms: Long
-)
-
-/** Conversations dimension for the referential-integrity check — the engine
-  * analog of the reference's `@id -> node` entity index
-  * (reference `src/core/models.py:282`).
-  */
-final case class Conversation(
-    conv_id: String,
-    channel: String,
-    created_ts: Timestamp
-)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Boilerplate n-gram detection: find word n-grams that repeat across the
@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * is made of them — the C4/RefinedWeb-style "frequent line/gram" cleanup
   * generalized to grams, which also works on corpora with no line structure.
   *
-  * Scale shape: gram occurrences shuffle as narrow (doc_id, 8-byte xxhash64)
-  * rows — the gram STRINGS never leave the map side. The frequent set is
+  * Scale shape: gram occurrences shuffle as narrow (doc_id, 8-byte gram
+  * hash) rows — no gram STRING is ever built. The frequent set is
   * tiny by construction (true boilerplate is a few thousand grams even at
   * 100 TB — the threshold scales with corpus size while the number of
   * distinct above-threshold grams doesn't), so it broadcasts and the
@@ -20,24 +20,6 @@ import org.apache.spark.sql.functions._
   * group by the strings and still hash-match.
   */
 object Boilerplate {
-
-  /** All word n-gram occurrences (NON-distinct, unlike
-    * [[Dedup.shingles]] — coverage needs every occurrence): same
-    * tokenization contract as the dedup family (lower, trim, split \s+).
-    */
-  def gramsAll(c: Column, n: Int): Column =
-    gramsAllOfWords(Dedup.splitWords(c), n)
-
-  /** [[gramsAll]] over an ALREADY-MATERIALIZED word array — the form the
-    * DataFrame-level coverage ops use (an inlined split() re-tokenizes
-    * per gram inside the interpreted lambda — the O(words²) trap, see
-    * [[Dedup.shinglesOfWords]]).
-    */
-  def gramsAllOfWords(words: Column, n: Int): Column =
-    when(size(words) < n, array(concat_ws(" ", words)))
-      .otherwise(transform(
-        sequence(lit(1), size(words) - (n - 1)),
-        i => concat_ws(" ", slice(words, i, lit(n)))))
 
   /** Per-document boilerplate coverage: (id, n_grams, n_boiler,
     * boiler_frac) where n_boiler counts gram occurrences whose corpus-wide
@@ -96,9 +78,7 @@ object Boilerplate {
     // positional gram hashes via the compiled expression (the Decontam
     // pattern): no gram string, no interpreted per-position lambda; gram
     // equality ⟺ word-sequence equality, so per-hash counts — and thus
-    // every coverage number — are identical modulo 64-bit collisions, the
-    // same guarantee xxhash64(gram string) gave. The string faces above
-    // remain for scalar/spec use.
+    // every coverage number — are identical modulo 64-bit collisions.
     val grams = corpus
       .select(col(keyCol).as("id"), Dedup.splitWords(col(textCol)).as("__w"))
       .select(col("id"), explode(graft.functions.WordGramHashes

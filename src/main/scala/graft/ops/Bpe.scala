@@ -76,15 +76,15 @@ object Bpe {
     // LAZY checkpoints throughout (the Connected rule): each round's
     // pair-count collect is the first action over the freshly rewritten
     // vocab, so it materializes the checkpoint inside the same job — one
-    // scheduler round-trip per merge instead of two. The superseded round
-    // is unpersisted only AFTER the collect materialized its successor.
+    // scheduler round-trip per merge instead of two. A superseded round's
+    // blocks stay cached until the ContextCleaner collects its RDD:
+    // `unpersist` does not release a localCheckpoint.
     var vocab = wordFreqs
       .select(col("freq"),
         transform(sequence(lit(1), length(col("word"))),
           i => col("word").substr(i, lit(1))).as("syms"))
       .filter(size(col("syms")) >= 1)
       .localCheckpoint(false)
-    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var i = 0
     var done = false
@@ -98,138 +98,15 @@ object Bpe {
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(1) // TakeOrderedAndProject; ONE row reaches the driver
         .collect() // materializes `vocab` (and its checkpoint)
-      prev.foreach(_.unpersist())
-      prev = None
       if (best.isEmpty) done = true
       else {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         merges += ((a, b))
-        val next = vocab
+        vocab = vocab
           .select(col("freq"), applyMerge(col("syms"), a, b).as("syms"))
           .localCheckpoint(false)
-        prev = Some(vocab)
-        vocab = next
       }
     }
-    vocab.unpersist()
-    prev.foreach(_.unpersist())
     merges.toSeq
-  }
-
-  /** Replace every adjacent occurrence of ANY of the (token-disjoint)
-    * merge pairs in one fold pass — the batched-round rewrite. Disjointness
-    * (no symbol appears in two pairs) guarantees at most one rule can match
-    * at each step, so one pass over the word applies all of them with
-    * exactly the semantics of applying them one-at-a-time in any order.
-    */
-  private def applyMerges(syms: Column, ms: Seq[(String, String)]): Column =
-    aggregate(syms, array().cast("array<string>"), (acc, x) => {
-      val base = when(size(acc) === 0, array(x))
-      ms.foldLeft(base) { case (w, (a, b)) =>
-        w.when(element_at(acc, -1) === a && x === b,
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-      }.otherwise(concat(acc, array(x)))
-    })
-
-  /** Batched merge learning — [[learnMerges]]'s scale face: per round,
-    * count pairs ONCE, then greedily accept up to `maxBatch` candidates in
-    * descending (count, a, b) order, skipping any candidate that shares a
-    * symbol with an already-accepted one, and rewrite the vocabulary in a
-    * single pass. A 32k-vocab tokenizer run drops from 32k sequential
-    * Spark jobs to ~32k/maxBatch rounds.
-    *
-    * Semantics vs the one-at-a-time learner: token-disjointness makes
-    * every accepted candidate's count INVARIANT under the other accepted
-    * merges (neither symbol of a disjoint pair can be consumed by another
-    * merge, and new adjacencies always involve the freshly merged symbol),
-    * so each accepted merge is applied with exactly the count it reported.
-    * The one divergence: a pair CREATED by an earlier merge in the same
-    * round (e.g. ("ab", "c") after ("a", "b")) only becomes visible next
-    * round, so if such a pair would out-rank a later in-batch candidate
-    * the two learners can order merges differently. On corpora without
-    * that ambiguity the lists are identical (BpeSpec), and `maxBatch = 1`
-    * reduces exactly to [[learnMerges]].
-    */
-  def learnMergesBatched(
-      wordFreqs: DataFrame, nMerges: Int, minCount: Long = 2L,
-      maxBatch: Int = 64): Seq[(String, String)] = {
-    require(nMerges >= 1 && nMerges <= 100000, "nMerges in [1, 100000]")
-    require(maxBatch >= 1 && maxBatch <= 256, "maxBatch in [1, 256]")
-    // lazy checkpoints + unpersist-after-materialize: see [[learnMerges]]
-    var vocab = wordFreqs
-      .select(col("freq"),
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))).as("syms"))
-      .filter(size(col("syms")) >= 1)
-      .localCheckpoint(false)
-    var prev: Option[DataFrame] = None
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var done = false
-    while (merges.size < nMerges && !done) {
-      val want = math.min(maxBatch, nMerges - merges.size)
-      // candidate pool: top 4·batch pairs — bounded driver collect (the
-      // skipped overlapping candidates usually leave ≥ batch survivors)
-      val cands = vocab
-        .select(col("freq"), explode(adjacentPairs(col("syms"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("freq").as("n"))
-        .filter(col("n") >= minCount)
-        .orderBy(col("n").desc, col("a").asc, col("b").asc)
-        .limit(want * 4)
-        .collect() // materializes `vocab` (and its checkpoint)
-      prev.foreach(_.unpersist())
-      prev = None
-      val used = scala.collection.mutable.HashSet.empty[String]
-      val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      var i = 0
-      while (i < cands.length && batch.size < want) {
-        val a = cands(i).getString(0); val b = cands(i).getString(1)
-        if (!used(a) && !used(b)) {
-          batch += ((a, b)); used += a; used += b
-        }
-        i += 1
-      }
-      if (batch.isEmpty) done = true
-      else {
-        merges ++= batch
-        val next = vocab
-          .select(col("freq"), applyMerges(col("syms"), batch.toSeq).as("syms"))
-          .localCheckpoint(false)
-        prev = Some(vocab)
-        vocab = next
-      }
-    }
-    vocab.unpersist()
-    prev.foreach(_.unpersist())
-    merges.toSeq
-  }
-
-  /** Tokenize a text column with a learned merge list: per word, start
-    * from characters and apply the merges in order. Map-only; the merge
-    * list is compiled into the expression (bounded — it is the tokenizer,
-    * not data). Returns (original columns…, tokens: array<string>).
-    */
-  def encodeWords(df: DataFrame, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val words = split(lower(coalesce(col(textCol), lit(""))), "[^a-z]+")
-    df.withColumn("__words", filter(words, w => length(w) >= 1))
-      .withColumn("tokens",
-        flatten(transform(col("__words"), w => {
-          val chars = transform(sequence(lit(1), length(w)),
-            i => w.substr(i, lit(1)))
-          merges.foldLeft(chars) { case (acc, (a, b)) =>
-            // `acc` is a Column expression built once per merge — the fold
-            // nests expressions, it does not re-scan data. Expression depth
-            // grows with the merge count: this encode face is sized for
-            // modest tokenizers (tests, audits); a production encoder
-            // would compile the merge table into one custom Expression.
-            aggregate(acc, array().cast("array<string>"), (s, x) =>
-              when(size(s) === 0, array(x))
-                .when(element_at(s, -1) === a && x === b,
-                  concat(slice(s, lit(1), size(s) - 1), array(lit(a + b))))
-                .otherwise(concat(s, array(x))))
-          }
-        })))
-      .drop("__words")
   }
 }

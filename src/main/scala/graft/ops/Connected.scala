@@ -2,11 +2,12 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Connected components over an edge list — the clustering step that turns
   * near-duplicate PAIRS (minhash/simhash/cosine output) into duplicate
   * GROUPS with one canonical keeper per group. The reference resolves
-  * `@id` references one record at a time (`/root/reference/src/core/models.py:282`);
+  * `@id` references one record at a time (`src/core/models.py:282`);
   * at corpus scale the same "resolve everything reachable" semantics is a
   * connected-components problem.
   *
@@ -17,17 +18,18 @@ import org.apache.spark.sql.functions._
   * No driver-side graph state — the driver loop only compares a (count,
   * hash-sum) fingerprint per round for convergence.
   *
-  * Scale notes: edge rows are two longs — the shuffles stay tiny relative
-  * to any text/dedup stage that produced the pairs; every round's result is
-  * persisted and the previous round unpersisted, so peak footprint is two
-  * edge sets; lineage is truncated with localCheckpoint every few rounds so
-  * the plan does not grow across iterations (on a cluster this would be
-  * `checkpoint` to the reliable store).
+  * Scale notes: edge rows are two integral ids — the shuffles stay tiny
+  * relative to any text/dedup stage that produced the pairs; every round is
+  * a lazy localCheckpoint so the plan does not grow across iterations (on a
+  * cluster this would be `checkpoint` to the reliable store). A superseded
+  * round's checkpoint blocks stay cached until the ContextCleaner collects
+  * its RDD — `unpersist` does not release a localCheckpoint — so the
+  * per-round footprint is not bounded by two edge sets.
   */
 object Connected {
 
   /** Canonical undirected edge form: (a, b) with a > b, self-loops dropped,
-    * duplicates collapsed. Input columns must be two numeric id columns
+    * duplicates collapsed. Input columns must be two integral id columns
     * named `a` and `b`.
     */
   private def canonical(e: DataFrame): DataFrame =
@@ -85,11 +87,6 @@ object Connected {
       .select(col("na").as("a"), col("nb").as("b"))
   }
 
-  /** Component assignment for every node that appears in `edges` (cols
-    * `a`, `b`): returns (id, component) where component = min node id
-    * reachable. Nodes with no edges are the caller's to union in (they are
-    * their own component and never entered the edge list).
-    */
   /** Size-gated LOCAL fast path for [[components]]: a graph whose
     * canonical edge count is at or under the threshold collects to the
     * driver (bounded: 100k edges = 1.6 MB of longs, the same bounded-
@@ -130,9 +127,24 @@ object Connected {
         col("component").cast(aType).as("component"))
   }
 
+  /** Component assignment for every node that appears in `edges` (cols
+    * `a`, `b`, both of an integral type): returns (id, component) where
+    * component = min node id reachable. Nodes with no edges are the
+    * caller's to union in (they are their own component and never entered
+    * the edge list). Graphs of at most `localThreshold` canonical edges
+    * resolve on the driver ([[componentsLocal]]).
+    */
   def components(
       edges: DataFrame, maxRounds: Int = 50,
       localThreshold: Long = 100000L): DataFrame = {
+    // both paths read the ids as longs (componentsLocal's cast, the
+    // fingerprint's getLong); a string id would cast to null and merge
+    // every node into one component
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    Seq("a", "b").foreach(c => require(integral(edges.schema(c).dataType),
+      s"edge column $c must be integral, got ${edges.schema(c).dataType.sql}"))
+    require(0 <= localThreshold && localThreshold <= 1000000L,
+      "localThreshold in [0, 1000000]: the local path collects that many edges")
     // localCheckpoint each round: a round is ~6 nested operators, so the
     // un-truncated logical plan doubles per iteration and Catalyst analysis
     // goes exponential by round ~4 (measured: minutes on a 500-edge input).
@@ -141,25 +153,17 @@ object Connected {
     // first action, so it materializes the (tiny, two-long) edge rows AND
     // saves the checkpoint in ONE job instead of a materialize job followed
     // by a fingerprint job — half the scheduler round-trips per iteration
-    // (measured: the per-round cost here is job overhead, not data). The
-    // previous round is unpersisted only AFTER the new round's fingerprint
-    // materialized it, so truncated lineage never needs recomputing. On a
+    // (measured: the per-round cost here is job overhead, not data). On a
     // cluster this would be reliable `checkpoint` for fault tolerance.
     var e = canonical(edges).localCheckpoint(false)
     var fp = fingerprint(e) // materializes e; _1 is the exact edge count
-    if (fp._1 <= localThreshold) {
-      val local = componentsLocal(e)
-      e.unpersist()
-      return local
-    }
+    if (fp._1 <= localThreshold) return componentsLocal(e)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       round += 1
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nfp = fingerprint(next) // materializes `next` (and its checkpoint)
-      e.unpersist()
-      e = next
+      e = smallStar(largeStar(e)).localCheckpoint(false)
+      val nfp = fingerprint(e) // materializes `e` (and its checkpoint)
       converged = nfp == fp
       fp = nfp
     }

@@ -13,19 +13,18 @@ import graft.functions.{BloomFilterAgg, BloomMightContainLong}
   * Scale shape: the benchmark side is small by construction (an eval set),
   * so its distinct n-gram hashes broadcast; the corpus side explodes to
   * narrow (id, 8-byte hash) rows and broadcast-joins — the 100 TB corpus is
-  * never shuffled by content and no all-pairs comparison exists. Matching is
-  * on xxhash64 of the gram (a false positive needs a 64-bit collision
-  * against the benchmark set); the hit COUNT per document is therefore
+  * never shuffled by content and no all-pairs comparison exists. Matching
+  * in [[contaminated]], [[contaminationReport]] and [[splitLeakage]] is on
+  * the 64-bit gram hash of the compiled [[graft.functions.WordGramHashes]]
+  * expression (FNV-1a word hashes, polynomial combine — no gram string is
+  * built); [[contaminatedBloom]] is the one path that still hashes the gram
+  * STRING with xxhash64. Either way a false positive needs a 64-bit
+  * collision against the benchmark set, so the hit COUNT per document is
   * identical to string-equality matching, which is what the DuckDB oracle
   * (q53) checks.
   */
 object Decontam {
 
-  /** Documents from `corpus` sharing at least one word `n`-gram with
-    * `bench`: (id, n_hit_grams) where n_hit_grams counts the distinct
-    * shared grams. Documents with zero overlap are absent (a filter, not a
-    * left join — at corpus scale the output is the rare side).
-    */
   /** Per-position word-`n`-gram hash structs over an ALREADY-MATERIALIZED
     * word array, via the compiled [[graft.functions.WordGramHashes]]
     * expression — no gram STRING is ever built and no interpreted lambda
@@ -42,6 +41,11 @@ object Decontam {
   private def gramStructs(words: Column, n: Int): Column =
     graft.functions.WordGramHashes.wordGramHashes(words, Seq(n))
 
+  /** Documents from `corpus` sharing at least one word `n`-gram with
+    * `bench`: (id, n_hit_grams) where n_hit_grams counts the distinct
+    * shared grams. Documents with zero overlap are absent (a filter, not a
+    * left join — at corpus scale the output is the rare side).
+    */
   def contaminated(
       corpus: DataFrame,
       bench: DataFrame,

@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   *    (a 10⁸-in-degree hub is a hot aggregate key with map-side partial
   *    combine, never a window).
   *  - out-degrees are computed once, joined once per round (narrow).
-  *  - `localCheckpoint` per round truncates the doubling logical plan
-  *    (the [[Connected.components]] lesson — Catalyst analysis goes
-  *    exponential by round ~4 otherwise); on a cluster this is reliable
+  *  - each round references `rank` once, so the plan grows linearly; an
+  *    eager `localCheckpoint` every 8 rounds bounds its depth (the
+  *    [[Connected.components]] lesson); on a cluster this is reliable
   *    `checkpoint` for lineage fault tolerance.
   *  - dangling nodes (no out-edges) keep receiving rank but emit none —
   *    the standard no-redistribution variant; mass is not conserved and
@@ -77,7 +77,6 @@ object Graph {
       .localCheckpoint(false)
 
     var rank = nodes.select(col("node"), lit(1000000L).as("rank_ppm"))
-    var periodic: Option[DataFrame] = None
     var i = 0
     while (i < iters) {
       i += 1
@@ -98,15 +97,10 @@ object Graph {
       // no per-round truncation is needed; an EAGER checkpoint every 8
       // rounds bounds both plan depth and recompute lineage for large
       // `iters` (50 max) without paying one job per round at small `iters`.
-      // The superseded periodic checkpoint is dropped only after the new
-      // one materialized (the Connected rule: truncated lineage must never
-      // need recomputing).
-      if (i % 8 == 0 && i < iters) {
-        val ck = rank.localCheckpoint(true)
-        periodic.foreach(_.unpersist())
-        periodic = Some(ck)
-        rank = ck
-      }
+      // A superseded checkpoint's blocks stay cached until the
+      // ContextCleaner collects its RDD (`unpersist` does not release a
+      // localCheckpoint).
+      if (i % 8 == 0 && i < iters) rank = rank.localCheckpoint(true)
     }
     rank
   }

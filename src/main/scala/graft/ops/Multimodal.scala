@@ -106,54 +106,6 @@ object Multimodal {
         .otherwise(lit(null).cast("int")).as("height"))
   }
 
-  /** REAL audio-header decode, same pure-column-expression approach as
-    * [[imageHeaderMeta]] (no codec libraries):
-    *
-    *  - WAV: RIFF container ("RIFF" @1, "WAVE" @9); in the canonical
-    *    fmt-chunk-first layout ("fmt " @13) channels / sample rate / bits
-    *    per sample are little-endian ints at offsets 23 / 25 / 35. A
-    *    non-canonical chunk order (rare: LIST before fmt) surfaces nulls —
-    *    the standard header-sniff tradeoff, as with JPEG SOFn.
-    *  - OGG ("OggS") and MP3 ("ID3" tag or FFEx/FFFx frame sync): format
-    *    identified; rate extraction needs frame bit-unpacking, left null.
-    *
-    * Unknown/truncated blobs → format "unknown", null fields.
-    */
-  def audioHeaderMeta(media: Column): Column = {
-    val isWav = (hex(substring(media, 1, 4)) === "52494646") && // "RIFF"
-      (hex(substring(media, 9, 4)) === "57415645")              // "WAVE"
-    val fmtFirst = hex(substring(media, 13, 4)) === "666D7420" // "fmt "
-    val isOgg = hex(substring(media, 1, 4)) === "4F676753"     // "OggS"
-    val isId3 = hex(substring(media, 1, 3)) === "494433"       // "ID3"
-    val isSync = (hex(substring(media, 1, 1)) === "FF") &&
-      substring(hex(substring(media, 2, 1)), 1, 1).isin("E", "F")
-    val isMp3 = isId3 || isSync
-    val wavField = (pos: Int, len: Int) => {
-      // guard the ANSI int cast: a corrupt 4-byte field of 0xFFFFFFFF must
-      // surface null, not throw
-      val v = leAt(media, pos, len)
-      when(isWav && fmtFirst && v <= Int.MaxValue, v.cast("int"))
-        .otherwise(lit(null).cast("int"))
-    }
-    struct(
-      when(isWav, "wav").when(isOgg, "ogg").when(isMp3, "mp3")
-        .otherwise("unknown").as("format"),
-      wavField(23, 2).as("channels"),
-      wavField(25, 4).as("sample_rate"),
-      wavField(35, 2).as("bits_per_sample"))
-  }
-
-  /** REAL audio sample decode for the uncompressed case: 16-bit PCM WAV
-    * payloads walk the full RIFF chunk list (unlike [[audioHeaderMeta]]'s
-    * header sniff, LIST-before-fmt layouts decode fine) and emit
-    * exact-integer per-channel sum / sum-of-squares / peak — see
-    * [[graft.functions.WavSampleStats]]. Compressed payloads (ogg/mp3)
-    * stay with the header-meta surface; their sample decode would need
-    * codecs this environment doesn't ship.
-    */
-  def audioSampleStats(media: Column, maxFrames: Int = 1 << 24): Column =
-    graft.functions.WavSampleStats.wavSampleStats(media, maxFrames)
-
   /** REAL pixel-feature decode: per-channel means + `histBins`-bin
     * histograms, struct format ("bmp24" | "ppm" | "pgm" | "png8" | "gif8"),
     * as a coalesce of three sibling codegen Expressions that each reject
@@ -259,19 +211,6 @@ object Multimodal {
           (i * len / n).as("offset"),
           call_function("substring", media, i * len / n + 1, lit(frameBytes))
             .as("frame")))
-  }
-
-  /** Full multimodal feature pipeline: pack → decode → features table
-    * ready for the Similarity ops. Repartitions by hash of key so feature
-    * extraction (the expensive stage in production) balances across
-    * executors regardless of input file layout.
-    */
-  def featureTable(df: DataFrame, textCol: String, keyCol: String,
-      dim: Int = 64, parts: Int = 0,
-      syntheticFallback: Boolean = false): DataFrame = {
-    val packed = packFromText(df, textCol, keyCol)
-    val balanced = if (parts > 0) packed.repartition(parts, col("media_id")) else packed
-    featuresFromPacked(balanced, dim, syntheticFallback)
   }
 
   /** Feature stage over an already-packed media table ([[packFromText]] /

@@ -83,24 +83,6 @@ object Packing {
       .drop("__o", "__w", "__seg", "__segoff")
   }
 
-  /** Per-pack manifest: how full each pack is and what it spans — the
-    * writer-side companion of [[packByBudget]] (a pack writer consumes one
-    * pack per task; this is its work list). One hash shuffle on pack_id.
-    * `fill` > 1.0 marks packs whose starting document overflows the budget
-    * (concatenate-then-chunk lets long documents straddle packs).
-    */
-  def packManifest(packed: DataFrame, weightCol: String, budget: Long): DataFrame = {
-    require(budget > 0, "budget > 0")
-    packed
-      .groupBy("pack_id")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(coalesce(col(weightCol).cast("long"), lit(0L))).as("total_w"),
-        min("cum_before").as("start_off"))
-      .withColumn("fill",
-        round(col("total_w").cast("double") / budget.toDouble, 4))
-  }
-
   /** Writer-side pack materialization: slice every document into the
     * pack(s) its characters land in under the concatenate-then-chunk
     * layout, ready for a per-pack ordered reassembly. One row per

@@ -350,7 +350,7 @@ object Similarity {
     * assignment is one codegen'd argmax map pass over broadcast centroid
     * literals; the quadratic part sees only narrow (vec_id, cid) rows with
     * a `maxCluster` cap (auditable via [[Dedup.bucketAudit]] on the
-    * assignment — see [[semDedupClusterAudit]]); vectors join back onto
+    * assignment); vectors join back onto
     * candidate ids only; the cosine gate is the fused-loop expression.
     *
     * Centroids are caller-provided so the q118 oracle can replay the exact
@@ -383,18 +383,6 @@ object Similarity {
         cosine(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= threshold)
   }
-
-  /** [[Dedup.bucketAudit]] over the k-means cell assignment — certifies
-    * what (if anything) [[semDedupPairs]]'s `maxCluster` cap dropped.
-    */
-  def semDedupClusterAudit(
-      embeddings: DataFrame,
-      centroids: Seq[Seq[Double]],
-      maxCluster: Int = 10000): DataFrame =
-    Dedup.bucketAudit(
-      realOnly(embeddings).select(col("vec_id").as("id"),
-        ivfAssign(asDouble(col("embedding")), centroids).as("bucket")),
-      "bucket", maxCluster)
 
   /** The full SemDeDup pipeline at scale: Lloyd-refined centroids →
     * within-cluster near-dup pairs → quality-ranked keeper resolution

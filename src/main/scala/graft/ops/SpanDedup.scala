@@ -72,8 +72,8 @@ object SpanDedup {
 
   /** Document pairs sharing ≥ `minShared` fingerprints — i.e. sharing that
     * many distinct ~(k+w−1)-char verbatim regions. Bucket self-join on fp
-    * (ids only); buckets over `maxBucket` dropped ([[spanBucketAudit]]
-    * counts what the cap cost).
+    * (ids only); buckets over `maxBucket` dropped ([[Dedup.bucketAudit]]
+    * over [[fingerprints]] counts what the cap cost).
     */
   def spanPairs(
       df: DataFrame, textCol: String, idCol: String,
@@ -155,14 +155,6 @@ object SpanDedup {
       .withColumn("shared_frac",
         round(col("n_shared_fps").cast("double") / col("n_fps"), 4))
   }
-
-  /** [[Dedup.bucketAudit]] of [[spanPairs]]'s `maxBucket` cap: one row of
-    * (n_buckets, n_oversized_buckets, n_dropped_rows, n_dropped_pairs_ub).
-    */
-  def spanBucketAudit(
-      df: DataFrame, textCol: String, idCol: String,
-      k: Int = 16, w: Int = 8, maxBucket: Int = 200): DataFrame =
-    Dedup.bucketAudit(fingerprints(df, textCol, idCol, k, w), "fp", maxBucket)
 
   /** Exact duplicate-LINE removal (the C4/Dolma paragraph-dedup rule):
     * drop every line whose exact text recurs in ≥ `minDocFreq` distinct

@@ -159,7 +159,7 @@ object TextOps {
     * [[graft.ops.Bpe]] rewrite rule, left-to-right non-overlapping) —
     * closing the reference `reduce_input_size` tokenizer-parity gap: the
     * budget now counts REAL BPE symbols from a learned table
-    * ([[graft.ops.Bpe.learnMerges]] / [[graft.ops.Bpe.learnMergesBatched]]),
+    * ([[graft.ops.Bpe.learnMerges]]),
     * not just pre-token runs. Merges only concatenate adjacent characters,
     * so joining the symbols reconstructs the (control-stripped) input
     * byte-for-byte (lossless, spec-asserted).
@@ -226,15 +226,6 @@ object TextOps {
   def truncateToTokensLearned(
       c: Column, maxTokens: Int, merges: Seq[(String, String)]): Column =
     array_join(slice(bpeTokensLearned(c, merges), 1, maxTokens), "")
-
-  /** Strip markdown code fences — reference `clean_json_string`
-    * (`src/utils/utils.py:20-27`): remove leading ```json / ``` fences and
-    * trailing ``` then trim.
-    */
-  def stripCodeFences(c: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(coalesce(c, lit("")), "^\\s*```(?:json)?\\s*", ""),
-      "\\s*```\\s*$", ""))
 
   /** Date → ISO midnight Z string — reference zod-form conversion
     * (`src/core/models.py:398-401`: date becomes "YYYY-MM-DDT00:00:00Z").

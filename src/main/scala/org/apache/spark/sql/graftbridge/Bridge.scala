@@ -13,14 +13,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a custom Expression under a SQL-callable name (the guide's
-    * `createOrReplaceTempFunction` pattern; sessionState is private[sql]).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.classic.SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

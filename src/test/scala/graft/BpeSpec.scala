@@ -7,7 +7,7 @@ import graft.ops.Bpe
 
 /** BPE merge learning vs an exact scalar replica (same count-argmax
   * semantics, same lexicographic tie-break, same left-to-right
-  * non-overlapping rewrite), plus encode laws.
+  * non-overlapping rewrite), plus the learned-token laws.
   */
 class BpeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -72,65 +72,6 @@ class BpeSpec extends AnyFunSuite {
     val wf = Seq(("aaaa", 3L)).toDF("word", "freq")
     val got = Bpe.learnMerges(wf, nMerges = 10)
     assert(got === Seq(("a", "a"), ("aa", "aa")))
-  }
-
-  test("learnMergesBatched with maxBatch=1 IS learnMerges on an arbitrary " +
-    "hash-generated corpus (exact reduction, not just similar output)") {
-    val texts = (0 until 200).map(i =>
-      s"w${i % 17} tok${i % 7} ab${i % 5}cd common shared text piece ${i % 3}")
-    val wf = Bpe.wordFreqs(texts.toDF("text"), "text")
-    assert(Bpe.learnMergesBatched(wf, nMerges = 10, maxBatch = 1) ===
-      Bpe.learnMerges(wf, nMerges = 10))
-  }
-
-  test("learnMergesBatched equals the sequential learner on corpora where " +
-    "no in-round-created pair outranks a later candidate (disjoint-token " +
-    "batching semantics), across batch sizes") {
-    // four token-disjoint dominant pairs with strictly separated counts,
-    // then second-tier merges built on the first round's outputs
-    val words = Seq(
-      ("ab", 50L), ("cd", 40L), ("ef", 30L), ("gh", 20L),
-      ("abcd", 10L), ("efgh", 5L))
-    val wf = words.toDF("word", "freq")
-    val seqList = Bpe.learnMerges(wf, nMerges = 8)
-    for (batch <- Seq(2, 4, 8)) {
-      val got = Bpe.learnMergesBatched(wf, nMerges = 8, maxBatch = batch)
-      assert(got === seqList, s"maxBatch=$batch diverged: $got vs $seqList")
-    }
-    // and the learned list actually contains the chained merges
-    assert(seqList.take(4) === Seq(("a", "b"), ("c", "d"), ("e", "f"), ("g", "h")))
-    assert(seqList.contains(("ab", "cd")) && seqList.contains(("ef", "gh")))
-  }
-
-  test("batched overlap deferral: candidates sharing a symbol with an " +
-    "accepted merge wait for the next round and the final list still " +
-    "matches sequential (the 'abc' chain case)") {
-    // (a,b) count 60 dominates; (b,c) count 30 shares b -> deferred; after
-    // the round, 'abc' is ['ab','c'] so the next round sees (ab,c) —
-    // sequential takes the identical path
-    val words = Seq(("ab", 30L), ("abc", 30L))
-    val wf = words.toDF("word", "freq")
-    val seqList = Bpe.learnMerges(wf, nMerges = 4)
-    val batched = Bpe.learnMergesBatched(wf, nMerges = 4, maxBatch = 4)
-    assert(batched === seqList)
-    assert(seqList === Seq(("a", "b"), ("ab", "c")))
-  }
-
-  test("encodeWords: tokens concatenate back to the word, merged symbols " +
-    "appear as single tokens, merge order respected") {
-    val wf = Bpe.wordFreqs(corpus.toDF("text"), "text")
-    val merges = Bpe.learnMerges(wf, nMerges = 6)
-    val enc = Bpe.encodeWords(corpus.toDF("text"), "text", merges)
-      .select(col("text"), col("tokens")).as[(String, Seq[String])].collect()
-    enc.foreach { case (text, tokens) =>
-      val words = text.toLowerCase.split("[^a-z]+").filter(_.nonEmpty)
-      assert(tokens.mkString("") === words.mkString(""),
-        "tokens are a partition of the character stream")
-    }
-    // the corpus's dominant word compresses: 'the' x8 must end as ≤2 tokens
-    val theTokens = Bpe.encodeWords(Seq("the").toDF("text"), "text", merges)
-      .select("tokens").as[Seq[String]].head()
-    assert(theTokens.length <= 2, s"expected 'the' compressed, got $theTokens")
   }
 
   test("learned token budget (TextOps.bpeTokensLearned): lossless " +

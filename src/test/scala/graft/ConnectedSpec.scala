@@ -107,4 +107,17 @@ class ConnectedSpec extends AnyFunSuite {
     assert(r1 === r7)
     assert(r1 === ufOracle(edges).toSet)
   }
+
+  test("non-integral ids and an out-of-range localThreshold are rejected, " +
+    "not silently merged into one component") {
+    val strIds = Seq(("x", "y"), ("p", "q")).toDF("a", "b")
+    intercept[IllegalArgumentException](Connected.components(strIds))
+    val dblIds = Seq((1.5, 2.5)).toDF("a", "b")
+    intercept[IllegalArgumentException](Connected.components(dblIds))
+    val ids = Seq((1L, 2L)).toDF("a", "b")
+    intercept[IllegalArgumentException](
+      Connected.components(ids, localThreshold = -1L))
+    intercept[IllegalArgumentException](
+      Connected.components(ids, localThreshold = 1000001L))
+  }
 }

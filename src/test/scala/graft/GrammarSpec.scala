@@ -37,24 +37,6 @@ class GrammarSpec extends AnyFunSuite {
       ("c4", 0, "FIRST_ROLE"), ("c4", 0, "TOOL_CONTEXT")))
   }
 
-  test("segmented variant is row-identical to the plain window on the " +
-    "planted transcript table (hot conversation included)") {
-    val turns = TranscriptGen
-      .transcripts(spark, TranscriptGen.Config(nConvs = 300L, hotTurns = 700L))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("conv_id"), col("turn_idx"), col("prev_state"),
-        col("state"), col("rule"))
-      .as[(String, Int, Option[String], String, String)].collect().sorted.toSeq
-    val plain = rows(Grammar.transitionViolations(
-      turns, "conv_id", Seq("turn_idx"), "role", Grammar.roleRules))
-    // segSize 64 forces many segments on the hot conversation AND mid-bulk
-    // boundaries; -1 turn_idx (NEG plant) lands in its own segment
-    val seg = rows(Grammar.transitionViolationsSegmented(
-      turns, "conv_id", "turn_idx", "role", Grammar.roleRules, segSize = 64))
-    assert(plain.nonEmpty, "planted table should produce grammar violations")
-    assert(seg === plain)
-  }
-
   test("duplicate keys (value-identical clones) yield deterministic pairs") {
     val turns = Seq(
       ("c1", 0, "user"), ("c1", 1, "user"), ("c1", 1, "user"), ("c1", 2, "tool")

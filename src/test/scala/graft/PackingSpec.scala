@@ -68,20 +68,6 @@ class PackingSpec extends AnyFunSuite {
       3L -> ((300L, 0L)), 4L -> ((2800L, 2L))))
   }
 
-  test("packManifest accounts for every document and flags overflow packs") {
-    val df = rows.toDF("id", "w")
-    val packed = Packing.packByBudget(df, "id", "w", budget, 64L)
-    val man = packed.groupBy().agg(count(lit(1))).as[Long].head()
-    val m = Packing.packManifest(packed, "w", budget)
-    val (nDocs, totW) = m.agg(sum("n_docs"), sum("total_w"))
-      .as[(Long, Long)].head()
-    assert(nDocs === man && nDocs === rows.size.toLong)
-    assert(totW === rows.map(_._2).sum)
-    // a pack whose starting doc overflows the budget must show fill > 1
-    val overfull = m.filter(col("fill") > 1.0).count()
-    assert(overfull > 0, "planted 3x-budget weights must overfill some pack")
-  }
-
   // ---- per-group weighted sampling ----
 
   private def race(id: Long, w: Long): Double = {

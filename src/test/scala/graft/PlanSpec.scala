@@ -128,6 +128,17 @@ class PlanSpec extends AnyFunSuite {
     val a = scored.as[Double](org.apache.spark.sql.Encoders.scalaDouble).collect()
     val b = hof.as[Double](org.apache.spark.sql.Encoders.scalaDouble).collect()
     assert(a.zip(b).forall { case (x, y) => math.abs(x - y) < 1e-12 })
+    // the fused dot product (LSH bucketing's projection) agrees with the
+    // HOF fold, and on a hand-computed pair: 2·4 + 3·5 = 23
+    val dots = emb.select(
+      graft.functions.DotProduct.dotProduct(col("embedding"), col("embedding")),
+      Similarity.dot(col("embedding"), col("embedding")))
+      .collect()
+    assert(dots.forall(r => math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))
+    val d = spark.range(1).select(graft.functions.DotProduct.dotProduct(
+      typedlit(Seq(2.0, 3.0)), typedlit(Seq(4.0, 5.0))))
+      .collect()(0).getDouble(0)
+    assert(d === 23.0)
   }
 
   test("flagship violations plan never global-sorts (sortWithinPartitions only)") {
@@ -544,7 +555,7 @@ class PlanSpec extends AnyFunSuite {
     val df = spark.range(10)
       .select(col("id"), col("id").cast("string").cast("binary").as("media"))
     val p = plan(df.select(col("id"),
-      graft.ops.Multimodal.audioSampleStats(col("media")).as("a")))
+      graft.functions.WavSampleStats.wavSampleStats(col("media")).as("a")))
     assert(!p.contains("Exchange"), "sample decode must not shuffle")
     assert(!p.toLowerCase.contains("scalaudf"))
     assert(p.contains("wav_sample_stats"), s"fused expression missing:\n$p")

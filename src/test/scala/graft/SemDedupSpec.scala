@@ -50,18 +50,12 @@ class SemDedupSpec extends AnyFunSuite {
     assert(pairs === Set((0L, 100L), (10L, 110L)))
   }
 
-  test("maxCluster cap drops the oversized cluster's pairs and the audit " +
-    "counts exactly what was dropped") {
+  test("maxCluster cap drops the oversized cluster's pairs") {
     // cluster 0 has 4 members, cluster 1 has 3
     val pairs = Similarity.semDedupPairs(emb, centroids,
       threshold = 0.99, maxCluster = 3)
       .select("cid").as[Int].collect().toSet
     assert(pairs === Set(1), "only the small cluster may pair under the cap")
-    val Seq((nb, no, nd, _)) = Similarity.semDedupClusterAudit(
-        emb, centroids, maxCluster = 3)
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    assert(nb === 2L && no === 1L && nd === 4L,
-      s"audit must count the capped cluster: $nb/$no/$nd")
   }
 
   test("composed semDedup keeps the best-ranked member per duplicate " +
