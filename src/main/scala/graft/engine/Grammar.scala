@@ -59,15 +59,23 @@ object Grammar {
     Rule("UNPRIMED_PURCHASE", (prev, cur) =>
       cur === "purchase" && (prev.isNull || !prev.isin("click", "view"))))
 
+  /** All rules in one pass over the window, the way
+    * [[graft.checks.Checks.compileRules]] compiles a catalog: rows where no
+    * rule fires drop behind one boolean OR, and the rest explode the array
+    * of fired rule names, one output row per (row, rule). An unfired rule
+    * is `""`, not NULL, so `rule` stays a non-nullable column.
+    */
   private def applyRules(
       paired: DataFrame, keep: Seq[String], rules: Seq[Rule]): DataFrame = {
-    val out = keep.map(col) ++ Seq(
-      col("__prev").as("prev_state"), col("__cur").as("state"))
-    rules
-      .map(r => paired
-        .filter(r.fires(col("__prev"), col("__cur")))
-        .select(out :+ lit(r.name).as("rule"): _*))
-      .reduce(_.unionByName(_))
+    val fires = rules.map(r => r.fires(col("__prev"), col("__cur")))
+    val names = rules.zip(fires).map { case (r, f) =>
+      when(f, lit(r.name)).otherwise(lit(""))
+    }
+    paired
+      .filter(fires.reduce(_ || _))
+      .select(keep.map(col) ++ Seq(
+        col("__prev").as("prev_state"), col("__cur").as("state"),
+        explode(array_remove(array(names: _*), "")).as("rule")): _*)
   }
 
   /** Plain variant: one window over `partCol` ordered by `orderCols`.

@@ -200,11 +200,15 @@ object Validator {
       format_string("Dangling conv_id reference: %s", col("conv_id"))
   }
 
-  /** The referential checks' stats gate: hint `df` for broadcast when its
-    * optimizer-estimated size fits `budget`, else leave the strategy to the
-    * planner (SMJ/shuffled-hash, SURVEY.md §2.4).
+  /** The stats gate for a join side meant to be small: hint `df` for
+    * broadcast when its optimizer-estimated size fits `budget`, else leave
+    * the strategy to the planner (SMJ/shuffled-hash, SURVEY.md §2.4). The
+    * referential checks gate the dim with it, and the ANN joins their query
+    * side, so an oversized frame degrades to a shuffle join instead of
+    * OOMing the driver building the broadcast.
     */
-  private def broadcastIfFits(df: DataFrame, budget: Long = 64L << 20): DataFrame =
+  private[graft] def broadcastIfFits(
+      df: DataFrame, budget: Long = 64L << 20): DataFrame =
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget) broadcast(df)
     else df
 

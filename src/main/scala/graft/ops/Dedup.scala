@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * Hamming-band blocking, and word-shingle Jaccard verification. All pure
   * built-in column expressions + relational ops — distributed, no
   * driver-side loops; candidate generation never compares all pairs
-  * (O(n·bands) bucket join, giant buckets capped to bound skew).
+  * (O(n·bands) bucket join, giant buckets capped to bound skew). That
+  * capped join is [[bucketPairs]], the one every near-duplicate operator in
+  * `graft.ops` (here, [[Similarity]], [[SpanDedup]]) runs.
   */
 object Dedup {
 
@@ -112,46 +114,68 @@ object Dedup {
       b => xxhash64(slice(sigCol, b * r + 1, lit(r)), b))
   }
 
-  /** MinHash-LSH near-duplicate candidate pairs with exact word-shingle
-    * Jaccard verification. Returns (id_a, id_b, jaccard) with id_a < id_b and
-    * jaccard >= threshold.
-    *
-    * Scale design: candidates come from a self-equi-join on exploded band
-    * keys (shuffle on band key, never all-pairs); buckets larger than
-    * `maxBucket` are dropped (boilerplate-text buckets — they'd be caught by
-    * exact dedup upstream and would otherwise square the join); the final
-    * Jaccard check intersects the *signatures* (unbiased estimator,
-    * |sig∩|/k) instead of re-joining full shingle sets, keeping the verify
-    * stage O(pairs·k).
-    */
   /** Exploded (id, band-key) rows for the LSH bucket join — shared by the
-    * candidate generator and [[minhashBucketAudit]] so both see the same
-    * buckets.
+    * pair ops and [[minhashBucketAudit]] so both see the same buckets.
     */
   private def minhashBanded(sigs: DataFrame, k: Int, bands: Int): DataFrame =
-    sigs.select(col("id"), explode(bandKeys(col("sig"), k, bands)).as("band"))
+    sigs.select(col("id"), explode(bandKeys(col("sig"), k, bands)).as("bucket"))
 
-  /** One-row audit of a bucket cap: how many buckets the `> maxBucket`
-    * guard dropped and how many member rows (and candidate pairs, as an
-    * upper bound) went with them. The caps in the dedup/ANN family
-    * deliberately drop pathological buckets (boilerplate bands — exact
-    * dedup upstream owns those), but at 100 TB a heavy-boilerplate corpus
-    * could lose real near-dup pairs invisibly; this makes the truncation
-    * auditable. `n_dropped_pairs_ub` is a DOUBLE (bn·(bn−1)/2 over dropped
-    * buckets can exceed long range on planet-scale hot buckets).
+  /** The bucket cap [[bucketPairs]] applies and [[bucketAudit]] reports on:
+    * a bucket of more than `maxBucket` rows is dropped whole.
     */
-  private[ops] def bucketAudit(
-      banded: DataFrame, bucketCol: String, maxBucket: Int): DataFrame =
-    banded.groupBy(bucketCol).agg(count(lit(1)).as("bn"))
+  private def overCap(bn: Column, maxBucket: Int): Column = bn > maxBucket
+
+  /** The capped bucket self-join behind every near-duplicate candidate
+    * generator (minhash and simhash bands, hyperplane buckets, k-means
+    * cells, span fingerprints). From narrow `(id, bucket)` rows it emits
+    * one `(bucket, id_a, id_b)` row per pair with `id_a < id_b` that shares
+    * a bucket of 2..`maxBucket` rows; a pair sharing several buckets
+    * appears once per bucket. Oversized buckets (boilerplate bands, which
+    * exact dedup upstream owns) are dropped BEFORE the self-join, since
+    * they square the pair count; never all-pairs, ids only through the
+    * quadratic part.
+    */
+  private[graft] def bucketPairs(rows: DataFrame, maxBucket: Int): DataFrame = {
+    val ok = rows.join(
+      rows.groupBy("bucket").agg(count(lit(1)).as("bn"))
+        .filter(col("bn") > 1 && !overCap(col("bn"), maxBucket)),
+      Seq("bucket"))
+    ok.as("a")
+      .join(ok.as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+      .select(col("a.bucket").as("bucket"),
+        col("a.id").as("id_a"), col("b.id").as("id_b"))
+  }
+
+  /** Joins column `name` of the per-id frame `byId` (with an `id` column)
+    * onto both sides of a pair frame, as `name_a` and `name_b`.
+    */
+  private[ops] def bothSides(
+      pairs: DataFrame, byId: DataFrame, name: String): DataFrame =
+    pairs
+      .join(byId.select(col("id").as("id_a"), col(name).as(s"${name}_a")), "id_a")
+      .join(byId.select(col("id").as("id_b"), col(name).as(s"${name}_b")), "id_b")
+
+  /** One-row audit of [[bucketPairs]]' cap over the same narrow
+    * `(id, bucket)` rows: how many buckets the cap dropped and how many
+    * member rows (and candidate pairs, as an upper bound) went with them.
+    * The caps in the dedup/ANN family deliberately drop pathological
+    * buckets, but at 100 TB a heavy-boilerplate corpus could lose real
+    * near-dup pairs invisibly; this makes the truncation auditable.
+    * `n_dropped_pairs_ub` is a DOUBLE (bn·(bn−1)/2 over dropped buckets can
+    * exceed long range on planet-scale hot buckets).
+    */
+  private[graft] def bucketAudit(rows: DataFrame, maxBucket: Int): DataFrame = {
+    val over = overCap(col("bn"), maxBucket)
+    rows.groupBy("bucket").agg(count(lit(1)).as("bn"))
       .agg(
         count(lit(1)).as("n_buckets"),
-        coalesce(sum(when(col("bn") > maxBucket, 1L)), lit(0L))
-          .as("n_oversized_buckets"),
-        coalesce(sum(when(col("bn") > maxBucket, col("bn"))), lit(0L))
-          .as("n_dropped_rows"),
-        coalesce(sum(when(col("bn") > maxBucket,
+        coalesce(sum(when(over, 1L)), lit(0L)).as("n_oversized_buckets"),
+        coalesce(sum(when(over, col("bn"))), lit(0L)).as("n_dropped_rows"),
+        coalesce(sum(when(over,
           col("bn").cast("double") * (col("bn") - 1) / 2)), lit(0.0))
           .as("n_dropped_pairs_ub"))
+  }
 
   /** Audit of [[minhashLshPairs]]/[[minhashLshPairsExact]]'s `maxBucket`
     * cap on the same corpus and parameters: emits (n_buckets,
@@ -168,30 +192,24 @@ object Dedup {
       maxBucket: Int = 200): DataFrame =
     bucketAudit(
       minhashBanded(minhashSignatures(df, textCol, keyCol, n, k), k, bands),
-      "band", maxBucket)
+      maxBucket)
 
-  /** LSH candidate pairs from persisted signatures: banded bucket self-join
-    * (ids only), pathological buckets dropped, pairs deduped across bands.
+  /** MinHash-LSH near-duplicate candidate pairs with signature Jaccard
+    * verification. Returns (id_a, id_b, jaccard) with id_a < id_b and
+    * jaccard >= threshold.
+    *
+    * Scale design: candidates come from [[bucketPairs]] over the exploded
+    * band keys, deduped across bands before any signature work (a pair
+    * sharing many bands is verified once); the Jaccard check intersects
+    * the *signatures* (unbiased estimator, |sig∩|/k) instead of re-joining
+    * full shingle sets, keeping the verify stage O(pairs·k).
+    *
+    * The signatures feed the band explode, the bucket count, the join and
+    * the verification, so they are a lazy `localCheckpoint`, computed once
+    * on the first action. Unlike a persist, the checkpoint registers no
+    * CacheManager entry: nothing outlives the returned frame, and no later
+    * plan over the same input is served these rows.
     */
-  private def lshCandidates(
-      sigs: DataFrame, k: Int, bands: Int, maxBucket: Int): DataFrame = {
-    val banded = minhashBanded(sigs, k, bands)
-    // Drop pathological buckets (boilerplate bands) BEFORE the self-join —
-    // they square the candidate count and exact dedup upstream owns them.
-    val ok = banded.join(
-      banded.groupBy("band").agg(count(lit(1)).as("bn"))
-        .filter(col("bn") > 1 && col("bn") <= maxBucket),
-      Seq("band"))
-    // Candidate pairs as a NARROW band-key self-join (ids only), deduped
-    // across bands before any signature work — a pair sharing many bands
-    // is verified once, not `bands` times.
-    ok.as("a")
-      .join(ok.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
   def minhashLshPairs(
       df: DataFrame,
       textCol: String,
@@ -201,14 +219,10 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucket: Int = 200): DataFrame = {
-    // Signatures persisted: they feed the band explode (both self-join
-    // sides), the bucket-size aggregate, and the verification join — without
-    // the persist the whole signature aggregation would re-run ~5 times.
-    val sigs = minhashSignatures(df, textCol, keyCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lshCandidates(sigs, k, bands, maxBucket)
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+    val sigs = minhashSignatures(df, textCol, keyCol, n, k).localCheckpoint(false)
+    val cand = bucketPairs(minhashBanded(sigs, k, bands), maxBucket)
+      .select(col("id_a"), col("id_b")).distinct()
+    bothSides(cand, sigs, "sig")
       .select(col("id_a"), col("id_b"),
         (size(array_intersect(col("sig_a"), col("sig_b"))).cast("double") / k)
           .as("jaccard"))
@@ -233,8 +247,7 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucket: Int = 200): DataFrame = {
-    val sigs = minhashSignatures(df, textCol, keyCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = minhashSignatures(df, textCol, keyCol, n, k).localCheckpoint(false)
     // text joins back to the (rare) candidate pairs as before — but the
     // exact-Jaccard verify is STAGED: words, then shingle arrays, then
     // the intersection, each in its own projection. Inline jaccard()
@@ -243,9 +256,10 @@ object Dedup {
     // WORSE (every doc pays the build and the join moves arrays bigger
     // than the text) — staging after the join computes shingles only
     // for candidates and moves only text.
-    lshCandidates(sigs, k, bands, maxBucket)
-      .join(df.select(col(keyCol).as("id_a"), col(textCol).as("text_a")), "id_a")
-      .join(df.select(col(keyCol).as("id_b"), col(textCol).as("text_b")), "id_b")
+    val cand = bucketPairs(minhashBanded(sigs, k, bands), maxBucket)
+      .select(col("id_a"), col("id_b")).distinct()
+    bothSides(cand, df.select(col(keyCol).as("id"), col(textCol).as("text")),
+        "text")
       .select(col("id_a"), col("id_b"),
         splitWords(col("text_a")).as("__wa"),
         splitWords(col("text_b")).as("__wb"))
@@ -281,11 +295,6 @@ object Dedup {
   /** Hamming distance between two 64-bit simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-duplicate pairs: block on 4×16-bit bands (two hashes
-    * within Hamming distance ≤ 3 of each other share at least one exact
-    * 16-bit band — pigeonhole), then verify Hamming ≤ maxHamming within
-    * blocks. Bucket join, never all-pairs.
-    */
   /** Exploded (id, 16-bit-band key) rows — shared by [[simhashPairs]] and
     * [[simhashBucketAudit]].
     */
@@ -295,7 +304,7 @@ object Dedup {
       explode(array((0 to 3).map(bnd =>
         concat_ws(":", lit(bnd),
           shiftrightunsigned(col("sim"), bnd * 16)
-            .bitwiseAND(lit(0xffffL)))): _*)).as("band"))
+            .bitwiseAND(lit(0xffffL)))): _*)).as("bucket"))
 
   /** [[bucketAudit]] of [[simhashPairs]]'s `maxBucket` cap. */
   def simhashBucketAudit(
@@ -304,29 +313,24 @@ object Dedup {
       keyCol: String,
       maxBucket: Int = 200): DataFrame =
     bucketAudit(simhashBanded(simhashSignatures(df, textCol, keyCol)),
-      "band", maxBucket)
+      maxBucket)
 
+  /** SimHash near-duplicate pairs: block on 4×16-bit bands (two hashes
+    * within Hamming distance ≤ 3 of each other share at least one exact
+    * 16-bit band — pigeonhole), then verify Hamming ≤ maxHamming within
+    * blocks. Candidates come from [[bucketPairs]]; the simhashes are a lazy
+    * `localCheckpoint` for the reason [[minhashLshPairs]] gives.
+    */
   def simhashPairs(
       df: DataFrame,
       textCol: String,
       keyCol: String,
       maxHamming: Int = 3,
       maxBucket: Int = 200): DataFrame = {
-    val sims = simhashSignatures(df, textCol, keyCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = simhashBanded(sims)
-    val ok = banded.join(
-      banded.groupBy("band").agg(count(lit(1)).as("bn"))
-        .filter(col("bn") > 1 && col("bn") <= maxBucket),
-      Seq("band"))
-    val cand = ok.as("a")
-      .join(ok.as("b"),
-        col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
-      .join(sims.select(col("id").as("id_a"), col("sim").as("sim_a")), "id_a")
-      .join(sims.select(col("id").as("id_b"), col("sim").as("sim_b")), "id_b")
+    val sims = simhashSignatures(df, textCol, keyCol).localCheckpoint(false)
+    val cand = bucketPairs(simhashBanded(sims), maxBucket)
+      .select(col("id_a"), col("id_b")).distinct()
+    bothSides(cand, sims, "sim")
       .select(col("id_a"), col("id_b"),
         hamming(col("sim_a"), col("sim_b")).as("hamming"))
       .filter(col("hamming") <= maxHamming)

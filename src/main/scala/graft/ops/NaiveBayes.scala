@@ -47,7 +47,7 @@ object NaiveBayes {
       w => length(w) >= minTokenLen)
 
   /** Per-(id, token) counts — one explode, map-side partial combine. */
-  private def docTf(df: DataFrame, idCol: String, textCol: String,
+  private[graft] def docTf(df: DataFrame, idCol: String, textCol: String,
       labelCol: Column, minTokenLen: Int): DataFrame =
     df.select(col(idCol), labelCol.cast("int").as("__lab"),
         tokens(textCol, minTokenLen).as("__w"))
@@ -103,12 +103,13 @@ object NaiveBayes {
       labelCol: Column, minTotal: Long = 1L, minTokenLen: Int = 3): DataFrame = {
     // ONE tokenization + explode serves both faces: training reduces the
     // per-doc counts by token, scoring weights them back per doc. The tf
-    // frame is persisted because its two consumers prune different columns
-    // (no ReusedExchange possible — verified on the physical plan), and it
-    // is NARROW (id, label, token, count) — far smaller than the text it
-    // replaces re-scanning.
+    // frame is a lazy localCheckpoint because its two consumers prune
+    // different columns (no ReusedExchange possible — verified on the
+    // physical plan), and it is NARROW (id, label, token, count) — far
+    // smaller than the text it replaces re-scanning. Unlike a persist, it
+    // leaves no CacheManager entry behind.
     val tf = docTf(df, idCol, textCol, labelCol, minTokenLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val w = weightsFromDocTf(tf, minTotal)
     val sums = tf
       .join(w, tf("__t") === w("token"))

@@ -118,7 +118,7 @@ object Outliers {
     // LAZY localCheckpoint, not persist (the r5 ADVICE leak): the guard
     // count below materializes it in one job, the require-failure path
     // leaves no CacheManager entry behind, and the blocks are
-    // ContextCleaner-managed once the caller drops the frame — a persist()
+    // ContextCleaner-managed once the caller drops the frame — a persist
     // here pinned executor storage for the JVM lifetime.
     val counts = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
       .localCheckpoint(false)

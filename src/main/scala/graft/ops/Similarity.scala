@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Validator
+
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and a deterministic
   * random-hyperplane LSH bucketed variant as the scale path (candidates come
@@ -41,20 +43,6 @@ object Similarity {
     if (df.columns.contains("embedding_real")) nn.filter(col("embedding_real"))
     else nn
   }
-
-  /** Stats-gated broadcast for the query side of the ANN joins (the
-    * `Validator.orphanViolations` pattern, r5 verdict item): the intended
-    * shape is a small query set riding a broadcast hash join, but a caller
-    * passing a corpus-sized query frame must degrade to a plain shuffle
-    * equi-join instead of OOMing the driver building the broadcast. The
-    * optimizer's size estimate decides; under the threshold the plan is
-    * byte-identical to the unconditional broadcast.
-    */
-  private def broadcastIfSmall(
-      df: DataFrame, thresholdBytes: Long = 64L << 20): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= thresholdBytes)
-      broadcast(df)
-    else df
 
   /** Exact brute-force top-k: broadcast the (small) query set against the
     * full embedding table, rank per query. The join is broadcast-nested-loop
@@ -122,7 +110,7 @@ object Similarity {
       .withColumn("bucket", explode(probes(lshBucket(col("qv"), planes))))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("vec_id"))
-    e.join(broadcastIfSmall(q), Seq("bucket"))
+    e.join(Validator.broadcastIfFits(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("v"), col("qv")).as("cos"))
@@ -257,7 +245,7 @@ object Similarity {
     val q = realOnly(queries).select(col("vec_id").as("query_id"),
       asDouble(col("embedding")).as("qv"))
       .withColumn("cid", explode(probeList))
-    e.join(broadcastIfSmall(q), Seq("cid"))
+    e.join(Validator.broadcastIfFits(q), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("v"), col("qv")).as("cos"))
@@ -304,11 +292,15 @@ object Similarity {
     Dedup.bucketAudit(
       realOnly(embeddings).select(col("vec_id").as("id"),
         lshBucket(asDouble(col("embedding")), planes).as("bucket")),
-      "bucket", maxBucket)
+      maxBucket)
   }
 
   /** Embedding near-duplicate pairs: LSH-bucket self-join then exact cosine
-    * verify — the embedding-space member of the dedup family.
+    * verify — the embedding-space member of the dedup family. Candidates
+    * come from [[Dedup.bucketPairs]] over narrow (id, bucket) rows and the
+    * vectors join back onto the pairs after, so vectors never pass through
+    * the quadratic part. The bucketed vectors are a lazy `localCheckpoint`
+    * (see [[Dedup.minhashLshPairs]]): nothing is left cached.
     */
   def cosineNearDupPairs(
       embeddings: DataFrame,
@@ -318,24 +310,12 @@ object Similarity {
       maxBucket: Int = 2000): DataFrame = {
     val planes = hyperplanes(dim, nBits)
     val e = realOnly(embeddings)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .select(col("vec_id").as("id"), asDouble(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v"), planes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // narrow candidate generation (ids only), vectors joined back after —
-    // same shape as Dedup.minhashLshPairs, avoids shipping vectors through
-    // the quadratic part
-    val ids = e.select(col("vec_id"), col("bucket"))
-    val ok = ids.join(
-      ids.groupBy("bucket").agg(count(lit(1)).as("bn"))
-        .filter(col("bn") > 1 && col("bn") <= maxBucket),
-      Seq("bucket"))
-    ok.as("a")
-      .join(ok.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"), cosine(col("va"), col("vb")).as("cos"))
+      .localCheckpoint(false)
+    Dedup.bothSides(
+        Dedup.bucketPairs(e.select(col("id"), col("bucket")), maxBucket), e, "v")
+      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -348,10 +328,11 @@ object Similarity {
     *
     * Scale shape — the same discipline as every dedup-family op:
     * assignment is one codegen'd argmax map pass over broadcast centroid
-    * literals; the quadratic part sees only narrow (vec_id, cid) rows with
-    * a `maxCluster` cap (auditable via [[Dedup.bucketAudit]] on the
-    * assignment); vectors join back onto
-    * candidate ids only; the cosine gate is the fused-loop expression.
+    * literals, lazily checkpointed; the quadratic part is
+    * [[Dedup.bucketPairs]] over narrow (id, cid) rows with a `maxCluster`
+    * cap (auditable via [[Dedup.bucketAudit]] on the assignment); vectors
+    * join back onto candidate ids only; the cosine gate is the fused-loop
+    * expression.
     *
     * Centroids are caller-provided so the q118 oracle can replay the exact
     * assignment in DuckDB (fixed literal centroids); the scale path gets
@@ -364,23 +345,13 @@ object Similarity {
       maxCluster: Int = 10000): DataFrame = {
     require(centroids.nonEmpty, "centroids required")
     val e = realOnly(embeddings)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("cid", ivfAssign(col("v"), centroids))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ids = e.select(col("vec_id"), col("cid"))
-    val ok = ids.join(
-      ids.groupBy("cid").agg(count(lit(1)).as("cn"))
-        .filter(col("cn") > 1 && col("cn") <= maxCluster),
-      Seq("cid"))
-    ok.as("a")
-      .join(ok.as("b"),
-        col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.cid").as("cid"),
-        col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("cid"), col("id_a"), col("id_b"),
-        cosine(col("va"), col("vb")).as("cos"))
+      .select(col("vec_id").as("id"), asDouble(col("embedding")).as("v"))
+      .withColumn("bucket", ivfAssign(col("v"), centroids))
+      .localCheckpoint(false)
+    Dedup.bothSides(
+        Dedup.bucketPairs(e.select(col("id"), col("bucket")), maxCluster), e, "v")
+      .select(col("bucket").as("cid"), col("id_a"), col("id_b"),
+        cosine(col("v_a"), col("v_b")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 

@@ -81,29 +81,21 @@ object SpanDedup {
       maxBucket: Int = 200): DataFrame =
     pairsFrom(fingerprints(df, textCol, idCol, k, w), minShared, maxBucket)
 
-  /** The shared pair topology behind both fingerprint faces: bucket
-    * self-join on fp (ids only), `maxBucket` capped, pair = docs sharing
-    * ≥ `minShared` distinct fingerprints. Fingerprints are persisted
-    * first (the [[Dedup.lshCandidates]] rule): they feed the bucket-count
-    * aggregate AND both sides of the self-join, so without the persist the
-    * per-character fingerprint scan re-runs 4× — at 10^12 rows that is the
-    * whole job cost three times over.
+  /** The shared pair topology behind both fingerprint faces:
+    * [[Dedup.bucketPairs]] on fp (ids only), `maxBucket` capped, pair = docs
+    * sharing ≥ `minShared` distinct fingerprints. The fingerprints are a
+    * lazy `localCheckpoint` (see [[Dedup.minhashLshPairs]]): they feed the
+    * bucket-count aggregate AND the join, and unmaterialized the
+    * per-character fingerprint scan would re-run on each.
     */
   private def pairsFrom(
-      fpsRaw: DataFrame, minShared: Int, maxBucket: Int): DataFrame = {
-    val fps = fpsRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ok = fps.join(
-      fps.groupBy("fp").agg(count(lit(1)).as("bn"))
-        .filter(col("bn") > 1 && col("bn") <= maxBucket),
-      Seq("fp"))
-    ok.as("a")
-      .join(ok.as("b"),
-        col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count_distinct(col("a.fp")).as("n_shared"))
+      fps: DataFrame, minShared: Int, maxBucket: Int): DataFrame =
+    Dedup.bucketPairs(
+        fps.select(col("id"), col("fp").as("bucket")).localCheckpoint(false),
+        maxBucket)
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count_distinct(col("bucket")).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
 
   /** Fast-path fingerprints via the native one-pass rolling-hash
     * expression ([[graft.functions.WinnowFingerprints]]): same output
@@ -140,10 +132,9 @@ object SpanDedup {
   def spanIncidence(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 16, w: Int = 8): DataFrame = {
-    // persisted for the same reason as [[pairsFrom]]: fps feeds both the
-    // frequency aggregate and the join-back
-    val fps = fingerprints(df, textCol, idCol, k, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // checkpointed for the same reason as [[pairsFrom]]: fps feeds both
+    // the frequency aggregate and the join-back
+    val fps = fingerprints(df, textCol, idCol, k, w).localCheckpoint(false)
     val shared = fps.groupBy("fp").agg(count(lit(1)).as("nf"))
       .filter(col("nf") > 1)
       .select(col("fp"), lit(1L).as("is_shared"))
@@ -155,6 +146,18 @@ object SpanDedup {
       .withColumn("shared_frac",
         round(col("n_shared_fps").cast("double") / col("n_fps"), 4))
   }
+
+  /** [[dedupLines]]' step 1: `(id, pos, h)` for every line of at least
+    * `minLineLen` trimmed chars, `h` the line's 60-bit md5 prefix. Map-only.
+    */
+  private[graft] def lineHashes(
+      df: DataFrame, textCol: String, idCol: String, minLineLen: Int)
+      : DataFrame =
+    df.select(col(idCol).as("id"), posexplode(split(
+        coalesce(col(textCol), lit("")), "\n", -1)).as(Seq("pos", "line")))
+      .filter(length(trim(col("line"))) >= minLineLen)
+      .select(col("id"), col("pos"),
+        conv(substring(md5(col("line")), 1, 15), 16, 10).cast("long").as("h"))
 
   /** Exact duplicate-LINE removal (the C4/Dolma paragraph-dedup rule):
     * drop every line whose exact text recurs in ≥ `minDocFreq` distinct
@@ -188,15 +191,9 @@ object SpanDedup {
     require(minDocFreq >= 2L, "minDocFreq >= 2")
     val t = coalesce(col(textCol), lit(""))
     val id = col(idCol)
-
-    // persisted: feeds the frequency aggregate AND the drop-position join
-    // (the [[pairsFrom]] rule — unpersisted, the explode+hash scan re-runs)
-    val lines = df.select(
-        id.as("id"), posexplode(split(t, "\n", -1)).as(Seq("pos", "line")))
-      .filter(length(trim(col("line"))) >= minLineLen)
-      .select(col("id"), col("pos"),
-        conv(substring(md5(col("line")), 1, 15), 16, 10).cast("long").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // checkpointed: feeds the frequency aggregate AND the drop-position
+    // join (the [[pairsFrom]] rule — otherwise the explode+hash scan re-runs)
+    val lines = lineHashes(df, textCol, idCol, minLineLen).localCheckpoint(false)
 
     val frequent = lines.groupBy("h")
       .agg(count_distinct(col("id")).as("ndocs"))

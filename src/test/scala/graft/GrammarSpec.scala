@@ -25,9 +25,11 @@ class GrammarSpec extends AnyFunSuite {
       ("c3", 0, "user"), ("c3", 1, "tool"),
       ("c4", 0, "tool")
     ).toDF("conv_id", "turn_idx", "role")
-    val got = Grammar
+    val fired = Grammar
       .transitionViolations(turns, "conv_id", Seq("turn_idx"), "role",
         Grammar.roleRules)
+    assert(!fired.schema("rule").nullable)
+    val got = fired
       .select(col("conv_id"), col("turn_idx"), col("rule"))
       .as[(String, Int, String)].collect().toSet
     assert(got === Set(

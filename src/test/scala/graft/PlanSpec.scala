@@ -368,6 +368,14 @@ class PlanSpec extends AnyFunSuite {
     val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
     assert(exchanges.nonEmpty)
     assert(!exchanges.exists(_.contains("text#")), s"text shuffled in:\n$p")
+    // the tokenize + per-doc count stage sits behind a checkpoint in the
+    // plan above, so its own plan is inspected too
+    val tf = plan(graft.ops.NaiveBayes.docTf(
+      docs, "doc_id", "text", col("lab"), 3))
+    val tfExchanges = tf.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(tfExchanges.nonEmpty, s"expected the per-doc count shuffle:\n$tf")
+    assert(!tfExchanges.exists(_.contains("text#")),
+      s"text shuffled in the tokenize stage:\n$tf")
   }
 
   test("trigram LM scoring: model lookups are broadcast joins and document " +
@@ -397,6 +405,10 @@ class PlanSpec extends AnyFunSuite {
     assert(!exchanges.exists(_.contains("text#")),
       s"text shuffled into the grammar window:\n$p")
     assert(!p.toLowerCase.contains("scalaudf"))
+    // every rule is compiled into one pass over ONE window, not a
+    // filtered copy of the window per rule
+    val windows = """(?m)^\(\d+\) Window\s*$""".r.findAllIn(p).size
+    assert(windows === 1, s"expected one Window operator, got $windows:\n$p")
   }
 
   test("bucket audits reduce to one row without shuffling member payloads: " +
@@ -455,6 +467,12 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges.nonEmpty, s"expected line-hash aggregation shuffles:\n$p")
     assert(!exchanges.exists(_.contains("t#")),
       s"document text entered a hash exchange:\n$p")
+    // the line-hash stage sits behind a checkpoint in the plan above: it
+    // must be map-only and hand on (id, pos, hash) rows, never text
+    val lines = graft.ops.SpanDedup.lineHashes(df, "t", "doc_id", 15)
+    val lp = plan(lines)
+    assert(!lp.contains("Exchange"), s"line hashing shuffled:\n$lp")
+    assert(lines.columns.toSeq === Seq("id", "pos", "h"))
   }
 
   test("stripHtml and urlParts are map-only codegen string chains — " +
