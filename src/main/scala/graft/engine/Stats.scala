@@ -27,6 +27,15 @@ object Stats {
       case _           => None
     }
 
+  /** One row per column of `df` (all columns when `columns` is empty):
+    * column, n, null_rate, n_distinct_approx, min, max, q_tdigest. Every
+    * field but `q_tdigest` is exact or an order-independent sketch.
+    * `q_tdigest` depends on the order in which the partial t-digests merge,
+    * which the scheduler picks, so its quantiles differ from run to run on
+    * the same input and `t03_col_stats` cannot be byte-compared between
+    * commits. StatsDriftSpec's cross-check against exact `quantile_cont`
+    * values is what bounds its error.
+    */
   def colStats(
       df: DataFrame,
       columns: Seq[String] = Nil,

@@ -1,14 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import Bytes._
 
 /** REAL GIF pixel decode with nothing but the JVM: GIF's only compression
   * is LZW with ≤12-bit codes — a public, fully-specified algorithm (GIF89a
@@ -18,73 +10,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * envelope at zero cost: channel means and histograms are order-invariant,
   * so the 4-pass row shuffle never needs undoing.
   *
-  * Same Catalyst surface as [[PngPixelStats]]: a codegen'd custom
-  * `Expression` whose generated Java is one static call, keeping the
-  * operator inside whole-stage codegen with no UDF registration. Emits the
-  * exact struct shape of [[graft.ops.Multimodal.pixelStats]] (format
-  * "gif8"), so the three decode paths are drop-in interchangeable
-  * downstream.
+  * Allocation-lean: the LZW tables are three flat arrays, and output
+  * indices stream through the palette straight into the [[PixelAcc]] that
+  * [[PixelStats]] hands every image decoder (no full pixel buffer for the
+  * common non-KwKwK path beyond the 4096-deep expansion stack).
   *
-  * Honest nulls, never throws: wrong signature, no image descriptor, a
-  * pixel index outside the active palette, truncated sub-blocks or LZW
-  * stream, dims over `maxPixels` — all decode to null. Transparency (a
-  * GIF89a graphic-control flag) is deliberately ignored: stats cover every
-  * frame pixel through the palette, transparent or not, matching how the
-  * PNG path ignores the alpha channel.
-  */
-case class GifPixelStats(child: Expression, histBins: Int, maxPixels: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = PngDecode.statsType(histBins)
-  override def nullable: Boolean = true
-  override def prettyName: String = "gif_pixel_stats"
-
-  override protected def nullSafeEval(input: Any): Any =
-    GifDecode.stats(input.asInstanceOf[Array[Byte]], histBins, maxPixels)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.GifDecode.stats($c, $histBins, $maxPixels);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GifPixelStats = copy(child = newChild)
-}
-
-object GifPixelStats {
-  def gifPixelStats(media: Column, histBins: Int, maxPixels: Int): Column =
-    Bridge.column(GifPixelStats(Bridge.expression(media), histBins, maxPixels))
-}
-
-/** The decode — a static helper so the generated Java is one call.
-  * Allocation-lean: the LZW tables are three flat arrays, output indices
-  * stream straight into the channel accumulators (no full pixel buffer for
-  * the common non-KwKwK path beyond the 4096-deep expansion stack).
+  * Honest nulls: wrong signature, no image descriptor, a pixel index
+  * outside the active palette, truncated sub-blocks or LZW stream, dims
+  * over `maxPixels` — all decode to null. Transparency (a GIF89a
+  * graphic-control flag) is deliberately ignored: stats cover every frame
+  * pixel through the palette, transparent or not, matching how the PNG
+  * path ignores the alpha channel.
   */
 object GifDecode {
 
-  private def u8(b: Byte): Int = b & 0xff
-
-  private def le16(a: Array[Byte], off: Int): Int =
-    u8(a(off)) | (u8(a(off + 1)) << 8)
-
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** null unless `bytes` is a decodable GIF87a/89a first frame within the
-    * pixel budget. Never throws — corrupt bytes are data, not errors.
+  /** "gif8", or null unless `bytes` is a decodable GIF87a/89a first frame
+    * within the pixel budget.
     */
-  def stats(bytes: Array[Byte], histBins: Int, maxPixels: Int): InternalRow =
-    try decode(bytes, histBins, maxPixels)
-    catch { case _: Exception => null }
-
-  private def decode(
-      bytes: Array[Byte], histBins: Int, maxPixels: Int): InternalRow = {
-    if (bytes == null || bytes.length < 14) return null
+  def decode(bytes: Array[Byte], maxPixels: Int, acc: PixelAcc): String = {
+    if (bytes.length < 14) return null
     // "GIF87a" or "GIF89a"
     if (bytes(0) != 'G' || bytes(1) != 'I' || bytes(2) != 'F' ||
       bytes(3) != '8' || (bytes(4) != '7' && bytes(4) != '9') ||
@@ -146,8 +90,8 @@ object GifDecode {
 
     // LZW decode (GIF89a spec appendix F): prefix/suffix tables, LSB-first
     // bit packing, clear/EOI codes, 12-bit cap with deferred-clear reuse.
-    // Pixel indices stream straight into the channel accumulators — row
-    // order (hence interlacing) is irrelevant to means and histograms.
+    // Pixel indices stream straight into the accumulator — row order
+    // (hence interlacing) is irrelevant to means and histograms.
     val clear = 1 << minCode
     val eoi = clear + 1
     val prefix = new Array[Int](4096)
@@ -157,20 +101,10 @@ object GifDecode {
     var codeSize = minCode + 1
     var prev = -1
 
-    var sr = 0L; var sg = 0L; var sb = 0L
-    val hr = new Array[Long](histBins)
-    val hg = new Array[Long](histBins)
-    val hb = new Array[Long](histBins)
-    var emitted = 0L
     def emit(idx: Int): Boolean = {
-      if (idx >= palSize || emitted >= n) return false
+      if (idx >= palSize || acc.count >= n) return false
       val o = palOff + idx * 3
-      val rv = u8(bytes(o)); val gv = u8(bytes(o + 1)); val bv = u8(bytes(o + 2))
-      sr += rv; sg += gv; sb += bv
-      hr(rv * histBins / 256) += 1
-      hg(gv * histBins / 256) += 1
-      hb(bv * histBins / 256) += 1
-      emitted += 1
+      acc.add(u8(bytes(o)), u8(bytes(o + 1)), u8(bytes(o + 2)))
       true
     }
     // expand `code` through the prefix chain onto the stack, emit in order;
@@ -193,7 +127,7 @@ object GifDecode {
     var bitPos = 0
     val totalBits = z.length * 8
     var ended = false
-    while (!ended && emitted < n) {
+    while (!ended && acc.count < n) {
       if (bitPos + codeSize > totalBits) return null // truncated stream
       var v = 0; var i = 0
       while (i < codeSize) {
@@ -231,13 +165,7 @@ object GifDecode {
         prev = v
       }
     }
-    if (emitted < n) return null // stream ended early
-
-    val nd = n.toDouble
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString("gif8"), n,
-      round4(sr / nd), round4(sg / nd), round4(sb / nd),
-      new GenericArrayData(hr), new GenericArrayData(hg),
-      new GenericArrayData(hb)))
+    if (acc.count < n) return null // stream ended early
+    "gif8"
   }
 }

@@ -1,25 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.DataType
-import org.apache.spark.unsafe.types.UTF8String
+import Bytes.u8
 
-/** REAL baseline JPEG pixel decode with nothing but the JVM — the last
-  * common image format whose pixels the engine could not read
-  * (BMP/PPM/PGM via [[RasterPixelStats]], PNG via [[PngPixelStats]], GIF
-  * via [[GifPixelStats]] all predate it). One fused pass per blob:
+/** REAL baseline JPEG pixel decode with nothing but the JVM, one of the
+  * four formats [[PixelStats]] dispatches to. One fused pass per blob:
   * marker walk (DQT/DHT/SOF/DRI/SOS) → canonical huffman entropy decode
   * with byte-unstuffing and restart markers → dequantize + dezigzag →
   * separable float IDCT per 8×8 block → nearest-neighbor chroma upsample →
-  * JFIF YCbCr→RGB → channel means + histograms, emitted in exactly the
-  * struct shape of the sibling decoders so the four paths are drop-in
-  * interchangeable downstream.
+  * JFIF YCbCr→RGB → the [[PixelAcc]] every image decoder feeds.
   *
   * Supported envelope (covering the overwhelming majority of web JPEGs):
   * huffman-coded DCT, 8-bit precision, 1 component (grayscale) or 3
@@ -31,44 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * accumulated into per-component coefficient buffers (DC first/refine,
   * AC first with EOB runs, AC refinement with inline correction bits —
   * see [[JpegDecode.progressiveScan]]). Arithmetic coding, 12-bit,
-  * hierarchical and CMYK files decode to null — honest nulls, never
-  * throws: corrupt bytes are data, not errors, at 100 TB.
+  * hierarchical and CMYK files decode to null — honest nulls: corrupt
+  * bytes are data, not errors, at 100 TB.
   *
-  * Catalyst surface: a custom codegen `Expression` (same pattern as
-  * [[PngPixelStats]]) — the generated code is one static call, so the
-  * operator stays inside whole-stage codegen with no UDF registration.
-  */
-case class JpegPixelStats(child: Expression, histBins: Int, maxPixels: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = PngDecode.statsType(histBins)
-  override def nullable: Boolean = true
-  override def prettyName: String = "jpeg_pixel_stats"
-
-  override protected def nullSafeEval(input: Any): Any =
-    JpegDecode.stats(input.asInstanceOf[Array[Byte]], histBins, maxPixels)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.JpegDecode.stats($c, $histBins, $maxPixels);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): JpegPixelStats = copy(child = newChild)
-}
-
-object JpegPixelStats {
-  def jpegPixelStats(media: Column, histBins: Int, maxPixels: Int): Column =
-    Bridge.column(JpegPixelStats(Bridge.expression(media), histBins, maxPixels))
-}
-
-/** The decode itself — a plain static helper so the generated Java is one
-  * call. Allocation discipline: one coefficient block + one IDCT scratch
-  * reused across blocks, component planes sized once from the (capped)
-  * MCU-padded dims, primitive accumulators.
+  * Allocation discipline: one coefficient block + one IDCT scratch reused
+  * across blocks, component planes sized once from the (capped) MCU-padded
+  * dims.
   */
 object JpegDecode {
 
@@ -93,12 +49,6 @@ object JpegDecode {
     val c = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
     c * math.cos((2 * x + 1) * u * math.Pi / 16.0)
   }
-
-  private def u8(b: Byte): Int = b & 0xff
-
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
   private def clamp255(v: Int): Int = if (v < 0) 0 else if (v > 255) 255 else v
 
@@ -180,10 +130,6 @@ object JpegDecode {
   private def extend(v: Int, s: Int): Int =
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
-  def stats(bytes: Array[Byte], histBins: Int, maxPixels: Int): InternalRow =
-    try decode(bytes, histBins, maxPixels)
-    catch { case _: Exception => null }
-
   // one frame component: id, sampling factors, quant table id, and (after
   // SOS) huffman table ids + its decoded plane
   private final class Comp(val id: Int, val h: Int, val v: Int, val tq: Int) {
@@ -200,9 +146,11 @@ object JpegDecode {
     var nbw = 0; var nbh = 0 // non-interleaved (ceil) block grid
   }
 
-  private def decode(
-      bytes: Array[Byte], histBins: Int, maxPixels: Int): InternalRow = {
-    if (bytes == null || bytes.length < 4) return null
+  /** "jpeg", or null unless `bytes` is a JPEG inside the envelope above
+    * and the pixel budget. Throws on corrupt entropy data.
+    */
+  def decode(bytes: Array[Byte], maxPixels: Int, acc: PixelAcc): String = {
+    if (bytes.length < 4) return null
     if (u8(bytes(0)) != 0xff || u8(bytes(1)) != 0xd8) return null // SOI
 
     val qt = new Array[Array[Int]](4) // natural order, per table id
@@ -484,10 +432,6 @@ object JpegDecode {
     }
 
     // ---- upsample + color convert + accumulate ----
-    var sr = 0L; var sg = 0L; var sb = 0L
-    val hr = new Array[Long](histBins)
-    val hg = new Array[Long](histBins)
-    val hb = new Array[Long](histBins)
     val gray = comps.length == 1
     val yC = comps(0)
     val cbC = if (gray) null else comps(1)
@@ -508,20 +452,12 @@ object JpegDecode {
             yv - 0.344136 * (cb - 128) - 0.714136 * (cr - 128) + 0.5).toInt)
           bv = clamp255(math.floor(yv + 1.772 * (cb - 128) + 0.5).toInt)
         }
-        sr += rv; sg += gv; sb += bv
-        hr(rv * histBins / 256) += 1
-        hg(gv * histBins / 256) += 1
-        hb(bv * histBins / 256) += 1
+        acc.add(rv, gv, bv)
         x += 1
       }
       y += 1
     }
-    val nd = (w.toLong * h).toDouble
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString("jpeg"), w.toLong * h,
-      round4(sr / nd), round4(sg / nd), round4(sb / nd),
-      new GenericArrayData(hr), new GenericArrayData(hg),
-      new GenericArrayData(hb)))
+    "jpeg"
   }
 
   /** Decode ONE progressive scan (T.81 G.1.2: spectral selection +

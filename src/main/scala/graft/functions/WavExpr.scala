@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** PCM sample statistics for uncompressed 16-bit WAV payloads — the audio
-  * sibling of [[RasterPixelStats]]/[[PngPixelStats]]: a fused codegen
-  * Expression that walks the RIFF chunk list (no fixed offsets — LIST or
-  * extra chunks before `fmt `/`data` are legal and handled), then
+  * sibling of [[PixelStats]]: a fused codegen Expression that walks the
+  * RIFF chunk list (no fixed offsets — LIST or extra chunks before
+  * `fmt `/`data` are legal and handled), then
   * accumulates EXACT-INTEGER per-channel statistics over the interleaved
   * little-endian i16 frames: sum, sum of squares, and peak |amplitude|.
   * Derived floats (mean, RMS in dBFS) are the caller's one division away —
@@ -55,6 +55,7 @@ object WavSampleStats {
 }
 
 object WavDecode {
+  import Bytes.{le16, le32}
 
   val statsType: StructType = StructType(Seq(
     StructField("format", StringType),
@@ -67,15 +68,6 @@ object WavDecode {
     StructField("sum1", LongType, nullable = true),
     StructField("sumsq1", LongType, nullable = true),
     StructField("peak1", IntegerType, nullable = true)))
-
-  private def u8(b: Byte): Int = b & 0xff
-
-  private def le32(a: Array[Byte], off: Int): Long =
-    (u8(a(off)).toLong | (u8(a(off + 1)).toLong << 8) |
-      (u8(a(off + 2)).toLong << 16) | (u8(a(off + 3)).toLong << 24)) & 0xffffffffL
-
-  private def le16(a: Array[Byte], off: Int): Int =
-    u8(a(off)) | (u8(a(off + 1)) << 8)
 
   private def i16(a: Array[Byte], off: Int): Int = le16(a, off).toShort.toInt
 

@@ -56,7 +56,7 @@ object CorpusPipeline {
     * this JVM so far ([[annotateManaged]] caches are excluded — their
     * [[CacheHandle]] owns them). Unlike `spark.catalog.clearCache()` this
     * drops ONLY CorpusPipeline's caches, never the caller's own — call it
-    * once the annotated/built frame has been fully consumed (long-lived
+    * once the annotated frame has been fully consumed (long-lived
     * sessions that build many corpora would otherwise accumulate
     * MEMORY_AND_DISK blocks until session end). Sessions running pipelines
     * CONCURRENTLY should prefer [[annotateManaged]]: this global form
@@ -112,8 +112,10 @@ object CorpusPipeline {
       // mass from skewing the model toward the very junk it should catch.
       lmMaxBits: Option[Double] = None,
       lmMinFrac: Double = 1e-7,
+      // Mixture keep-thresholds per stratum, else `mixtureDefault`; a
+      // stratum with neither keeps every document.
       mixtureRates: Map[String, String] = Map.empty,
-      mixtureDefault: String = "ffff", // keep everything unless configured
+      mixtureDefault: Option[String] = None,
       splitCuts: Seq[(String, String)] = Seq("cccc" -> "train", "e666" -> "val"),
       splitElse: String = "test",
       // benchmarking escape hatch: false re-creates the round-2
@@ -250,13 +252,16 @@ object CorpusPipeline {
     // pre-salt train/val/test membership. Deliberate: the decorrelation fix
     // outweighs cross-version reproducibility, and corpus membership should
     // be pinned by the emitted split column, not by re-running the build.
-    require((cfg.mixtureRates.values.toSeq :+ cfg.mixtureDefault)
+    require((cfg.mixtureRates.values ++ cfg.mixtureDefault)
       .forall(_.matches("[0-9a-f]{4}")),
       "mixture thresholds = 4 lowercase hex chars")
-    val mixThr = cfg.mixtureRates.foldLeft(lit(cfg.mixtureDefault)) {
+    val mixThr = cfg.mixtureRates.foldLeft(
+        cfg.mixtureDefault.fold(lit(null).cast("string"))(lit)) {
       case (acc, (k, v)) => when(col(stratumCol) === k, lit(v)).otherwise(acc)
     }
-    val inMixture =
+    // no threshold keeps the document: even "ffff" drops the 1 in 65,536
+    // whose salted md5 starts with ffff
+    val inMixture = mixThr.isNull ||
       substring(md5(concat(id.cast("string"), lit(":mixture"))), 1, 4) < mixThr
     val split = Sampling.splitColumn(
       concat(id.cast("string"), lit(":split")), cfg.splitCuts, cfg.splitElse)
@@ -285,14 +290,6 @@ object CorpusPipeline {
         "__boiler", "__lm")
     (out, tracked.toSeq)
   }
-
-  /** The surviving corpus with split labels. */
-  def build(
-      docs: DataFrame, bench: DataFrame, textCol: String, keyCol: String,
-      stratumCol: String, cfg: Config = Config()): DataFrame =
-    annotate(docs, bench, textCol, keyCol, stratumCol, cfg)
-      .filter(col("drop_stage").isNull)
-      .drop("drop_stage")
 
   /** Funnel report: docs dropped per stage + survivors per split — ONE
     * aggregate over the annotated frame.

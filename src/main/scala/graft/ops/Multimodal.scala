@@ -11,16 +11,11 @@ import org.apache.spark.sql.functions._
   * the column wiring are exactly what a production pipeline needs. Header
   * metadata (format, width, height) is decoded for REAL from the blob bytes
   * by [[imageHeaderMeta]] — pure column expressions, no codec libraries.
-  * Pixel-level features are REAL for uncompressed raster formats (BMP
-  * 24-bit, PPM P6, PGM P5 — [[pixelStats]]: per-channel means and
-  * histograms, no codec needed) AND for non-interlaced 8-bit
-  * gray/gray+alpha/RGB/RGBA PNG (IDAT is a zlib stream and the JDK ships an
-  * Inflater — [[graft.functions.PngDecode]]) and for GIF87a/89a first
-  * frames (LZW ≤12-bit codes, decoded by the pure-JVM
-  * [[graft.functions.GifDecode]]; interlacing is free because channel
-  * stats are order-invariant) AND for baseline sequential huffman JPEG
-  * (full marker-walk → entropy decode → IDCT → YCbCr, pure JVM —
-  * [[graft.functions.JpegDecode]]) — all codegen'd custom Expressions.
+  * Pixel-level features are REAL too: [[pixelStats]] is one codegen'd
+  * Expression, [[graft.functions.PixelStats]], whose pure-JVM decoders
+  * cover BMP 24-bit, PPM P6, PGM P5, non-interlaced 8-bit PNG (the JDK
+  * ships an Inflater), GIF87a/89a first frames (LZW) and huffman-coded
+  * sequential and progressive JPEG.
   * Only out-of-envelope payloads (arithmetic-coded/12-bit JPEG, compressed
   * audio samples) have no real decode: this container has no codec
   * libraries, so those rows surface NULL features (or, on explicit
@@ -107,22 +102,25 @@ object Multimodal {
   }
 
   /** REAL pixel-feature decode: per-channel means + `histBins`-bin
-    * histograms, struct format ("bmp24" | "ppm" | "pgm" | "png8" | "gif8"),
-    * as a coalesce of three sibling codegen Expressions that each reject
-    * foreign signatures in a few byte compares:
+    * histograms, struct format ("bmp24" | "ppm" | "pgm" | "png8" | "gif8" |
+    * "jpeg"), as one codegen'd Expression,
+    * [[graft.functions.PixelStats]]. The blob's first byte picks the
+    * decoder:
     *
-    *  - [[graft.functions.RasterPixelStats]]: BMP 24-bit BI_RGB bottom-up,
+    *  - [[graft.functions.RasterDecode]]: BMP 24-bit BI_RGB bottom-up,
     *    PPM P6, PGM P5 (binary, maxval ≤ 255) — uncompressed rasters.
-    *  - [[graft.functions.PngPixelStats]]: non-interlaced 8-bit
+    *  - [[graft.functions.PngDecode]]: non-interlaced 8-bit
     *    gray/gray+alpha/RGB/RGBA PNG via the JDK Inflater.
-    *  - [[graft.functions.GifPixelStats]]: GIF87a/89a first frame via
+    *  - [[graft.functions.GifDecode]]: GIF87a/89a first frame via
     *    pure-JVM LZW; interlace is free since the stats are order-invariant.
-    *  - [[graft.functions.JpegPixelStats]]: huffman-coded JPEG — both
+    *  - [[graft.functions.JpegDecode]]: huffman-coded JPEG — both
     *    sequential baseline (SOF0/SOF1 8-bit) AND progressive (SOF2,
     *    spectral selection + successive approximation), grayscale + YCbCr
     *    at 4:4:4/4:2:2/4:4:0/4:2:0, restart intervals — full entropy
     *    decode + IDCT, pure JVM.
     *
+    * All four feed one channel accumulator, [[graft.functions.PixelAcc]],
+    * which owns the rounding, the histogram binning and the result row.
     * PGM and grayscale PNG/JPEG report their gray channel on all three.
     * Arithmetic-coded/12-bit JPEG, truncated, top-down BMP, or
     * over-`maxPixels` payloads come back null — this decode is sized for
@@ -142,11 +140,7 @@ object Multimodal {
       media: Column, histBins: Int = 4, maxPixels: Int = 1 << 16): Column = {
     require(histBins > 0 && 256 % histBins == 0, "histBins must divide 256")
     require(maxPixels > 0 && maxPixels <= (1 << 30), "maxPixels in (0, 2^30]")
-    coalesce(
-      graft.functions.RasterPixelStats.rasterPixelStats(media, histBins, maxPixels),
-      graft.functions.PngPixelStats.pngPixelStats(media, histBins, maxPixels),
-      graft.functions.GifPixelStats.gifPixelStats(media, histBins, maxPixels),
-      graft.functions.JpegPixelStats.jpegPixelStats(media, histBins, maxPixels))
+    graft.functions.PixelStats.pixelStats(media, histBins, maxPixels)
   }
 
   /** Wrap a text table into a media table: (key, kind, media BINARY,

@@ -44,7 +44,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     boilerMinCount = Some(5L),
     maxBoilerFrac = 0.5,
     mixtureRates = Map("mix" -> "0000"),
-    mixtureDefault = "ffff")
+    mixtureDefault = Some("ffff"))
 
   test("each stage rejects its planted doc; funnel accounts for every row") {
     val ann = CorpusPipeline
@@ -84,7 +84,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       langs = Set("en"), minQuality = 0.1,
       nearDupThreshold = 0.95, decontamN = 8,
       boilerMinCount = Some(1000000L), maxBoilerFrac = 2.0,
-      mixtureRates = Map.empty, mixtureDefault = "8000")
+      mixtureRates = Map.empty, mixtureDefault = Some("8000"))
     val ann = CorpusPipeline
       .annotate(many, bench, "text", "doc_id", "src", mixCfg)
     val kept = ann.filter(col("drop_stage").isNull)
@@ -108,8 +108,27 @@ class CorpusPipelineSpec extends AnyFunSuite {
       s"no cache scan in the executed funnel plan:\n${p.take(800)}")
   }
 
+  test("an unconfigured mixture keeps every document, including one whose " +
+    "salted md5 starts with ffff") {
+    // md5("179783:mixture") = ffff08c9…: under a "ffff" threshold this doc
+    // fails the `<` gate, so a default that drops nothing must be no
+    // threshold at all
+    val corpus = Seq(
+      (179783L, "the first plain document keeps many ordinary english words here"),
+      (1L, "another perfectly reasonable document with the usual plenty of varied words"),
+      (2L, "final good document containing many distinct tokens and proper text"))
+      .toDF("doc_id", "text").withColumn("src", lit("a"))
+    val noBench = Seq((1000L, "completely disjoint benchmark material"))
+      .toDF("doc_id", "text")
+    val stages = CorpusPipeline.annotate(corpus, noBench, "text", "doc_id",
+        "src", CorpusPipeline.Config(boilerMinCount = Some(1000L)))
+      .select(col("doc_id"), col("drop_stage"))
+      .as[(Long, String)].collect().toMap
+    assert(stages === Map(179783L -> null, 1L -> null, 2L -> null))
+  }
+
   test("mixture thresholds are validated like Sampling.weightedMixture's") {
-    val bad = cfg.copy(mixtureDefault = "0X9999")
+    val bad = cfg.copy(mixtureDefault = Some("0X9999"))
     assertThrows[IllegalArgumentException] {
       CorpusPipeline.annotate(docs, bench, "text", "doc_id", "src", bad)
     }
@@ -117,7 +136,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   test("build returns survivors with valid split labels only") {
     val out = CorpusPipeline
-      .build(docs, bench, "text", "doc_id", "src", cfg)
+      .annotate(docs, bench, "text", "doc_id", "src", cfg)
+      .filter(col("drop_stage").isNull).drop("drop_stage")
       .select(col("doc_id"), col("split")).as[(Long, String)].collect()
     assert(out.map(_._1).toSet === Set(1L, 9L, 10L))
     assert(out.forall(r => Set("train", "val", "test").contains(r._2)))
@@ -191,8 +211,9 @@ class CorpusPipelineSpec extends AnyFunSuite {
       s"canonical forms must collide in exact dedup: $withCanon")
     // and the emitted text is the canonical form
     val kept = CorpusPipeline
-      .build(corpus, noBench, "text", "doc_id", "src",
+      .annotate(corpus, noBench, "text", "doc_id", "src",
         open.copy(canonicalizeText = true))
+      .filter(col("drop_stage").isNull).drop("drop_stage")
       .select(col("text")).as[String].head()
     assert(kept.contains("caf\u00e9") && !kept.contains("\r") &&
       !kept.contains("  "))
@@ -226,8 +247,9 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(cleaned(31L) === "exact_dup",
       s"extracted+repaired forms must collide in exact dedup: $cleaned")
     val kept = CorpusPipeline
-      .build(corpus, noBench, "text", "doc_id", "src",
+      .annotate(corpus, noBench, "text", "doc_id", "src",
         open.copy(extractHtml = true, repairMojibake = true))
+      .filter(col("drop_stage").isNull).drop("drop_stage")
       .select(col("text")).as[String].collect()
     assert(kept.toSeq === Seq(clean))
   }

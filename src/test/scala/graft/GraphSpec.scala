@@ -18,6 +18,16 @@ class GraphSpec extends AnyFunSuite {
         edges.toDF("s", "d").repartition(parts), "s", "d", iters)
       .as[(Long, Long)].collect().toMap
 
+  test("the returned frame is checkpointed: its optimized plan holds no " +
+    "Join, so a second action does not re-run the rounds") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("s", "d")
+    val plan = Graph.pagerankInt(edges, "s", "d", iters = 5)
+      .queryExecution.optimizedPlan
+    assert(plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, s"joins left in the returned plan:\n$plan")
+  }
+
   test("a 2-cycle is an exact integer fixpoint at 1,000,000 ppm") {
     // each node forwards its whole rank: new = 150000 + 85% · 1e6 = 1e6
     val r = ranks(Seq((1L, 2L), (2L, 1L)), iters = 7)

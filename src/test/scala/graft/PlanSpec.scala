@@ -312,11 +312,10 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Exchange"), "pixel decode must not shuffle")
     assert(!p.toLowerCase.contains("scalaudf"),
       "decode must be an Expression, not a UDF")
-    assert(p.contains("raster_pixel_stats"),
-      s"fused BMP/PNM expression missing in:\n$p")
-    assert(p.contains("png_pixel_stats"), s"Inflater expression missing in:\n$p")
-    assert(p.contains("gif_pixel_stats"),
-      s"LZW expression missing from the fallthrough in:\n$p")
+    assert(p.contains("pixel_stats("), s"pixel-stats expression missing in:\n$p")
+    Seq("raster_pixel_stats", "png_pixel_stats", "gif_pixel_stats",
+      "jpeg_pixel_stats").foreach(name =>
+      assert(!p.contains(name), s"per-format expression $name left in:\n$p"))
     assert(p.contains("* Project"), s"no codegen'd projection in:\n$p")
   }
 
