@@ -22,30 +22,14 @@ object Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def time(name: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROBE $name%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($r)")
-    }
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // mode: `Probe q <sfDir> <name...>` times individual SparkEntry queries
-    if (args.headOption.contains("q")) {
-      val sfDir = args(1)
-      args.drop(2).foreach { name =>
-        val fn = SparkEntry.queries(name)
-        time(name)(noop(fn(spark, sfDir))) // warm
-        time(name)(noop(fn(spark, sfDir)))
-      }
-      spark.stop()
-      return
-    }
-
-    // mode: `Probe jq <sfDir> <name...>` — like `q` but also counts driver
-    // jobs / stages / tasks per run (host-independent scheduler-overhead
+    // mode: `Probe jq <sfDir> <name...>` — runs each entry twice (cold +
+    // warm) through the noop sink and prints its time with the driver
+    // jobs / stages / tasks it ran (host-independent scheduler-overhead
     // evidence: a lazy-checkpoint or shuffle-removal win shows up here even
-    // when the sandbox host's wall-clock is noisy).
+    // when the host's wall-clock is noisy).
     if (args.headOption.contains("jq")) {
       val sfDir = args(1)
       import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
@@ -147,6 +131,6 @@ object Probe {
 
     spark.stop()
     throw new IllegalArgumentException(
-      "usage: Probe q|jq|qtime|plans|control <args...>")
+      "usage: Probe jq|qtime|plans|control <args...>")
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checks.Checks
 import graft.engine.{Drift, Stats, Validator}
-import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
+import graft.ops.{Dedup, JpegPlant, Multimodal, Similarity, TextOps}
 import graft.sources.TranscriptGen
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -114,56 +114,20 @@ object SparkEntry {
       lit("0000" + "4000")))
   }
 
-  /** Eight deterministic flat-color baseline JPEGs ([[graft.ops.JpegPlant]]
-    * — DC-only, all-ones quant table, so every decoded sample is EXACTLY
-    * 128 + dc/8): variants 0-3 are 8×8 grayscale at 88/104/120/136,
-    * variants 4-7 are 16×16 YCbCr 4:2:0 at (136,80,192) (96,160,96)
+  /** DC values of the eight flat-color planted JPEG variants
+    * ([[graft.ops.JpegPlant]] — DC-only, all-ones quant table, so every
+    * decoded sample is EXACTLY 128 + dc/8): variants 0-3 are grayscale at
+    * 88/104/120/136, variants 4-7 are YCbCr at (136,80,192) (96,160,96)
     * (200,128,128) (64,192,64) — the last one drives R through the clamp.
     * The blobs are huffman-coded (not SQL-expressible), but the decoded
-    * means ARE analytic, so q133's DuckDB oracle replays the JFIF
-    * conversion arithmetic independently — no decoder on the oracle side,
-    * the check is cross-engine, not circular.
+    * means ARE analytic, so the DuckDB oracle q133 and q135 share replays
+    * the JFIF conversion arithmetic independently — no decoder on the
+    * oracle side, the check is cross-engine, not circular.
     */
-  private lazy val jpegVariantHex: Seq[String] = {
-    def hx(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
-    val gray = Seq(88, 104, 120, 136).map(g =>
-      hx(graft.ops.JpegPlant.flat(8, 8, Seq(8 * (g - 128)), Seq((1, 1)))))
-    val color = Seq((136, 80, 192), (96, 160, 96), (200, 128, 128),
-      (64, 192, 64)).map { case (y, cb, cr) =>
-      hx(graft.ops.JpegPlant.flat(16, 16,
-        Seq(8 * (y - 128), 8 * (cb - 128), 8 * (cr - 128)),
-        Seq((2, 2), (1, 1), (1, 1))))
-    }
-    gray ++ color
-  }
-
-  /** doc_id → one of the eight [[jpegVariantHex]] blobs (doc_id mod 8). */
-  private def plantedJpeg(docId: Column): Column =
-    unhex(element_at(typedlit(jpegVariantHex),
-      (pmod(docId, lit(8)) + 1).cast("int")))
-
-  /** The PROGRESSIVE (SOF2) twins of [[jpegVariantHex]] — identical
-    * analytic pixels, multi-scan coding ([[graft.ops.JpegPlant
-    * .flatProgressive]]), so q135 certifies the progressive decode path
-    * against the very same independent oracle arithmetic as q133.
-    */
-  private lazy val jpegProgVariantHex: Seq[String] = {
-    def hx(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
-    val gray = Seq(88, 104, 120, 136).map(g =>
-      hx(graft.ops.JpegPlant.flatProgressive(
-        8, 8, Seq(8 * (g - 128)), Seq((1, 1)))))
-    val color = Seq((136, 80, 192), (96, 160, 96), (200, 128, 128),
-      (64, 192, 64)).map { case (y, cb, cr) =>
-      hx(graft.ops.JpegPlant.flatProgressive(16, 16,
-        Seq(8 * (y - 128), 8 * (cb - 128), 8 * (cr - 128)),
-        Seq((2, 2), (1, 1), (1, 1))))
-    }
-    gray ++ color
-  }
-
-  private def plantedJpegProg(docId: Column): Column =
-    unhex(element_at(typedlit(jpegProgVariantHex),
-      (pmod(docId, lit(8)) + 1).cast("int")))
+  private val jpegFlatDcs: Seq[Seq[Int]] =
+    Seq(Seq(88), Seq(104), Seq(120), Seq(136),
+      Seq(136, 80, 192), Seq(96, 160, 96), Seq(200, 128, 128),
+      Seq(64, 192, 64)).map(_.map(v => 8 * (v - 128)))
 
   /** Successive-approximation DC variants for q136: ODD dc values so the
     * refinement scan's bit is forced to 1 in every block — the decoder
@@ -176,20 +140,31 @@ object SparkEntry {
     Seq(65, -383, 513), Seq(-255, 257, -255),               // color 4:2:0
     Seq(577, 1, 1), Seq(-511, 513, -511))
 
-  private lazy val jpegSaVariantHex: Seq[String] = {
-    def hx(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
-    jpegSaDcs.map { dcs =>
-      if (dcs.size == 1)
-        hx(graft.ops.JpegPlant.flatProgressive(8, 8, dcs, Seq((1, 1)), sa = true))
-      else
-        hx(graft.ops.JpegPlant.flatProgressive(16, 16, dcs,
-          Seq((2, 2), (1, 1), (1, 1)), sa = true))
+  /** doc_id → one of eight planted JPEGs (doc_id mod 8): variant i is
+    * `enc(w, h, dcs(i), samp)`, 8×8 grayscale for a 1-entry `dcs(i)`,
+    * else 16×16 YCbCr 4:2:0.
+    */
+  private def plantedJpeg(docId: Column, dcs: Seq[Seq[Int]],
+      enc: (Int, Int, Seq[Int], Seq[(Int, Int)]) => Array[Byte]): Column = {
+    val hex = dcs.map { d =>
+      val b =
+        if (d.size == 1) enc(8, 8, d, Seq((1, 1)))
+        else enc(16, 16, d, Seq((2, 2), (1, 1), (1, 1)))
+      b.map(x => f"${x & 0xff}%02X").mkString
     }
+    unhex(element_at(typedlit(hex), (pmod(docId, lit(8)) + 1).cast("int")))
   }
 
-  private def plantedJpegSa(docId: Column): Column =
-    unhex(element_at(typedlit(jpegSaVariantHex),
-      (pmod(docId, lit(8)) + 1).cast("int")))
+  /** The planted-pixel entries' shape: `media(doc_id)` of the documents
+    * with doc_id < 200, decoded by pixelStats.
+    */
+  private def plantedPixelStats(s: SparkSession, dir: String,
+      media: Column => Column): DataFrame =
+    t(s, dir, "documents").filter(col("doc_id") < 200)
+      .select(col("doc_id"), Multimodal.pixelStats(media(col("doc_id"))).as("p"))
+      .select(col("doc_id"), col("p.format").as("pix_format"),
+        col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
+        col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
 
   /** Shared analytic oracle for the flat-JPEG entries (q133 sequential,
     * q135 progressive — the planted pixels are identical by design):
@@ -573,28 +548,7 @@ object SparkEntry {
       val tool = when(col("event_type").isin("click", "view"), lit("search"))
         .otherwise(lit("fetch"))
       val m = pmod(col("event_id"), lit(11))
-      val searchArgs = when(m === 0, lit("{\"q\":"))
-        .when(m === 1, lit("[1, 2]"))
-        .when(m === 2, lit("{}"))
-        .when(m === 3, lit("{\"q\":\"a\",\"zz\":2,\"extra\":1}"))
-        .when(m === 4, lit("{\"q\":\"a\",\"mode\":\"turbo\"}"))
-        .when(m === 5, lit("{\"q\":\"a\",\"limit\":\"many\"}"))
-        .when(m === 6, lit("{\"q\":\"a\",\"limit\":1000}"))
-        .when(m === 7, lit(null).cast("string"))
-        .otherwise(lit("{\"q\":\"a\",\"limit\":7,\"mode\":\"fast\"}"))
-      val fetchArgs = when(m === 0, lit("{\"url\":"))
-        .when(m === 1, lit("\"str\""))
-        .when(m === 2, lit("{\"url\":\"https://e.org/x\"}"))
-        .when(m === 3,
-          lit("{\"url\":\"https://e.org/x\",\"method\":\"GET\"," +
-            "\"hdrs\":{},\"auth\":1}"))
-        .when(m === 4, lit("{\"url\":\"https://e.org/x\",\"method\":\"PUT\"}"))
-        .when(m === 5,
-          lit("{\"url\":\"u\",\"method\":\"GET\",\"timeout_ms\":\"soon\"}"))
-        .when(m === 6, lit("{\"url\":\"u\",\"method\":\"GET\",\"timeout_ms\":0}"))
-        .when(m === 7, lit(null).cast("string"))
-        .otherwise(
-          lit("{\"url\":\"u\",\"method\":\"POST\",\"timeout_ms\":500}"))
+      val (searchArgs, fetchArgs) = TranscriptGen.plantedArgs(m)
       val df = ev.select(col("event_id"), tool.as("tool"),
         when(tool === "search", searchArgs).otherwise(fetchArgs).as("args"))
       graft.checks.ToolArgs.violations(df, "tool", "args", Seq("event_id"))
@@ -1237,12 +1191,7 @@ object SparkEntry {
       // by pixelStats — the DuckDB twin states the analytically-known
       // means, so header parse, offsets, padding, and channel order are
       // all end-to-end checked
-      t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.pixelStats(plantedBmp(col("doc_id"))).as("p"))
-        .select(col("doc_id"), col("p.format").as("pix_format"),
-          col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
-          col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
+      plantedPixelStats(s, dir, plantedBmp)
     }),
     "q68_png_pixel_stats" -> ((s, dir) => {
       // real COMPRESSED-format pixel decode, oracle-certified: planted
@@ -1250,12 +1199,7 @@ object SparkEntry {
       // defiltered by the JDK-Inflater expression — the oracle states the
       // same analytic means as q66, so signature/chunk-walk/zlib/filter
       // handling and channel order are all end-to-end checked
-      t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.pixelStats(plantedPng(col("doc_id"))).as("p"))
-        .select(col("doc_id"), col("p.format").as("pix_format"),
-          col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
-          col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
+      plantedPixelStats(s, dir, plantedPng)
     }),
     "q69_gif_pixel_stats" -> ((s, dir) => {
       // real LZW pixel decode, oracle-certified: planted [[plantedGif]]
@@ -1263,50 +1207,33 @@ object SparkEntry {
       // pure-JVM GIF expression — the oracle states the analytic means,
       // so the LZW stream walk, palette lookup, and channel order are
       // end-to-end checked cross-engine
-      t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.pixelStats(plantedGif(col("doc_id"))).as("p"))
-        .select(col("doc_id"), col("p.format").as("pix_format"),
-          col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
-          col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
+      plantedPixelStats(s, dir, plantedGif)
     }),
     "q133_jpeg_pixel_stats" -> ((s, dir) => {
       // real ENTROPY-CODED pixel decode, oracle-certified: planted
-      // [[jpegVariantHex]] baseline JPEGs (huffman DC + IDCT + 4:2:0
+      // [[jpegFlatDcs]] baseline JPEGs (huffman DC + IDCT + 4:2:0
       // chroma upsample + JFIF YCbCr, incl. one clamped channel) decoded
       // by the pure-JVM JPEG expression — the oracle replays the analytic
       // 128+dc/8 samples and the JFIF conversion arithmetic independently
-      t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.pixelStats(plantedJpeg(col("doc_id"))).as("p"))
-        .select(col("doc_id"), col("p.format").as("pix_format"),
-          col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
-          col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
+      plantedPixelStats(s, dir,
+        plantedJpeg(_, jpegFlatDcs, JpegPlant.flat(_, _, _, _)))
     }),
     "q135_jpeg_progressive" -> ((s, dir) => {
       // PROGRESSIVE (SOF2) pixel decode, oracle-certified: the multi-scan
       // twins of q133's planted blobs (same analytic pixels) through the
       // coefficient-buffering scan loop — DC scan + per-component EOB-only
       // AC scans; the oracle replays the identical independent arithmetic
-      t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.pixelStats(plantedJpegProg(col("doc_id"))).as("p"))
-        .select(col("doc_id"), col("p.format").as("pix_format"),
-          col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
-          col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
+      plantedPixelStats(s, dir, plantedJpeg(_, jpegFlatDcs,
+        JpegPlant.flatProgressive(_, _, _, _)))
     }),
     "q136_jpeg_sa_refine" -> ((s, dir) => {
       // successive-approximation DC refinement, oracle-certified: odd-dc
-      // planted SOF2 blobs ([[jpegSaVariantHex]]) force every refinement
+      // planted SOF2 blobs ([[jpegSaDcs]]) force every refinement
       // bit to 1; the oracle reconstructs floor(dc/8 + 128.5) from the dc
       // literals — if the decoder dropped or misplaced a single
       // refinement bit every mean would shift by 0.25 in dc units
-      t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          graft.ops.Multimodal.pixelStats(plantedJpegSa(col("doc_id"))).as("p"))
-        .select(col("doc_id"), col("p.format").as("pix_format"),
-          col("p.n_pixels").as("n_pixels"), col("p.mean_r").as("mean_r"),
-          col("p.mean_g").as("mean_g"), col("p.mean_b").as("mean_b"))
+      plantedPixelStats(s, dir, plantedJpeg(_, jpegSaDcs,
+        JpegPlant.flatProgressive(_, _, _, _, sa = true)))
     }),
     "q70_weighted_sample" -> ((s, dir) => {
       // Efraimidis–Spirakis weighted race, oracle-replayed: top-25 docs by
@@ -2012,7 +1939,8 @@ object SparkEntry {
       val jpgs = Multimodal.packMedia(
         docs.filter(col("doc_id") < 8).select(
           (col("doc_id") + 3000000L).as("doc_id"),
-          plantedJpeg(col("doc_id")).as("jpg")),
+          plantedJpeg(col("doc_id"), jpegFlatDcs,
+            JpegPlant.flat(_, _, _, _)).as("jpg")),
         "doc_id", "jpg", lit("image"))
       // default (strict) mode: text payloads are undecodable, so their
       // embedding is NULL and embedding_real=false; the planted

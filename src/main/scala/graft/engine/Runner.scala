@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   * Sinks are written `partitionBy(part_id)` with dynamic partition overwrite,
   * so re-running a partition is idempotent — the at-least-once analog of the
   * reference being a stateless request/response validator (`api.py:17-55`).
+  * The mode is a write option on those two sinks; the caller's session conf
+  * is left as it is.
   */
 object Runner {
 
@@ -46,7 +48,6 @@ object Runner {
       runId: String,
       snapshot: String = "parquet-v0",
       resume: Boolean = true): Result = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val done = if (resume) completedParts(spark, outDir) else Set.empty[Int]
     // Resume predicate — a partition-column filter so the source prunes
     // whole partitions (verified in ResumeSpec via the physical plan).
@@ -63,8 +64,8 @@ object Runner {
     Validator.allViolations(todo, conversations, sortOutput = false)
       .repartition(col("part_id"))
       .sortWithinPartitions("conv_id", "turn_idx")
-      .write.mode("overwrite").partitionBy("part_id")
-      .parquet(s"$outDir/violations")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_id").parquet(s"$outDir/violations")
     val writtenViolations = spark.read.parquet(s"$outDir/violations")
     // At most one verdict row per part_id: collect once, write both sinks
     // from the rows (one file per verdicts/part_id=* directory).
@@ -72,8 +73,8 @@ object Runner {
     val verdictRows = verdictPlan.collect()
     val verdicts = spark.createDataFrame(
       java.util.Arrays.asList(verdictRows: _*), verdictPlan.schema)
-    verdicts.write.mode("overwrite").partitionBy("part_id")
-      .parquet(s"$outDir/verdicts")
+    verdicts.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_id").parquet(s"$outDir/verdicts")
     val wallMs = (System.nanoTime() - t0) / 1000000L
 
     verdicts.select(

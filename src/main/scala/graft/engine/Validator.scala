@@ -59,7 +59,9 @@ object Validator {
       .groupBy(col("conv_id"), col("turn_idx"))
       .agg(min("part_id").as("part_id"),
         min(struct(col("ts"), col("prev_ts"))).as("p"))
-    attachTsViolationText(badKeys, turns)
+    withText(badKeys, turns)
+      .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
+        tsOrderRule :+ col("text"): _*)
   }
 
   /** Skew-proof variant of [[tsOrderViolations]] for pathological hot
@@ -105,22 +107,24 @@ object Validator {
       .groupBy(col("conv_id"), col("turn_idx"))
       .agg(min("part_id").as("part_id"),
         min(struct(col("ts"), col("prev_ts"))).as("p"))
-    attachTsViolationText(badKeys, turns)
-  }
-
-  /** Shared tail: join violating keys back to `text` (rare keys — AQE
-    * broadcasts) and render the byte-stable message.
-    */
-  private def attachTsViolationText(
-      badKeys: DataFrame, turns: DataFrame): DataFrame = {
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .join(badKeys, Seq("conv_id", "turn_idx"))
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(min("part_id").as("part_id"), min("p").as("p"),
-        min("text").as("text"))
+    withText(badKeys, turns)
       .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
         tsOrderRule :+ col("text"): _*)
+  }
+
+  /** The key-level checks' shared text attach: join the violating keys back
+    * to `text` (rare keys — AQE broadcasts) and take, per key, the `min` of
+    * `text` and of every other column of `badKeys`.
+    */
+  private def withText(badKeys: DataFrame, turns: DataFrame): DataFrame = {
+    val keys = Seq("conv_id", "turn_idx")
+    val aggs = (badKeys.columns.toSeq.filterNot(keys.contains) :+ "text")
+      .map(c => min(c).as(c))
+    turns
+      .select(col("conv_id"), col("turn_idx"), col("text"))
+      .join(badKeys, keys)
+      .groupBy(keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** `rule_id`, `field` and `message` of a TS_ORDER_ts violation, from the
@@ -180,11 +184,7 @@ object Validator {
     // dup keys are rare, so this join's right side is tiny relative to the
     // table; AQE broadcasts it when it fits, SMJ otherwise. min(text) here
     // runs only over the duplicate rows themselves.
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .join(dupKeys, Seq("conv_id", "turn_idx"))
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(min("text").as("text"), min("n").as("n"), min("part_id").as("part_id"))
+    withText(dupKeys, turns)
       .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
         dupKeyRule :+ col("text"): _*)
   }
@@ -396,13 +396,7 @@ object Validator {
       .agg(min(when(tsBad, col("part_id"))).as("ts_pid"),
         min(when(tsBad, struct(col("ts"), col("prev_ts")))).as("p"),
         min("part_id").as("dup_pid"), max("n").as("n"))
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .join(badKeys, Seq("conv_id", "turn_idx"))
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(min("ts_pid").as("ts_pid"), min("p").as("p"),
-        min("dup_pid").as("dup_pid"), min("n").as("n"),
-        min("text").as("text"))
+    withText(badKeys, turns)
       .select(col("conv_id"), col("turn_idx"), col("text"),
         explode(array(
           when(col("p").isNotNull,

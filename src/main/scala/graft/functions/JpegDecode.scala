@@ -5,26 +5,27 @@ import Bytes.u8
 /** REAL baseline JPEG pixel decode with nothing but the JVM, one of the
   * four formats [[PixelStats]] dispatches to. One fused pass per blob:
   * marker walk (DQT/DHT/SOF/DRI/SOS) → canonical huffman entropy decode
-  * with byte-unstuffing and restart markers → dequantize + dezigzag →
-  * separable float IDCT per 8×8 block → nearest-neighbor chroma upsample →
-  * JFIF YCbCr→RGB → the [[PixelAcc]] every image decoder feeds.
+  * with byte-unstuffing and restart markers into per-component quantized
+  * coefficient planes → dequantize + dezigzag → separable float IDCT per
+  * 8×8 block → nearest-neighbor chroma upsample → JFIF YCbCr→RGB → the
+  * [[PixelAcc]] every image decoder feeds.
   *
   * Supported envelope (covering the overwhelming majority of web JPEGs):
   * huffman-coded DCT, 8-bit precision, 1 component (grayscale) or 3
   * components (YCbCr) with sampling factors in {1, 2} — i.e. 4:4:4,
   * 4:2:2, 4:4:0 and 4:2:0 — optional restart intervals, in BOTH coding
-  * orders: sequential (SOF0; SOF1's 8-bit case decodes identically) as a
-  * single interleaved scan with streaming per-MCU IDCT, and progressive
-  * (SOF2) as multi-scan spectral selection + successive approximation
-  * accumulated into per-component coefficient buffers (DC first/refine,
-  * AC first with EOB runs, AC refinement with inline correction bits —
-  * see [[JpegDecode.progressiveScan]]). Arithmetic coding, 12-bit,
-  * hierarchical and CMYK files decode to null — honest nulls: corrupt
-  * bytes are data, not errors, at 100 TB.
+  * orders, through one scan walker ([[JpegDecode.scan]]): sequential
+  * (SOF0; SOF1's 8-bit case decodes identically) as its single
+  * interleaved scan with Ss=0, Se=63, AhAl=0, and progressive (SOF2) as
+  * multi-scan spectral selection + successive approximation (DC
+  * first/refine, AC first with EOB runs, AC refinement with inline
+  * correction bits). Arithmetic coding, 12-bit, hierarchical and CMYK
+  * files decode to null — honest nulls: corrupt bytes are data, not
+  * errors, at 100 TB.
   *
-  * Allocation discipline: one coefficient block + one IDCT scratch reused
-  * across blocks, component planes sized once from the (capped) MCU-padded
-  * dims.
+  * Allocation discipline: the coefficient and sample planes are sized once
+  * from the (capped) MCU-padded dims; one dequantized block + one IDCT
+  * scratch are reused across blocks.
   */
 object JpegDecode {
 
@@ -138,9 +139,9 @@ object JpegDecode {
     var plane: Array[Byte] = _ // planeW × planeH samples
     var planeW: Int = 0
     var pred: Int = 0 // DC predictor
-    // progressive state: the QUANTIZED coefficient buffer being
-    // accumulated across scans (padded block grid, natural order per
-    // block), plus the padded and non-interleaved block-grid dims
+    // the QUANTIZED coefficients, accumulated across a progressive frame's
+    // scans (padded block grid, natural order per block), plus the padded
+    // and non-interleaved block-grid dims
     var coefs: Array[Int] = _
     var bw = 0; var bh = 0   // padded (MCU-aligned) block grid
     var nbw = 0; var nbh = 0 // non-interleaved (ceil) block grid
@@ -159,16 +160,13 @@ object JpegDecode {
     var comps: Array[Comp] = null
     var w = 0; var h = 0
     var restartInterval = 0
-    var scanStart = -1
     var progressive = false
-    var eoi = false
-    var nScans = 0
-    var entropyAfter = -1
+    var done = false
     var hMax = 1; var vMax = 1
     var mcusX = 0; var mcusY = 0
 
-    // progressive: finalize MCU geometry and allocate the per-component
-    // quantized-coefficient buffers at the first SOS (all SOF data final)
+    // finalize MCU geometry and allocate the per-component quantized-
+    // coefficient buffers at the first SOS (all SOF data final)
     def ensureGeometry(): Boolean = {
       if (mcusX > 0) return true
       var ci = 0
@@ -185,21 +183,20 @@ object JpegDecode {
         c.bw = mcusX * c.h; c.bh = mcusY * c.v
         c.nbw = ((w * c.h + hMax - 1) / hMax + 7) / 8
         c.nbh = ((h * c.v + vMax - 1) / vMax + 7) / 8
-        if (progressive) {
-          // 64 ints per block = one int per padded pixel — same budget
-          // shape as the sample planes
-          if (c.bw.toLong * c.bh * 64 > 4L * maxPixels + 4096) return false
-          c.coefs = new Array[Int](c.bw * c.bh * 64)
-        }
+        // 64 ints per block = one int per padded pixel: the padded plane is
+        // at most ~4x the capped pixel count per component — still bounded
+        // by maxPixels within a small constant
+        if (c.bw.toLong * c.bh * 64 > 4L * maxPixels + 4096) return false
+        c.coefs = new Array[Int](c.bw * c.bh * 64)
         ci += 1
       }
       true
     }
 
-    // ---- marker walk (sequential: up to SOS; progressive: scans are
-    // decoded inline as their SOS arrives, walk ends at EOI) ----
+    // ---- marker walk: scans are decoded as their SOS arrives; the walk
+    // ends after a sequential frame's one scan, or at a progressive EOI ----
     var pos = 2
-    while (scanStart < 0 && !eoi) {
+    while (!done) {
       if (pos + 2 > bytes.length) return null
       if (u8(bytes(pos)) != 0xff) return null
       var m = u8(bytes(pos + 1)); pos += 2
@@ -210,16 +207,17 @@ object JpegDecode {
       if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
         // standalone marker, no segment — nothing to do
       } else if (m == 0xd9) {
-        // EOI: terminates a progressive stream; a sequential one stops at
-        // SOS and never walks this far
+        // EOI: terminates a progressive stream; a sequential one stops
+        // after its scan and never walks this far
         if (!progressive || comps == null) return null
-        eoi = true
+        done = true
       } else {
         if (pos + 2 > bytes.length) return null
         val len = (u8(bytes(pos)) << 8) | u8(bytes(pos + 1))
         if (len < 2 || pos + len > bytes.length) return null
         val seg = pos + 2
         val segLen = len - 2
+        var next = pos + len
         m match {
           case 0xdb => // DQT
             var p = seg
@@ -314,20 +312,17 @@ object JpegDecode {
                   return null
                 i += 1
               }
-              scanStart = pos + len
-            } else {
-              if (!ensureGeometry()) return null
-              nScans += 1
-              entropyAfter = progressiveScan(bytes, pos + len, scanComps,
-                sSs, sSe, sAa >> 4, sAa & 0x0f, restartInterval, mcusX, mcusY)
             }
+            if (!ensureGeometry()) return null
+            next = scan(bytes, next, scanComps, sSs, sSe, sAa >> 4,
+              sAa & 0x0f, restartInterval, mcusX, mcusY, !progressive)
+            done = !progressive
           case _ => // APPn / COM / anything else: skip
         }
-        if (entropyAfter >= 0) { pos = entropyAfter; entropyAfter = -1 }
-        else if (scanStart < 0) pos += len
+        pos = next
       }
     }
-    if (progressive && nScans == 0) return null
+    if (mcusX == 0) return null // no scan
 
     // every component needs its quant table
     var ci = 0
@@ -336,99 +331,28 @@ object JpegDecode {
       ci += 1
     }
 
-    // ---- MCU geometry + planes ----
-    if (!ensureGeometry()) return null
+    // ---- dequantize and IDCT every padded block into its plane ----
+    val coef = new Array[Int](64)    // dequantized, natural order
+    val tmp = new Array[Double](64)  // IDCT row-pass scratch
     ci = 0
     while (ci < comps.length) {
       val c = comps(ci)
-      c.planeW = mcusX * 8 * c.h
-      val planeH = mcusY * 8 * c.v
-      // the padded plane is at most ~4x the capped pixel count per
-      // component — still bounded by maxPixels within a small constant
-      if (c.planeW.toLong * planeH > 4L * maxPixels + 4096) return null
-      c.plane = new Array[Byte](c.planeW * planeH)
+      val q = qt(c.tq)
+      c.planeW = c.bw * 8
+      c.plane = new Array[Byte](c.planeW * c.bh * 8)
+      var by = 0
+      while (by < c.bh) {
+        var bx = 0
+        while (bx < c.bw) {
+          val base = (by * c.bw + bx) * 64
+          var k = 0
+          while (k < 64) { coef(k) = c.coefs(base + k) * q(k); k += 1 }
+          idctBlock(coef, tmp, c, bx, by)
+          bx += 1
+        }
+        by += 1
+      }
       ci += 1
-    }
-
-    val coef = new Array[Int](64)    // dequantized, natural order
-    val tmp = new Array[Double](64)  // IDCT row-pass scratch
-    if (progressive) {
-      // ---- progressive: scans already accumulated the quantized
-      // coefficients; dequantize and IDCT every padded block ----
-      ci = 0
-      while (ci < comps.length) {
-        val c = comps(ci)
-        val q = qt(c.tq)
-        var by = 0
-        while (by < c.bh) {
-          var bx = 0
-          while (bx < c.bw) {
-            val base = (by * c.bw + bx) * 64
-            var k = 0
-            while (k < 64) { coef(k) = c.coefs(base + k) * q(k); k += 1 }
-            idctBlock(coef, tmp, c, bx, by)
-            bx += 1
-          }
-          by += 1
-        }
-        ci += 1
-      }
-    } else {
-    // ---- entropy decode: interleaved MCUs ----
-    val br = new BitReader(bytes, scanStart)
-    var rstCount = 0
-    var rstN = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && rstCount == restartInterval) {
-          br.restart(rstN)
-          rstN = (rstN + 1) & 7
-          rstCount = 0
-          ci = 0
-          while (ci < comps.length) { comps(ci).pred = 0; ci += 1 }
-        }
-        ci = 0
-        while (ci < comps.length) {
-          val c = comps(ci)
-          val q = qt(c.tq)
-          var by = 0
-          while (by < c.v) {
-            var bx = 0
-            while (bx < c.h) {
-              // one 8x8 block: DC + AC
-              java.util.Arrays.fill(coef, 0)
-              val s = br.decode(c.dcTab)
-              if (s > 11) throw new IllegalStateException("bad DC cat")
-              c.pred += extend(br.receive(s), s)
-              coef(0) = c.pred * q(0)
-              var k = 1
-              var eob = false
-              while (k < 64 && !eob) {
-                val rs = br.decode(c.acTab)
-                val r = rs >> 4; val sz = rs & 0x0f
-                if (sz == 0) {
-                  if (r == 15) k += 16 else eob = true
-                } else {
-                  k += r
-                  if (k > 63) throw new IllegalStateException("AC overrun")
-                  coef(ZIGZAG(k)) = extend(br.receive(sz), sz) * q(ZIGZAG(k))
-                  k += 1
-                }
-              }
-              idctBlock(coef, tmp, c, mx * c.h + bx, my * c.v + by)
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        rstCount += 1
-        mx += 1
-      }
-      my += 1
-    }
     }
 
     // ---- upsample + color convert + accumulate ----
@@ -460,32 +384,46 @@ object JpegDecode {
     "jpeg"
   }
 
-  /** Decode ONE progressive scan (T.81 G.1.2: spectral selection +
-    * successive approximation) into the components' quantized-coefficient
-    * buffers, and return the byte position of the marker that follows the
-    * scan's entropy data. Throws on corrupt data (the caller nulls).
+  /** Decode ONE scan into the components' quantized-coefficient buffers
+    * and return the byte position of the marker that follows a
+    * progressive scan's entropy data (a sequential scan's end, where the
+    * walk stops). Throws on corrupt data (the caller nulls).
+    *
+    * A sequential frame's one scan (`sequential`: Ss=0, Se=63, AhAl=0)
+    * decodes every block's DC step, then its AC band 1..63 by the AC-first
+    * step. A progressive scan (T.81 G.1.2: spectral selection + successive
+    * approximation) decodes one step for every block:
     *
     *  - DC first (Ss=0, Ah=0): huffman diff coding, value stored << Al.
     *  - DC refinement (Ah>0): one raw bit per block, OR'd at bit Al
     *    (two's-complement OR reconstructs negatives correctly).
     *  - AC first (Ss≥1, Ah=0): baseline run-length coding over the band
-    *    plus EOBn run codes (run = (1<<r)+bits blocks whose band is done).
+    *    plus EOBn run codes (run = (1<<r)+bits blocks whose band is done);
+    *    in a sequential scan a size-0 symbol with run < 15 ends only its
+    *    own block.
     *  - AC refinement (Ah>0): the intricate one — newly-significant
     *    coefficients arrive as ±1<<Al with a sign bit; every
     *    previously-nonzero coefficient crossed on the way contributes one
     *    inline correction bit; EOB runs still carry correction bits for
     *    the remaining nonzero history of each block in the run.
     *
-    * DC scans traverse the interleaved MCU grid (or the component's own
-    * ceil-block grid when single-component); AC scans are
-    * non-interleaved by spec — exactly one component, its own grid.
+    * Sequential and multi-component scans traverse the interleaved MCU
+    * grid; a single-component progressive scan walks the component's own
+    * ceil-block grid (AC scans are non-interleaved by spec — exactly one
+    * component).
     */
-  private def progressiveScan(
+  private def scan(
       bytes: Array[Byte], start: Int, scanComps: Array[Comp],
       ss: Int, se: Int, ah: Int, al: Int, ri: Int,
-      mcusX: Int, mcusY: Int): Int = {
+      mcusX: Int, mcusY: Int, sequential: Boolean): Int = {
     if (ss < 0 || se > 63 || ss > se || al > 13 || ah > 14)
       throw new IllegalStateException("bad scan band")
+    if (ss == 0 && se != 0 && !sequential)
+      throw new IllegalStateException("DC scan must have Se=0")
+    if (ss > 0 && scanComps.length != 1)
+      throw new IllegalStateException("AC scan must be single-component")
+    if (ss > 0 && scanComps(0).acTab == null)
+      throw new IllegalStateException("no AC table")
     val br = new BitReader(bytes, start)
     var eobrun = 0
     var rstN = 0
@@ -516,7 +454,7 @@ object JpegDecode {
 
     def acFirst(c: Comp, base: Int): Unit = {
       if (eobrun > 0) { eobrun -= 1; return }
-      var k = ss
+      var k = math.max(ss, 1)
       var done = false
       while (k <= se && !done) {
         val rs = br.decode(c.acTab)
@@ -524,8 +462,10 @@ object JpegDecode {
         if (sz == 0) {
           if (r == 15) k += 16
           else {
-            // EOBn: run covers (1<<r)+bits blocks INCLUDING this one
-            eobrun = (1 << r) - 1 + (if (r > 0) br.receive(r) else 0)
+            // EOBn: run covers (1<<r)+bits blocks INCLUDING this one; a
+            // sequential EOB ends this block only
+            if (!sequential)
+              eobrun = (1 << r) - 1 + (if (r > 0) br.receive(r) else 0)
             done = true
           }
         } else {
@@ -590,65 +530,50 @@ object JpegDecode {
       }
     }
 
-    if (ss == 0) {
-      if (se != 0) throw new IllegalStateException("DC scan must have Se=0")
-      if (scanComps.length == 1) {
-        val c = scanComps(0)
-        var by = 0
-        while (by < c.nbh) {
-          var bx = 0
-          while (bx < c.nbw) {
-            maybeRestart()
-            dcBlock(c, (by * c.bw + bx) * 64)
-            sinceRst += 1
-            bx += 1
-          }
-          by += 1
-        }
-      } else {
-        var my = 0
-        while (my < mcusY) {
-          var mx = 0
-          while (mx < mcusX) {
-            maybeRestart()
-            var j = 0
-            while (j < scanComps.length) {
-              val c = scanComps(j)
-              var by = 0
-              while (by < c.v) {
-                var bx = 0
-                while (bx < c.h) {
-                  dcBlock(c, ((my * c.v + by) * c.bw + (mx * c.h + bx)) * 64)
-                  bx += 1
-                }
-                by += 1
+    def block(c: Comp, base: Int): Unit =
+      if (ss == 0) { dcBlock(c, base); if (sequential) acFirst(c, base) }
+      else if (ah == 0) acFirst(c, base) else acRefine(c, base)
+
+    if (sequential || scanComps.length > 1) {
+      var my = 0
+      while (my < mcusY) {
+        var mx = 0
+        while (mx < mcusX) {
+          maybeRestart()
+          var j = 0
+          while (j < scanComps.length) {
+            val c = scanComps(j)
+            var by = 0
+            while (by < c.v) {
+              var bx = 0
+              while (bx < c.h) {
+                block(c, ((my * c.v + by) * c.bw + (mx * c.h + bx)) * 64)
+                bx += 1
               }
-              j += 1
+              by += 1
             }
-            sinceRst += 1
-            mx += 1
+            j += 1
           }
-          my += 1
+          sinceRst += 1
+          mx += 1
         }
+        my += 1
       }
     } else {
-      if (scanComps.length != 1)
-        throw new IllegalStateException("AC scan must be single-component")
       val c = scanComps(0)
-      if (c.acTab == null) throw new IllegalStateException("no AC table")
       var by = 0
       while (by < c.nbh) {
         var bx = 0
         while (bx < c.nbw) {
           maybeRestart()
-          val base = (by * c.bw + bx) * 64
-          if (ah == 0) acFirst(c, base) else acRefine(c, base)
+          block(c, (by * c.bw + bx) * 64)
           sinceRst += 1
           bx += 1
         }
         by += 1
       }
     }
+    if (sequential) return br.pos
 
     // byte-align and skip pad bytes / stray RSTn up to the next marker
     var p = br.pos

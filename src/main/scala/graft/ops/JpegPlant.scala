@@ -1,20 +1,20 @@
 package graft.ops
 
-/** Deterministic baseline-JPEG synthesizer for planted-data tests and
-  * oracle entries (the JPEG sibling of the q66 planted BMP / q68 planted
-  * PNG constructions): flat-color DC-only images whose decoded pixel
-  * values are ANALYTIC — with an all-ones quantization table the only
-  * nonzero coefficient is the DC term, the IDCT of a lone DC `d` is the
-  * constant `d/8`, and the decoder's level shift makes every sample
-  * exactly `128 + d/8` (choose `d` divisible by 8 and no rounding is even
-  * exercised). A DuckDB oracle can therefore replay the expected channel
+/** Deterministic JPEG synthesizer, sequential and progressive, for
+  * planted-data tests and oracle entries (the JPEG sibling of the q66
+  * planted BMP / q68 planted PNG constructions): flat-color DC-only
+  * images whose decoded pixel values are ANALYTIC — with an all-ones
+  * quantization table the only nonzero coefficient is the DC term, the
+  * IDCT of a lone DC `d` is the constant `d/8`, and the decoder's level
+  * shift makes every sample exactly `128 + d/8` (choose `d` divisible by
+  * 8 and no rounding is even exercised). A DuckDB oracle can therefore replay the expected channel
   * means with plain arithmetic — no decoder on the oracle side, so the
   * check is independent, not circular.
   *
   * Pure Scala, no RNG, no codec library: segments are SOI / DQT(all-ones)
-  * / SOF0 / DHT (the 12-category DC table of ITU T.81 Annex K table K.3,
-  * public constants, plus a trivial one-symbol EOB-only AC table) / DRI
-  * (optional) / SOS / entropy bits / EOI.
+  * / SOF0 or SOF2 / DHT (the 12-category DC table of ITU T.81 Annex K
+  * table K.3, public constants, plus a trivial one-symbol EOB-only AC
+  * table) / DRI (optional) / SOS + entropy bits per scan / EOI.
   */
 object JpegPlant {
 
@@ -65,6 +65,88 @@ object JpegPlant {
     s
   }
 
+  private val dcCodes = canon(dcBits)
+  private val (eobCode, eobLen) = canon(acBits)(0)
+
+  /** One planted frame: the constructor writes SOI, DQT (id 0, all ones),
+    * SOFn (`sof`) and DHT (DC table 0, AC table 0); scans follow, EOI ends
+    * it. Component i has id i + 1 and quant table 0.
+    */
+  private final class Frame(sof: Int, w: Int, h: Int, dcs: Seq[Int],
+      samp: Seq[(Int, Int)]) {
+    require(dcs.size == 1 || dcs.size == 3, "1 or 3 components")
+    require(samp.size == dcs.size, "one (h,v) per component")
+    private val out = new java.io.ByteArrayOutputStream()
+    private def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
+    private def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+    def segment(m: Int, payload: Array[Int]): Unit = {
+      marker(m); u16(payload.length + 2); payload.foreach(out.write)
+    }
+    private val hMax = samp.map(_._1).max
+    private val vMax = samp.map(_._2).max
+    val mcus: Int =
+      ((w + 8 * hMax - 1) / (8 * hMax)) * ((h + 8 * vMax - 1) / (8 * vMax))
+
+    marker(0xd8) // SOI
+    segment(0xdb, Array(0x00) ++ Array.fill(64)(1))
+    segment(sof,
+      Array(8, (h >> 8) & 0xff, h & 0xff, (w >> 8) & 0xff, w & 0xff, dcs.size) ++
+        dcs.indices.flatMap(i => Seq(i + 1, (samp(i)._1 << 4) | samp(i)._2, 0)))
+    segment(0xc4,
+      Array(0x00) ++ dcBits ++ dcVals.map(_ & 0xff) ++
+        Array(0x10) ++ acBits ++ acVals.map(_ & 0xff))
+
+    /** SOS over components `cs` (every one uses DC 0 / AC 0). */
+    def sos(cs: Seq[Int], ss: Int, se: Int, ahAl: Int): Unit =
+      segment(0xda,
+        Array(cs.size) ++ cs.flatMap(i => Seq(i + 1, 0x00)) ++ Array(ss, se, ahAl))
+
+    /** Flush a scan's entropy bits, 1-padded to a byte. */
+    def entropy(bw: BitWriter): Unit = { bw.align(); out.write(bw.bytes) }
+
+    /** The blocks of component c in one MCU. */
+    def blocksPerMcu(c: Int): Int = samp(c)._1 * samp(c)._2
+
+    /** Component c's own (non-interleaved) block-grid size. */
+    def ownBlocks(c: Int): Int =
+      (((w * samp(c)._1 + hMax - 1) / hMax + 7) / 8) *
+        (((h * samp(c)._2 + vMax - 1) / vMax + 7) / 8)
+
+    /** One interleaved DC scan at point transform `al`: per component the
+      * FIRST block after each predictor reset carries diff = dc >> al
+      * (arithmetic), every later block diff = 0. `withEob` closes every
+      * block with an EOB (a sequential scan's all-zero AC band);
+      * `restartInterval` > 0 emits RSTn markers.
+      */
+    def dcScan(al: Int, withEob: Boolean, restartInterval: Int = 0): Unit = {
+      val bw = new BitWriter
+      val sent = Array.fill(dcs.size)(false)
+      var rstN = 0
+      var sinceRst = 0
+      for (_ <- 0 until mcus) {
+        if (restartInterval > 0 && sinceRst == restartInterval) {
+          bw.raw(0xff); bw.raw(0xd0 + rstN)
+          rstN = (rstN + 1) & 7
+          sinceRst = 0
+          java.util.Arrays.fill(sent, false)
+        }
+        for (c <- dcs.indices; _ <- 0 until blocksPerMcu(c)) {
+          val diff = if (sent(c)) 0 else dcs(c) >> al
+          sent(c) = true
+          val s = cat(diff)
+          val (code, len) = dcCodes(s)
+          bw.put(code, len)
+          if (s > 0) bw.put(if (diff >= 0) diff else diff + (1 << s) - 1, s)
+          if (withEob) bw.put(eobCode, eobLen)
+        }
+        sinceRst += 1
+      }
+      entropy(bw)
+    }
+
+    def end(): Array[Byte] = { marker(0xd9); out.toByteArray }
+  }
+
   /** A flat-color baseline JPEG. `dcs` holds the per-component DC values
     * (1 entry = grayscale, 3 = YCbCr with `samp` sampling factors); the
     * decoded constant sample of component i is `128 + dcs(i)/8` (pass
@@ -72,74 +154,12 @@ object JpegPlant {
     */
   def flat(w: Int, h: Int, dcs: Seq[Int], samp: Seq[(Int, Int)],
       restartInterval: Int = 0): Array[Byte] = {
-    require(dcs.size == 1 || dcs.size == 3, "1 or 3 components")
-    require(samp.size == dcs.size, "one (h,v) per component")
-    val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def segment(m: Int, payload: Array[Int]): Unit = {
-      marker(m); u16(payload.length + 2); payload.foreach(out.write)
-    }
-
-    marker(0xd8) // SOI
-    segment(0xdb, Array(0x00) ++ Array.fill(64)(1)) // DQT id0, all ones
-    // SOF0
-    segment(0xc0,
-      Array(8, (h >> 8) & 0xff, h & 0xff, (w >> 8) & 0xff, w & 0xff, dcs.size) ++
-        dcs.indices.flatMap { i =>
-          Seq(i + 1, (samp(i)._1 << 4) | samp(i)._2, 0)
-        })
-    // DHT: DC table 0, AC table 0
-    segment(0xc4,
-      Array(0x00) ++ dcBits ++ dcVals.map(_ & 0xff) ++
-        Array(0x10) ++ acBits ++ acVals.map(_ & 0xff))
+    val f = new Frame(0xc0, w, h, dcs, samp) // SOF0
     if (restartInterval > 0)
-      segment(0xdd, Array((restartInterval >> 8) & 0xff, restartInterval & 0xff))
-    // SOS: every component uses DC 0 / AC 0
-    segment(0xda,
-      Array(dcs.size) ++ dcs.indices.flatMap(i => Seq(i + 1, 0x00)) ++
-        Array(0, 63, 0))
-
-    // entropy: interleaved MCUs; per component the FIRST block after each
-    // predictor reset carries diff = dc, every later block diff = 0
-    val dcCodes = canon(dcBits)
-    val acCodes = canon(acBits)
-    val hMax = samp.map(_._1).max
-    val vMax = samp.map(_._2).max
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    val bw = new BitWriter
-    val sent = Array.fill(dcs.size)(false)
-    var rstN = 0
-    var sinceRst = 0
-    var mcu = 0
-    while (mcu < mcusX * mcusY) {
-      if (restartInterval > 0 && sinceRst == restartInterval) {
-        bw.raw(0xff); bw.raw(0xd0 + rstN)
-        rstN = (rstN + 1) & 7
-        sinceRst = 0
-        java.util.Arrays.fill(sent, false)
-      }
-      for (c <- dcs.indices; _ <- 0 until samp(c)._1 * samp(c)._2) {
-        val diff = if (sent(c)) 0 else dcs(c)
-        sent(c) = true
-        val s = cat(diff)
-        val (code, len) = dcCodes(s)
-        bw.put(code, len)
-        if (s > 0) {
-          val bits = if (diff >= 0) diff else diff + (1 << s) - 1
-          bw.put(bits, s)
-        }
-        val (eob, eobLen) = acCodes(0)
-        bw.put(eob, eobLen)
-      }
-      sinceRst += 1
-      mcu += 1
-    }
-    bw.align()
-    out.write(bw.bytes)
-    marker(0xd9) // EOI
-    out.toByteArray
+      f.segment(0xdd, Array((restartInterval >> 8) & 0xff, restartInterval & 0xff))
+    f.sos(dcs.indices, 0, 63, 0)
+    f.dcScan(0, withEob = true, restartInterval)
+    f.end()
   }
 
   /** The PROGRESSIVE (SOF2) twin of [[flat]]: identical analytic pixels
@@ -160,85 +180,28 @@ object JpegPlant {
     */
   def flatProgressive(w: Int, h: Int, dcs: Seq[Int],
       samp: Seq[(Int, Int)], sa: Boolean = false): Array[Byte] = {
-    require(dcs.size == 1 || dcs.size == 3, "1 or 3 components")
-    require(samp.size == dcs.size, "one (h,v) per component")
-    val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def segment(m: Int, payload: Array[Int]): Unit = {
-      marker(m); u16(payload.length + 2); payload.foreach(out.write)
-    }
-    marker(0xd8)
-    segment(0xdb, Array(0x00) ++ Array.fill(64)(1))
-    segment(0xc2, // SOF2
-      Array(8, (h >> 8) & 0xff, h & 0xff, (w >> 8) & 0xff, w & 0xff, dcs.size) ++
-        dcs.indices.flatMap(i =>
-          Seq(i + 1, (samp(i)._1 << 4) | samp(i)._2, 0)))
-    segment(0xc4,
-      Array(0x00) ++ dcBits ++ dcVals.map(_ & 0xff) ++
-        Array(0x10) ++ acBits ++ acVals.map(_ & 0xff))
-    val dcCodes = canon(dcBits)
-    val acCodes = canon(acBits)
-    val hMax = samp.map(_._1).max
-    val vMax = samp.map(_._2).max
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-
-    // scan 1: interleaved DC first pass, Ss=Se=0, Ah=0, Al = (sa ? 1 : 0);
-    // the coded values are the point-transformed dc >> Al (ARITHMETIC)
+    val f = new Frame(0xc2, w, h, dcs, samp) // SOF2
+    // scan 1: interleaved DC first pass, Ss=Se=0, Ah=0, Al = (sa ? 1 : 0)
     val al1 = if (sa) 1 else 0
-    segment(0xda,
-      Array(dcs.size) ++ dcs.indices.flatMap(i => Seq(i + 1, 0x00)) ++
-        Array(0, 0, al1))
-    val bw = new BitWriter
-    val sent = Array.fill(dcs.size)(false)
-    var mcu = 0
-    while (mcu < mcusX * mcusY) {
-      for (c <- dcs.indices; _ <- 0 until samp(c)._1 * samp(c)._2) {
-        val diff = if (sent(c)) 0 else dcs(c) >> al1
-        sent(c) = true
-        val s = cat(diff)
-        val (code, len) = dcCodes(s)
-        bw.put(code, len)
-        if (s > 0)
-          bw.put(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-      }
-      mcu += 1
-    }
-    bw.align()
-    out.write(bw.bytes)
-
+    f.sos(dcs.indices, 0, 0, al1)
+    f.dcScan(al1, withEob = false)
     if (sa) {
       // DC refinement scan (Ah=1, Al=0): one raw bit — bit 0 of the dc
       // VALUE (not the diff) — per block, same interleaved traversal
-      segment(0xda,
-        Array(dcs.size) ++ dcs.indices.flatMap(i => Seq(i + 1, 0x00)) ++
-          Array(0, 0, (1 << 4) | 0))
-      val bwR = new BitWriter
-      var m2 = 0
-      while (m2 < mcusX * mcusY) {
-        for (c <- dcs.indices; _ <- 0 until samp(c)._1 * samp(c)._2)
-          bwR.put(dcs(c) & 1, 1)
-        m2 += 1
-      }
-      bwR.align()
-      out.write(bwR.bytes)
+      f.sos(dcs.indices, 0, 0, (1 << 4) | 0)
+      val bw = new BitWriter
+      for (_ <- 0 until f.mcus; c <- dcs.indices; _ <- 0 until f.blocksPerMcu(c))
+        bw.put(dcs(c) & 1, 1)
+      f.entropy(bw)
     }
-
     // one AC scan per component: Ss=1, Se=63, all-zero band -> one EOB
     // code per block of the component's own (non-interleaved) grid
     for (c <- dcs.indices) {
-      segment(0xda, Array(1, c + 1, 0x00, 1, 63, 0))
-      val nbw = ((w * samp(c)._1 + hMax - 1) / hMax + 7) / 8
-      val nbh = ((h * samp(c)._2 + vMax - 1) / vMax + 7) / 8
-      val bwAc = new BitWriter
-      val (eob, eobLen) = acCodes(0)
-      var b = 0
-      while (b < nbw * nbh) { bwAc.put(eob, eobLen); b += 1 }
-      bwAc.align()
-      out.write(bwAc.bytes)
+      f.sos(Seq(c), 1, 63, 0)
+      val bw = new BitWriter
+      for (_ <- 0 until f.ownBlocks(c)) bw.put(eobCode, eobLen)
+      f.entropy(bw)
     }
-    marker(0xd9)
-    out.toByteArray
+    f.end()
   }
 }

@@ -184,19 +184,14 @@ object TranscriptGen {
           .as("created_ts"))
   }
 
-  /** Tool-call payload table for `role = 'tool'` turns: (conv_id, turn_idx,
-    * tool, args) with per-tool JSON args and planted schema violations at
-    * ~8/11 of rows clean (m = xxhash64(seed,"argm",conv_id,turn_idx) mod 11
-    * selects the q116 case list for search/fetch; other tools — including
-    * the FMT-planted "v1.2" — carry a generic payload, malformed at m = 0,
-    * exercising the unknown-tool path where only MALFORMED_ARGS applies).
-    * Same no-RNG/no-wall-clock generation contract as [[transcripts]].
+  /** Planted `search` and `fetch` tool-call args for case `m` in 0..10:
+    * m = 0..6 plant one schema fault each (malformed JSON, a non-object, a
+    * missing required arg, unknown keys, an enum miss, a wrongly typed
+    * value, an out-of-range value), m = 7 is a null payload and m ≥ 8 a
+    * clean one. Shared by [[toolCalls]] and the q116 entry, whose oracle
+    * rebuilds the same cases.
     */
-  def toolCalls(spark: SparkSession, cfg: Config = Config()): DataFrame = {
-    val tt = transcripts(spark, cfg)
-      .filter(col("role") === "tool" && col("tool").isNotNull)
-    val m = pmod(xxhash64(lit(cfg.seed), lit("argm"),
-      col("conv_id"), col("turn_idx")), lit(11))
+  def plantedArgs(m: Column): (Column, Column) = {
     val searchArgs = when(m === 0, lit("{\"q\":"))
       .when(m === 1, lit("[1, 2]"))
       .when(m === 2, lit("{}"))
@@ -216,6 +211,23 @@ object TranscriptGen {
       .when(m === 6, lit("{\"url\":\"u\",\"method\":\"GET\",\"timeout_ms\":0}"))
       .when(m === 7, lit(null).cast("string"))
       .otherwise(lit("{\"url\":\"u\",\"method\":\"POST\",\"timeout_ms\":500}"))
+    (searchArgs, fetchArgs)
+  }
+
+  /** Tool-call payload table for `role = 'tool'` turns: (conv_id, turn_idx,
+    * tool, args) with per-tool JSON args and planted schema violations at
+    * ~8/11 of rows clean (m = xxhash64(seed,"argm",conv_id,turn_idx) mod 11
+    * selects the q116 case list for search/fetch; other tools — including
+    * the FMT-planted "v1.2" — carry a generic payload, malformed at m = 0,
+    * exercising the unknown-tool path where only MALFORMED_ARGS applies).
+    * Same no-RNG/no-wall-clock generation contract as [[transcripts]].
+    */
+  def toolCalls(spark: SparkSession, cfg: Config = Config()): DataFrame = {
+    val tt = transcripts(spark, cfg)
+      .filter(col("role") === "tool" && col("tool").isNotNull)
+    val m = pmod(xxhash64(lit(cfg.seed), lit("argm"),
+      col("conv_id"), col("turn_idx")), lit(11))
+    val (searchArgs, fetchArgs) = plantedArgs(m)
     val otherArgs = when(m === 0, lit("{")).otherwise(lit("{\"x\":1}"))
     tt.select(col("conv_id"), col("turn_idx"), col("tool"),
       when(col("tool") === "search", searchArgs)

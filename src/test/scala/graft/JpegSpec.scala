@@ -5,11 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{JpegPlant, Multimodal}
 
-/** Baseline JPEG pixel decode ([[graft.functions.JpegDecode]]):
+/** JPEG pixel decode, sequential and progressive, through the one scan
+  * decoder ([[graft.functions.JpegDecode]]):
   *
   *  - analytic flat-color images from [[JpegPlant]] (DC-only, all-ones
   *    quant table → every sample is exactly 128 + dc/8) across grayscale /
   *    4:4:4 / 4:2:2 / 4:2:0, multi-MCU grids, restart intervals, odd dims;
+  *  - the sequential envelope: a stream with no EOI or with bytes after
+  *    its scan, a size-0 AC symbol with run 1..14 ending only its block,
+  *    and a 1-component frame's MCU block order under 2×2 / 2×1 / 1×2
+  *    sampling;
   *  - a full test-side encoder (Annex K huffman tables, forward DCT,
   *    run-length AC with ZRL, byte stuffing) + an independent reference
   *    decode (dequant → IDCT → nearest-neighbor upsample → JFIF YCbCr)
@@ -166,10 +171,14 @@ class JpegSpec extends AnyFunSuite {
 
   /** Encode per-component planes of QUANTIZED natural-order coefficient
     * blocks into a baseline JPEG (one shared all-`q` quant table, Annex K
-    * luminance huffman tables for everything).
+    * luminance huffman tables for everything unless another AC table is
+    * given). `eobSym(n)` is the symbol that ends the n-th coded block when
+    * its band has trailing zeros (0x00, the plain EOB, by default).
     */
   private def encode(w: Int, h: Int, samp: Seq[(Int, Int)],
-      blocks: Seq[Map[(Int, Int), Array[Int]]], q: Array[Int]): Array[Byte] = {
+      blocks: Seq[Map[(Int, Int), Array[Int]]], q: Array[Int],
+      acBits: Array[Int] = kAcBits, acVals: Array[Byte] = kAcVals,
+      eobSym: Int => Int = _ => 0x00): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def u16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
@@ -183,17 +192,18 @@ class JpegSpec extends AnyFunSuite {
         samp.indices.flatMap(i => Seq(i + 1, (samp(i)._1 << 4) | samp(i)._2, 0)))
     segment(0xc4,
       Array(0x00) ++ kDcBits ++ kDcVals.map(_ & 0xff) ++
-        Array(0x10) ++ kAcBits ++ kAcVals.map(_ & 0xff))
+        Array(0x10) ++ acBits ++ acVals.map(_ & 0xff))
     segment(0xda,
       Array(samp.size) ++ samp.indices.flatMap(i => Seq(i + 1, 0x00)) ++
         Array(0, 63, 0))
-    val dcC = canon(kDcBits); val acC = canon(kAcBits)
-    val acIdx = kAcVals.zipWithIndex.map { case (v, i) => (v & 0xff) -> i }.toMap
+    val dcC = canon(kDcBits); val acC = canon(acBits)
+    val acIdx = acVals.zipWithIndex.map { case (v, i) => (v & 0xff) -> i }.toMap
     val bw = new BitW
     val hMax = samp.map(_._1).max; val vMax = samp.map(_._2).max
     val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
     val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
     val pred = Array.fill(samp.size)(0)
+    var nBlk = 0
     for (my <- 0 until mcusY; mx <- 0 until mcusX; c <- samp.indices;
          by <- 0 until samp(c)._2; bx <- 0 until samp(c)._1) {
       val blk = blocks(c).getOrElse(
@@ -219,7 +229,8 @@ class JpegSpec extends AnyFunSuite {
         }
         k += 1
       }
-      if (run > 0) { val (e, el) = acC(acIdx(0x00)); bw.put(e, el) }
+      if (run > 0) { val (e, el) = acC(acIdx(eobSym(nBlk))); bw.put(e, el) }
+      nBlk += 1
     }
     bw.align()
     out.write(bw.out.toByteArray)
@@ -340,6 +351,77 @@ class JpegSpec extends AnyFunSuite {
     assert(r.getString(0) === "jpeg")
     assert(r.getDouble(2) === er && r.getDouble(3) === eg && r.getDouble(4) === eb)
     assert(r.getSeq[Long](5) === ehr)
+  }
+
+  // ---------------- sequential scan envelope ----------------
+
+  /** A 24×16 gradient coded by the full encoder, and its reference stats. */
+  private lazy val gradient = {
+    val q = Array.tabulate(64)(i => 1 + (i % 7))
+    val plane = Array.tabulate(16, 24)((y, x) => (x * 11 + y * 23 + x * y) % 256)
+    val blocks = Seq(fdctBlocks(plane, q))
+    (encode(24, 16, Seq((1, 1)), blocks, q), refStats(24, 16, Seq((1, 1)), blocks, q))
+  }
+
+  private def assertRef(bytes: Array[Byte],
+      ref: (Double, Double, Double, Seq[Long]), what: String): Unit = {
+    val r = decodeStats(bytes)
+    assert(r.getString(0) === "jpeg", s"$what must decode")
+    assert(r.getDouble(2) === ref._1 && r.getDouble(3) === ref._2 &&
+      r.getDouble(4) === ref._3, s"$what: means must match the reference replay")
+    assert(r.getSeq[Long](5) === ref._4, s"$what: histogram must match")
+  }
+
+  test("a complete sequential stream with no EOI still decodes to the " +
+    "reference stats") {
+    val (bytes, ref) = gradient
+    assert(bytes.takeRight(2).toSeq === Seq(0xff.toByte, 0xd9.toByte))
+    assertRef(bytes.dropRight(2), ref, "no-EOI stream")
+  }
+
+  test("bytes after the sequential scan are ignored: a stream with trailing " +
+    "junk, a stray marker or a second EOI decodes like the plain one") {
+    val (bytes, ref) = gradient
+    val junk = Array(0x12, 0x34, 0xff, 0x00, 0xab).map(_.toByte)
+    val strayMarker = Array(0xff, 0xe1, 0x00).map(_.toByte)
+    val eoi = Array(0xff, 0xd9).map(_.toByte)
+    assertRef(bytes ++ junk, ref, "trailing junk")
+    assertRef(bytes ++ strayMarker, ref, "trailing stray marker")
+    assertRef(bytes ++ eoi, ref, "second EOI")
+    assertRef(bytes.dropRight(2) ++ junk, ref, "junk in place of EOI")
+  }
+
+  test("sequential AC: a size-0 symbol with run 1..14 ends exactly its own " +
+    "block, with no EOB run and no extra bits") {
+    // the progressive AC table carries the EOBn symbols 0x10..0xE0; every
+    // block of a 24x16 image ends its band with one of them
+    val q = Array.tabulate(64)(i => 1 + (i % 3))
+    val blocks = Seq((for (by <- 0 until 2; bx <- 0 until 3) yield {
+      val i = by * 3 + bx
+      val blk = new Array[Int](64)
+      blk(0) = 16 * i - 40; blk(ZZ(1)) = i + 1; blk(ZZ(2)) = -(i % 3) - 1
+      blk(ZZ(5)) = 3 - i
+      (bx, by) -> blk
+    }).toMap)
+    val bytes = encode(24, 16, Seq((1, 1)), blocks, q, pAcBits, pAcVals,
+      eobSym = n => ((n % 14) + 1) << 4)
+    assertRef(bytes, refStats(24, 16, Seq((1, 1)), blocks, q), "EOBn-as-EOB")
+  }
+
+  test("a 1-component sequential frame with sampling factors other than " +
+    "1x1 decodes its blocks in MCU order over the padded MCU grid") {
+    // hMax = vMax = the component's own factors: each MCU holds h x v
+    // blocks, walked row-major inside the MCU, MCUs row-major
+    val q = Array.tabulate(64)(i => 2 + (i % 5))
+    for ((w, h, hv) <- Seq((20, 12, (2, 2)), (20, 12, (2, 1)), (12, 20, (1, 2)))) {
+      val mX = (w + 8 * hv._1 - 1) / (8 * hv._1)
+      val mY = (h + 8 * hv._2 - 1) / (8 * hv._2)
+      val plane = Array.tabulate(mY * 8 * hv._2, mX * 8 * hv._1)(
+        (y, x) => (x * 9 + y * 17 + x * y) % 256)
+      val blocks = Seq(fdctBlocks(plane, q))
+      assertRef(encode(w, h, Seq(hv), blocks, q),
+        refStats(w, h, Seq(hv), blocks, q), s"${w}x$h at $hv")
+    }
   }
 
   // ---------------- progressive encoder (SOF2) ----------------

@@ -133,6 +133,17 @@ class RunnerSpec extends AnyFunSuite {
     assert(m.filter(col("wall_ms") >= 0).count() === 8)
   }
 
+  test("run leaves the session's partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "STATIC")
+    try {
+      val out = SparkTestSession.tempDir("graft_run6").toString
+      Runner.run(spark, turns, Some(convs), out, "runC")
+      assert(spark.conf.get(key) === "STATIC")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("verdicts: one file per part_id directory, validatedParts matches " +
     "the run's manifest and verdict rows, nothing left persisted") {
     turns.count(); convs.count() // materialize the cached inputs first
