@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,9 @@ object Probe {
     // warm) through the noop sink and prints its time with the driver
     // jobs / stages / tasks it ran (host-independent scheduler-overhead
     // evidence: a lazy-checkpoint or shuffle-removal win shows up here even
-    // when the host's wall-clock is noisy).
+    // when the host's wall-clock is noisy) and the Janino compiles it
+    // caused: an entry whose warm rep still compiles has outgrown Spark's
+    // codegen cache.
     if (args.headOption.contains("jq")) {
       val sfDir = args(1)
       import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
@@ -49,13 +52,16 @@ object Probe {
         (1 to 2).foreach { rep =>
           val c = new Counter
           spark.sparkContext.addSparkListener(c)
+          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           noop(fn(spark, sfDir))
           val sec = (System.nanoTime() - t0) / 1e9
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
           Thread.sleep(300) // let the async listener bus drain
           spark.sparkContext.removeSparkListener(c)
           println(f"PROBE jq $name%-28s rep$rep $sec%7.2f s  " +
-            f"jobs=${c.jobs.get}%3d stages=${c.stages.get}%3d tasks=${c.tasks.get}%5d")
+            f"jobs=${c.jobs.get}%3d stages=${c.stages.get}%3d tasks=${c.tasks.get}%5d " +
+            f"compiles=$compiles%4d")
         }
       }
       spark.stop()

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * checks (reference `src/core/models.py:8-96`) and its soft-path validator
   * (reference `src/core/verification.py:15-121`). Every check compiles to
   * built-in, codegen-friendly `Column` expressions — zero row-level UDFs
-  * (SURVEY.md §2.11) — so the whole per-row validation pass stays inside one
-  * whole-stage-codegen pipeline over the scan.
+  * (SURVEY.md §2.11) and no lambda — so the whole per-row validation pass,
+  * the explode included, stays inside one whole-stage-codegen pipeline over
+  * the scan.
   *
   * Message strings follow the reference's f-string formats byte-for-byte where
   * a counterpart exists (e.g. "Missing required field: {f}" from
@@ -203,34 +204,39 @@ object Checks {
   )
 
   /** Compile a catalog to a single array-of-violation-structs column:
-    * `filter(array(when(violated, struct(...)), ...), v -> v IS NOT NULL)`.
+    * `concat(when(violated, array(struct(...))).otherwise(empty), ...)`.
     * One projection, codegen'd end-to-end; violation fan-out is a built-in
     * `explode` downstream (SURVEY.md §2.11 — no Generator/UDTF needed).
     */
   def violationsArray(checks: Seq[Check]): Column =
     compileRules(checks.map { c =>
       (c.violated,
-        when(c.violated,
-          struct(
-            lit(c.ruleId).as("rule_id"),
-            lit(c.field).as("field"),
-            c.message.as("message"))))
+        struct(
+          lit(c.ruleId).as("rule_id"),
+          lit(c.field).as("field"),
+          c.message.as("message")))
     })
 
-  /** Compile (predicate, guarded-struct) rule pairs into the violations
+  /** Compile (predicate, violation-struct) rule pairs into the violations
     * array — the ONE implementation of the guard/no-cascade contract,
     * shared by [[violationsArray]] and [[ToolArgs.violations]] so the
     * clean-row guard and the struct schema can never drift apart.
+    *
+    * Each rule contributes a one-element array when its predicate holds
+    * and the empty array otherwise; `concat` joins them in catalog order.
+    * No lambda: a higher-order `filter` would run interpreted and pull
+    * the explode out of the scan's whole-stage-codegen stage.
     *
     * The allocation-heavy array/struct construction hides behind one cheap
     * boolean OR: clean rows (the overwhelming majority) never build the
     * array. Violated rows evaluate their predicates twice — a good trade.
     */
   private[checks] def compileRules(rules: Seq[(Column, Column)]): Column = {
-    val anyViolated = rules.map(p => coalesce(p._1, lit(false)))
-      .reduce(_ || _)
-    when(anyViolated, filter(array(rules.map(_._2): _*), v => v.isNotNull))
-      .otherwise(array().cast(
-        "array<struct<rule_id:string,field:string,message:string>>"))
+    val empty = array().cast(
+      "array<struct<rule_id:string,field:string,message:string>>")
+    val fired = rules.map { case (p, v) => coalesce(p, lit(false)) -> v }
+    when(fired.map(_._1).reduce(_ || _),
+      concat(fired.map { case (p, v) => when(p, array(v)).otherwise(empty) }: _*))
+      .otherwise(empty)
   }
 }

@@ -119,8 +119,8 @@ object ToolArgs {
 
     def rule(pred: Column, ruleId: String, field: String, msg: Column)
         : (Column, Column) =
-      (pred, when(pred, struct(lit(ruleId).as("rule_id"),
-        lit(field).as("field"), msg.as("message"))))
+      (pred, struct(lit(ruleId).as("rule_id"),
+        lit(field).as("field"), msg.as("message")))
 
     val malformed = rule(args.isNotNull && keys.isNull,
       "MALFORMED_ARGS", "args", concat(lit("Malformed tool args: "), args))

@@ -1,50 +1,39 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.ChiSquareAgg.{chiSquare => chiSquareAgg}
 
 /** Distribution-drift detection between partitions (SURVEY.md §2.5 drift
   * row): Pearson chi-square of each partition's categorical frequency vector
-  * (role or tool) against the pooled table, in pure `Column` arithmetic — no
-  * UDF, no MLlib dependency.
+  * (role or tool) against the pooled table, in `Column` arithmetic and one
+  * native aggregate — no UDF, no MLlib dependency.
   *
-  * Only the first `groupBy(part_id, col)` touches big data (and it partial-
-  * aggregates map-side to ≤ parts × |vocab| rows); everything after operates
-  * on that tiny contingency table.
+  * Only the first aggregate touches big data (it partial-aggregates
+  * map-side to ≤ parts × |vocab| cells); everything after operates on that
+  * tiny contingency table.
   */
 object Drift {
 
   /** Per-partition chi-square statistic over `category` frequencies.
     * Output: (part_id, chi2, dof, n, drifted).
     *
-    * A zero cell adds its `e`, and a partition's `e`s sum to its row total
-    * `r`, so Σ (o − e)²/e over all cells = Σ o²/e over present cells − r.
-    * The contingency table is coalesced into one task, where the totals are
-    * window sums: one shuffle for the whole statistic.
+    * One aggregate, [[ChiSquareAgg]], counts the `(part_id, category)`
+    * cells map-side and computes every partition's statistic from the
+    * merged table: one scan and one shuffle of the partials, no window or
+    * sort.
     */
   def chiSquare(
       df: DataFrame,
       category: String,
-      threshold: Double = 30.0): DataFrame = {
-    val all = Window.partitionBy()
-    val r = sum("o").over(Window.partitionBy("part_id"))
+      threshold: Double = 30.0): DataFrame =
     df
-      .groupBy(col("part_id"), coalesce(col(category), lit("__null__")).as("cat"))
-      .agg(count(lit(1)).as("o"))
-      .coalesce(1)
-      .withColumn("k", dense_rank().over(Window.orderBy("cat")))
-      .select(col("part_id"), col("o"), r.as("r"),
-        (r * sum("o").over(Window.partitionBy("cat")) / sum("o").over(all))
-          .as("e"),
-        max("k").over(all).as("k"))
-      .groupBy("part_id")
-      .agg(
-        (sum(col("o") * col("o") / col("e")) - max("r")).as("chi2"),
-        (max("k") - 1).cast("long").as("dof"),
-        max("r").as("n"))
+      .agg(chiSquareAgg(col("part_id"),
+        coalesce(col(category), lit("__null__"))).as("cells"))
+      .select(explode(col("cells")).as("s"))
+      .select(col("s.*"))
       .withColumn("drifted", col("chi2") > threshold)
-  }
 
   /** Population Stability Index of each partition's category distribution
     * against the pooled table: Σ (p − q)·ln(p/q), proportions floored at

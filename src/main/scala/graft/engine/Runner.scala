@@ -60,10 +60,13 @@ object Runner {
     // column first (one file per part_id dir instead of tasks×parts small
     // files — measured 3.4x faster sink), restore the mandated stable
     // (conv_id, turn_idx) within-partition order after the exchange, write,
-    // and derive everything downstream from the WRITTEN files.
+    // and derive everything downstream from the WRITTEN files. The sort
+    // leads with part_id: the partitioned writer needs that order, so it
+    // adds no sort of its own, which would replace this one and lose the
+    // (conv_id, turn_idx) order inside each file.
     Validator.allViolations(todo, conversations, sortOutput = false)
       .repartition(col("part_id"))
-      .sortWithinPartitions("conv_id", "turn_idx")
+      .sortWithinPartitions("part_id", "conv_id", "turn_idx")
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("part_id").parquet(s"$outDir/violations")
     val writtenViolations = spark.read.parquet(s"$outDir/violations")

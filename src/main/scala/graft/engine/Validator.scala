@@ -18,9 +18,9 @@ object Validator {
   val violationCols: Seq[String] =
     Seq("conv_id", "turn_idx", "part_id", "rule_id", "field", "message", "text")
 
-  /** Per-row checks compiled to one projection + explode. Whole-stage
-    * codegen'd; reads only the columns the catalog references (Catalyst
-    * prunes the rest through the scan).
+  /** Per-row checks compiled to one projection + explode, both inside the
+    * scan's whole-stage-codegen pipeline; reads only the columns the catalog
+    * references (Catalyst prunes the rest through the scan).
     */
   def rowViolations(
       turns: DataFrame,
@@ -189,13 +189,14 @@ object Validator {
         dupKeyRule :+ col("text"): _*)
   }
 
-  /** ORPHAN_CONV as a compiled row check over the `__dim` marker of a
-    * left join against the dim's keys (null marker: no dim row).
+  /** ORPHAN_CONV as a compiled row check over the `__dim` marker of an
+    * existence join against the dim's keys (false: no dim row, or a null
+    * `conv_id`).
     */
   private val orphanCheck: Check = new Check {
     val ruleId = "ORPHAN_CONV"
     val field = "conv_id"
-    def violated: Column = col("__dim").isNull
+    def violated: Column = !col("__dim")
     def message: Column =
       format_string("Dangling conv_id reference: %s", col("conv_id"))
   }
@@ -378,25 +379,27 @@ object Validator {
   /** Merged tail of [[tsOrderViolations]] + [[dupViolations]] for
     * [[allViolations]], row-identical to them (asserted in ValidatorSpec).
     * Duplicate keys are peers in the ts-order window's key order, so a
-    * peer-range `count(1)` beside `lag(ts)` finds them in ONE window; the
-    * `groupBy` over the rare surviving rows reuses the window's conv_id
-    * partitioning, and both rules share one text-attach scan, join and
-    * aggregate. Null keys drop at that join, as in the standalone faces.
+    * peer-range `count(1)` beside `lag(ts)` finds them in ONE window. The
+    * rare surviving rows join `text` first, so one per-key `groupBy` takes
+    * both rules' minima and the kept text: a minimum over the join equals
+    * the minimum over the window rows, whatever a key's multiplicity. Null
+    * keys drop at that join, as in the standalone faces.
     */
   private def tsDupViolations(turns: DataFrame): DataFrame = {
     val w = Window.partitionBy("conv_id").orderBy("turn_idx")
     val tsBad = col("prev_ts").isNotNull && col("prev_ts") > col("ts")
-    val badKeys = turns
+    val keys = Seq("conv_id", "turn_idx")
+    turns
       .select(col("conv_id"), col("turn_idx"), col("part_id"), col("ts"),
         lag("ts", 1).over(w).as("prev_ts"),
         count(lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
           .as("n"))
       .filter(tsBad || col("n") > 1)
-      .groupBy(col("conv_id"), col("turn_idx"))
+      .join(turns.select(col("conv_id"), col("turn_idx"), col("text")), keys)
+      .groupBy(keys.map(col): _*)
       .agg(min(when(tsBad, col("part_id"))).as("ts_pid"),
         min(when(tsBad, struct(col("ts"), col("prev_ts")))).as("p"),
-        min("part_id").as("dup_pid"), max("n").as("n"))
-    withText(badKeys, turns)
+        min("part_id").as("dup_pid"), max("n").as("n"), min("text").as("text"))
       .select(col("conv_id"), col("turn_idx"), col("text"),
         explode(array(
           when(col("p").isNotNull,
@@ -425,19 +428,17 @@ object Validator {
       conversations: Option[DataFrame] = None,
       checks: Seq[Check] = Checks.transcriptChecks,
       sortOutput: Boolean = true): DataFrame = {
-    // The referential check rides the SAME scan as the row checks: a
-    // left join marks dim presence and ORPHAN_CONV is one more compiled
-    // rule in the row-check explode (guide §1.2). The join broadcasts when
-    // the dim's key set passes the stats gate, else it is a plain join.
-    // The dim keys are deduped first so the join can never duplicate turn
-    // rows (a left_anti is insensitive to dim duplicates; the marker join
-    // must be made so).
+    // The referential check rides the SAME scan as the row checks: an
+    // IN subquery on the dim's keys marks dim presence (an existence join,
+    // which never duplicates turn rows, so the dim needs no dedup) and
+    // ORPHAN_CONV is one more compiled rule in the row-check explode
+    // (guide §1.2). The join broadcasts when the dim's key set passes the
+    // stats gate, else it is a plain join.
     val rows = conversations match {
       case Some(dim) =>
-        val marked = broadcastIfFits(dim.select("conv_id").distinct())
-          .withColumn("__dim", lit(1))
-        rowViolations(turns.join(marked, Seq("conv_id"), "left"),
-          checks :+ orphanCheck)
+        val keys = broadcastIfFits(dim.select("conv_id"))
+        val marked = turns.withColumn("__dim", col("conv_id").isin(keys))
+        rowViolations(marked, checks :+ orphanCheck)
       case None => rowViolations(turns, checks)
     }
     val all = rows.unionByName(tsDupViolations(turns))
@@ -456,22 +457,27 @@ object Validator {
   def verdicts(
       turns: DataFrame,
       violations: DataFrame): DataFrame = {
-    // rows + warnings counted in ONE scan/aggregate (the warning predicate is
-    // row-local, so it folds into the same groupBy instead of a second pass)
+    // rows, warnings and violations counted in ONE aggregate over the union
+    // of the two inputs: each side marks what it counts, and parts that only
+    // the violations hold (sink files of an earlier run) have no rows and
+    // are dropped
     val warnCond = col("text").isNotNull && length(col("text")) > 1000 &&
       length(col("text")) <= 2000
-    val rows = turns.groupBy("part_id").agg(
-      count(lit(1)).as("n_rows"),
-      sum(when(warnCond, 1L).otherwise(0L)).as("n_warnings"))
-    val viol = violations.groupBy("part_id").agg(count(lit(1)).as("n_violations"))
-    rows
-      .join(viol, Seq("part_id"), "left_outer")
+    val one = lit(1L)
+    val none = lit(null).cast("long")
+    turns
+      .select(col("part_id"), one.as("r"),
+        when(warnCond, 1L).otherwise(0L).as("w"), none.as("v"))
+      .unionByName(violations.select(col("part_id"), none.as("r"),
+        none.as("w"), one.as("v")))
+      .groupBy("part_id")
+      .agg(count("r").as("n_rows"), sum("w").as("n_warnings"),
+        count("v").as("n_violations"))
+      .filter(col("n_rows") > 0)
       .select(
         col("part_id"),
-        when(coalesce(col("n_violations"), lit(0L)) === 0, lit("valid"))
+        when(col("n_violations") === 0, lit("valid"))
           .otherwise(lit("invalid")).as("status"),
-        col("n_rows"),
-        coalesce(col("n_violations"), lit(0L)).as("n_violations"),
-        col("n_warnings"))
+        col("n_rows"), col("n_violations"), col("n_warnings"))
   }
 }

@@ -31,6 +31,25 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("* Project"), s"no codegen'd projection in:\n$p")
   }
 
+  test("row-check explode sits inside a whole-stage-codegen stage, with " +
+    "no lambda left in the plan") {
+    // parquet inputs: the generator's own plan holds lambdas
+    val dir = SparkTestSession.tempDir("graft_plan_explode").toString
+    turns.write.parquet(s"$dir/turns")
+    convs.write.parquet(s"$dir/convs")
+    val t = spark.read.parquet(s"$dir/turns")
+    val c = spark.read.parquet(s"$dir/convs")
+    Seq(Validator.rowViolations(t), Validator.allViolations(t, Some(c))).foreach { df =>
+      df.collect() // the adaptive plan shows its codegen stages once final
+      val p = plan(df).split("== Initial Plan ==")(0)
+      assert(p.contains("* Generate"), s"no codegen'd explode in:\n$p")
+      // formatted explain prefixes a codegen'd operator with '* '
+      assert("""[-:]\s+Generate \(""".r.findFirstIn(p).isEmpty,
+        s"an explode runs outside whole-stage codegen in:\n$p")
+      assert(!p.contains("lambdafunction"), s"a lambda is left in:\n$p")
+    }
+  }
+
   test("referential join: our stats-driven hint controls the strategy") {
     // disable Spark's own auto-broadcast so the choice observed is OURS
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,6 +133,26 @@ class RunnerSpec extends AnyFunSuite {
     assert(m.filter(col("snapshot") === "snapA").count() === 8)
     assert(m.agg(sum("n_rows")).as[Long].head() === turns.count())
     assert(m.filter(col("wall_ms") >= 0).count() === 8)
+  }
+
+  test("every violations file is sorted by (conv_id, turn_idx), nulls first") {
+    val out = SparkTestSession.tempDir("graft_run_order").toString
+    Runner.run(spark, turns, Some(convs), out, "order", resume = false)
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(out, "violations"))
+      try s.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty)
+    val byKey: Ordering[(Option[String], Option[Int])] = Ordering.Tuple2(
+      Ordering.Option(Ordering.String), Ordering.Option(Ordering.Int))
+    files.foreach { f =>
+      val keys = spark.read.parquet(f).select("conv_id", "turn_idx").collect()
+        .map(r => (Option(r.getString(0)),
+          if (r.isNullAt(1)) None else Some(r.getInt(1)))).toSeq
+      assert(keys === keys.sorted(byKey), s"$f is not in key order")
+    }
   }
 
   test("run leaves the session's partitionOverwriteMode as it found it") {
