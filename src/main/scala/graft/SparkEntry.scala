@@ -226,6 +226,49 @@ object SparkEntry {
       .select(col("doc_id"), planted.as("t"))
   }
 
+  /** q25/q35's merge inputs: the even customers as primary, and every
+    * customer as secondary with a masked name and no balance.
+    */
+  private def customerMergeSides(
+      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val c = t(s, dir, "customer")
+    val primary = c.filter(col("c_custkey") % 2 === 0)
+      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
+    val secondary = c.select(col("c_custkey"),
+      concat(lit("llm_"), col("c_name")).as("c_name"),
+      lit(null).cast("double").as("c_acctbal"))
+    (primary, secondary)
+  }
+
+  /** q29/q115's bounded exact baseline: every pair `a.doc_id < b.doc_id`
+    * of the first 10 docs, each side carrying its word-3-gram shingle
+    * array `sh`, built BEFORE the cross join so no pair re-splits text.
+    */
+  private def firstDocShinglePairs(s: SparkSession, dir: String): DataFrame = {
+    val d = t(s, dir, "documents").filter(col("doc_id") < 10)
+      .select(col("doc_id"), Dedup.splitWords(col("text")).as("__w"))
+      .select(col("doc_id"), Dedup.shinglesOfWords(col("__w"), 3).as("sh"))
+    d.as("a").crossJoin(d.as("b"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+  }
+
+  /** `e` plus the planted scaled copies of q39/q118/t25: every 25th vector
+    * again at id + 10^7 (the q110 convention), scaled by 1.01 — cosine 1
+    * to its original and the same sign-LSH bucket and IVF cell.
+    */
+  private def withScaledCopies(e: DataFrame): DataFrame =
+    e.unionByName(e.filter(col("vec_id") % 25 === 0)
+      .select((col("vec_id") + 10000000L).as("vec_id"),
+        transform(col("embedding"), x => x * lit(1.01f)).as("embedding")))
+
+  /** q118/q119's fixed IVF centroids, the first 4 vectors, so DuckDB can
+    * replay the assignment.
+    */
+  private def firstCentroids(e: DataFrame): Seq[Seq[Double]] =
+    e.filter(col("vec_id") < 4).orderBy("vec_id")
+      .select(col("embedding").cast("array<double>")).collect()
+      .map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
+
   /** Exact double sum via DECIMAL(18,2) accumulation (order-independent),
     * surfaced back as a rounded double — matches
     * `round(CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE), 2)` in DuckDB.
@@ -479,14 +522,9 @@ object SparkEntry {
     }),
     "q25_priority_merge" -> ((s, dir) => {
       // reference merge_jsonld semantics (utils.py:55-62): primary wins,
-      // secondary fills absent keys — evens of customer primary, all rows
-      // secondary with masked name; merged name must keep primary's for evens
-      val c = t(s, dir, "customer")
-      val primary = c.filter(col("c_custkey") % 2 === 0)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val secondary = c.select(col("c_custkey"),
-        concat(lit("llm_"), col("c_name")).as("c_name"),
-        lit(null).cast("double").as("c_acctbal"))
+      // secondary fills absent keys; merged name must keep primary's for
+      // evens
+      val (primary, secondary) = customerMergeSides(s, dir)
       graft.ops.Merge.priorityMerge(primary, secondary, "c_custkey")
         .select(col("c_custkey"), col("c_name"),
           round(coalesce(col("c_acctbal"), lit(-1.0)), 2).as("acctbal"))
@@ -510,13 +548,7 @@ object SparkEntry {
     }),
     "q29_ngram_jaccard" -> ((s, dir) => {
       // exact word-3-gram Jaccard over all pairs of the first 10 docs
-      // (bounded exact baseline); shingle arrays materialize BEFORE the
-      // cross join — attribute reads in the verify, no per-pair re-split
-      val d = t(s, dir, "documents").filter(col("doc_id") < 10)
-        .select(col("doc_id"), Dedup.splitWords(col("text")).as("__w"))
-        .select(col("doc_id"), Dedup.shinglesOfWords(col("__w"), 3).as("sh"))
-      d.as("a").crossJoin(d.as("b"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
+      firstDocShinglePairs(s, dir)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
           round(Dedup.jaccardOfShingles(col("a.sh"), col("b.sh")), 4)
             .as("jaccard"))
@@ -527,11 +559,7 @@ object SparkEntry {
       // subset-duplicate measure — |A∩B|/|A| — that symmetric Jaccard
       // can't see; scale face = span-fingerprint candidates verified by
       // Dedup.containmentPairs (t23)
-      val d = t(s, dir, "documents").filter(col("doc_id") < 10)
-        .select(col("doc_id"), Dedup.splitWords(col("text")).as("__w"))
-        .select(col("doc_id"), Dedup.shinglesOfWords(col("__w"), 3).as("sh"))
-      d.as("a").crossJoin(d.as("b"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
+      firstDocShinglePairs(s, dir)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
           round(Dedup.containmentOfShingles(col("a.sh"), col("b.sh")), 4)
             .as("c_ab"),
@@ -572,13 +600,8 @@ object SparkEntry {
       // offset 10^7 (the q110 convention) keeps planted ids collision-free
       // up to 10^7 real vec_ids — far past any test scale factor.
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val copies = e.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.01f)).as("embedding"))
-      val cents = e.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
-      Similarity.semDedupPairs(e.unionByName(copies), cents, threshold = 0.95)
+      val cents = firstCentroids(e)
+      Similarity.semDedupPairs(withScaledCopies(e), cents, threshold = 0.95)
         .select(col("cid"), col("id_a"), col("id_b"),
           round(col("cos"), 4).as("cos"))
     }),
@@ -588,9 +611,7 @@ object SparkEntry {
       // DuckDB replays assignment, the nProbe probe list, the band filter,
       // and the rank tie-break.
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cents = e.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
+      val cents = firstCentroids(e)
       Similarity.hardNegatives(e, e.filter(col("vec_id") < 3), k = 5,
           loSim = 0.2, hiSim = 0.8, nProbe = 2, centroids = Some(cents))
         .select(col("query_id"), col("vec_id"),
@@ -852,12 +873,7 @@ object SparkEntry {
     "q35_merge_stats" -> ((s, dir) => {
       // merged-field-count metric (utils.py:57-62): per field, how many
       // merged rows took the secondary's value — same construction as q25
-      val c = t(s, dir, "customer")
-      val primary = c.filter(col("c_custkey") % 2 === 0)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val secondary = c.select(col("c_custkey"),
-        concat(lit("llm_"), col("c_name")).as("c_name"),
-        lit(null).cast("double").as("c_acctbal"))
+      val (primary, secondary) = customerMergeSides(s, dir)
       graft.ops.Merge.mergeFieldCounts(primary, secondary, "c_custkey")
     }),
     "q39_cosine_neardup" -> ((s, dir) => {
@@ -867,10 +883,7 @@ object SparkEntry {
       // from the 0.95 threshold — the oracle certifies bucketing, candidate
       // dedup, exact verify, and the threshold filter
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val copies = e.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.01f)).as("embedding"))
-      Similarity.cosineNearDupPairs(e.unionByName(copies), threshold = 0.95)
+      Similarity.cosineNearDupPairs(withScaledCopies(e), threshold = 0.95)
         .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
     }),
     "q38_minhash_exact" -> ((s, dir) => {
@@ -899,17 +912,17 @@ object SparkEntry {
         .select(col("doc_id"), to_json(col("invalid_fields")).as("invalid_json"))
     }),
     "q36_window_segmented" -> ((s, dir) => {
-      // the skew-proof segmented ts-order check, hash-oracled against a
-      // plain DuckDB window: value-derived timestamps plant real inversions,
-      // and segSize=16 over sparse per-conv turn_idx (global event_id) makes
-      // almost every violation cross a segment boundary — the stitch path
+      // the ts-order check over sparse per-conv turn_idx (global event_id),
+      // hash-oracled against a plain DuckDB window: value-derived timestamps
+      // plant real inversions. The name is from a segmented window that
+      // measured slower than the plain one and was deleted
       val ev = t(s, dir, "events").select(
         col("user_id").cast("string").as("conv_id"),
         col("event_id").cast("int").as("turn_idx"),
         lit(0).as("part_id"),
         timestamp_seconds(floor(col("value") * 1000).cast("long")).as("ts"),
         col("props").as("text"))
-      graft.engine.Validator.tsOrderViolationsSegmented(ev, segSize = 16)
+      graft.engine.Validator.tsOrderViolations(ev)
         .select(col("conv_id"), col("turn_idx"), col("rule_id"),
           col("message"), col("text"))
     }),
@@ -953,11 +966,11 @@ object SparkEntry {
         .select(col("lang"), col("doc_id"))
     }),
     "q65_stratified_salted" -> ((s, dir) => {
-      // the skew-proof two-phase stratified sample must return EXACTLY the
-      // rows the plain q44 form returns — certified directly against the
-      // same DuckDB single-window oracle
-      graft.ops.Sampling.stratifiedSampleSalted(
-        t(s, dir, "documents"), "lang", "doc_id", k = 3, saltFactor = 8)
+      // the stratified sample against the same DuckDB single-window oracle
+      // as q44. The name is from a salted two-window form that measured
+      // slower than the plain one and was deleted
+      graft.ops.Sampling.stratifiedSample(
+        t(s, dir, "documents"), "lang", "doc_id", k = 3)
         .select(col("lang"), col("doc_id"))
     }),
     "q45_exact_quantiles" -> ((s, dir) => {
@@ -1827,12 +1840,9 @@ object SparkEntry {
       // pairs → quality-ranked keepers (n_chars as quality); planted
       // scaled copies (rank 0) are the duplicates the originals win over.
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val copies = e.filter(col("vec_id") % 25 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.01f)).as("embedding"))
       val ranks = t(s, dir, "documents")
         .select(col("doc_id").as("vec_id"), col("n_chars"))
-      Similarity.semDedup(e.unionByName(copies), ranks, "n_chars",
+      Similarity.semDedup(withScaledCopies(e), ranks, "n_chars",
         nCentroids = 8, iters = 2, threshold = 0.95)
     }),
     "t26_temporal_ref" -> ((s, dir) => {
@@ -1874,8 +1884,8 @@ object SparkEntry {
         minShared = 2)),
     "t19_role_grammar" -> ((s, _) =>
       // conversation-structure grammar over the synthetic transcript table
-      // (segmented==plain row-identity and rule semantics are GrammarSpec-
-      // gated; xxhash-generated input — no DuckDB twin)
+      // (rule semantics are GrammarSpec-gated; xxhash-generated input — no
+      // DuckDB twin)
       graft.engine.Grammar.transitionViolations(
         TranscriptGen.transcripts(s, tCfg), "conv_id", Seq("turn_idx"),
         "role", graft.engine.Grammar.roleRules)),

@@ -178,7 +178,7 @@ object Stats {
     * One row: key cardinality, total rows, the hottest key's row count and
     * ppm share, exact p50/p99 key sizes, and the salt factor that would
     * bring the hottest key under `targetPerTask` rows per task
-    * (`ceil(max/target)` — feed it to the salted-dedup/window family).
+    * (`ceil(max/target)`).
     *
     * Scale shape: per-key counts are one partial-combined shuffle; the
     * percentile machinery then runs on DISTINCT KEY SIZES with

@@ -44,10 +44,11 @@ object Validator {
     * ts) — `text` dominates row bytes and shuffling it made this branch the
     * pipeline's bottleneck (measured: zero speedup 8→32 cores, IO-bound).
     * The kept row's text is attached afterwards by joining the rare
-    * violating keys back (AQE broadcasts them), same shape as the dedup
-    * phase C. Violations are key-level: at most one TS_ORDER row per
-    * (conv_id, turn_idx), with the lexicographically first (ts, prev_ts)
-    * pair in the message for determinism under duplicate keys.
+    * violating keys back (AQE broadcasts them), the same text attach as
+    * [[dupViolations]]. Violations are key-level: at most one TS_ORDER row
+    * per (conv_id, turn_idx), with the lexicographically first
+    * (ts, prev_ts) pair in the message for determinism under duplicate
+    * keys.
     */
   def tsOrderViolations(turns: DataFrame): DataFrame = {
     val w = Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -64,53 +65,13 @@ object Validator {
         tsOrderRule :+ col("text"): _*)
   }
 
-  /** Skew-proof variant of [[tsOrderViolations]] for pathological hot
-    * conversations (SURVEY.md §2.6 skew note): the plain variant windows on
-    * `conv_id`, so a single conversation with tens of millions of turns
-    * serializes into ONE task. Here each conversation is range-split into
-    * `segSize`-turn segments (`seg = floor(turn_idx / segSize)`):
-    *
-    *  1. lag(ts) within (conv_id, seg) — parallelism = segments, not convs;
-    *  2. boundary stitch: per-segment first/last (turn_idx, ts) aggregates
-    *     (HashAggregate, narrow), then one tiny window over the per-segment
-    *     rows (n/segSize rows per conv) compares each segment's first ts to
-    *     the previous non-empty segment's last ts.
-    *
-    * Output is row-identical to the plain variant (spec-asserted): a turn's
-    * predecessor is either in its own segment (case 1) or is the last row of
-    * the nearest earlier non-empty segment (case 2).
+  /** Kept only for the frozen `Bench` skew block, whose JSON still reports
+    * a "seg" timing: delegates to [[tsOrderViolations]] and ignores
+    * `segSize`. No other code may call it.
     */
-  def tsOrderViolationsSegmented(
-      turns: DataFrame, segSize: Int = 1 << 16): DataFrame = {
-    val narrow = turns
-      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("ts"),
-        floor(col("turn_idx").cast("double") / segSize).as("seg"))
-    val wSeg = Window.partitionBy("conv_id", "seg").orderBy("turn_idx")
-    val inSeg = narrow
-      .select(col("conv_id"), col("turn_idx"), col("part_id"), col("ts"),
-        lag("ts", 1).over(wSeg).as("prev_ts"))
-      .filter(col("prev_ts").isNotNull && col("prev_ts") > col("ts"))
-    val segAgg = narrow
-      .groupBy(col("conv_id"), col("seg"))
-      .agg(
-        min(struct(col("turn_idx"), col("ts"), col("part_id"))).as("first"),
-        max(struct(col("turn_idx"), col("ts"))).as("last"))
-    val wConv = Window.partitionBy("conv_id").orderBy("seg")
-    val boundary = segAgg
-      .select(col("conv_id"),
-        col("first.turn_idx").as("turn_idx"),
-        col("first.part_id").as("part_id"),
-        col("first.ts").as("ts"),
-        lag("last.ts", 1).over(wConv).as("prev_ts"))
-      .filter(col("prev_ts").isNotNull && col("prev_ts") > col("ts"))
-    val badKeys = inSeg.unionByName(boundary)
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(min("part_id").as("part_id"),
-        min(struct(col("ts"), col("prev_ts"))).as("p"))
-    withText(badKeys, turns)
-      .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
-        tsOrderRule :+ col("text"): _*)
-  }
+  private[graft] def tsOrderViolationsSegmented(
+      turns: DataFrame, segSize: Int = 1 << 16): DataFrame =
+    tsOrderViolations(turns)
 
   /** The key-level checks' shared text attach: join the violating keys back
     * to `text` (rare keys — AQE broadcasts) and take, per key, the `min` of
@@ -149,41 +110,20 @@ object Validator {
     format_string("%d duplicate rows for key (conv_id, turn_idx)=(%s, %d)",
       col("n"), col("conv_id"), col("turn_idx")).as("message"))
 
-  /** `(conv_id, turn_idx)` uniqueness via explicit two-phase *salted* hash
-    * aggregate (SURVEY.md §2.5): phase 1 groups by (key, salt) so a hot
-    * conversation's rows spread over `saltFactor` reducers; phase 2 re-groups
-    * by key alone on the (already tiny) per-salt partial counts. The salt is
-    * derived from row content, not rand() — deterministic under retry.
-    * The single-root/exactly-one analog of reference `models.py:284-290`.
+  /** `(conv_id, turn_idx)` uniqueness (SURVEY.md §2.5): one groupBy on the
+    * key over NARROW columns, so both aggregate phases stay HashAggregate
+    * with a map-side partial combine (min(text) here would demote the hot
+    * path to SortAggregate, see PlanSpec). The key is not hot under a hot
+    * conversation, and the partial combine collapses a repeated key before
+    * the shuffle, so no salt is needed. The kept row's text is attached
+    * afterwards over the rare duplicate keys only. The single-root /
+    * exactly-one analog of reference `models.py:284-290`.
     */
-  def dupViolations(turns: DataFrame, saltFactor: Int = 16): DataFrame = {
-    // Phase A+B on NARROW columns only (no text): every aggregate has a
-    // fixed-width mutable buffer, so both phases stay HashAggregate with
-    // map-side partial combine (min(text) here would demote the whole hot
-    // path to SortAggregate — measured finding, see PlanSpec).
-    // The salt hashes (role, ts) — row content, so deterministic under
-    // task retry — and deliberately NOT text: with text in the salt the
-    // phase-A scan had to read and hash the dominant column of the table
-    // just to pick a bucket, costing a full text pass per validate run
-    // (guide §2.3 "shuffle keys, not payloads" applied to the salt
-    // derivation). Per-key sums are salt-invariant, so the output is
-    // byte-identical; only an exact-duplicate flood (identical role+ts)
-    // concentrates on one salt, and such rows hashed identically under
-    // the old salt too.
-    val salted = turns
-      .groupBy(
-        col("conv_id"), col("turn_idx"),
-        pmod(xxhash64(col("role"), col("ts")), lit(saltFactor))
-          .as("salt"))
-      .agg(count(lit(1)).as("c"), min("part_id").as("pid"))
-    val dupKeys = salted
+  def dupViolations(turns: DataFrame): DataFrame = {
+    val dupKeys = turns
       .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(sum("c").as("n"), min("pid").as("part_id"))
+      .agg(count(lit(1)).as("n"), min("part_id").as("part_id"))
       .filter(col("n") > 1)
-    // Phase C: attach the kept row's text for the byte-parity invariant —
-    // dup keys are rare, so this join's right side is tiny relative to the
-    // table; AQE broadcasts it when it fits, SMJ otherwise. min(text) here
-    // runs only over the duplicate rows themselves.
     withText(dupKeys, turns)
       .select(Seq(col("conv_id"), col("turn_idx"), col("part_id")) ++
         dupKeyRule :+ col("text"): _*)
@@ -210,8 +150,15 @@ object Validator {
     */
   private[graft] def broadcastIfFits(
       df: DataFrame, budget: Long = 64L << 20): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= budget) broadcast(df)
-    else df
+    if (fitsBroadcast(df, 1, budget)) broadcast(df) else df
+
+  /** The gate of [[broadcastIfFits]] for a frame that will fan out to
+    * `fanOut` rows per row: Spark gives a `Generate` its child's row
+    * count, so a frame is sized BEFORE its explode, times the fan-out.
+    */
+  private[graft] def fitsBroadcast(
+      df: DataFrame, fanOut: Int, budget: Long = 64L << 20): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes * fanOut <= budget
 
   /** Referential integrity of `conv_id` against the conversations dim — the
     * engine surfaces what the reference silently drops (dangling `@id` refs,
@@ -419,9 +366,10 @@ object Validator {
     * instead of sharing one repartition(conv_id) exchange, which on a 100 TB
     * table would ship `text`, the dominant bytes, once per consumer. The
     * row checks never shuffle; the key window shuffles only (conv_id,
-    * turn_idx, part_id, ts) and runs a hot conversation in one task (the
-    * skew-proof faces are [[tsOrderViolationsSegmented]] and the salted
-    * [[dupViolations]]).
+    * turn_idx, part_id, ts) and runs a hot conversation in one task:
+    * on a 4.36M-turn hot conversation (4 vCPU), splitting it into
+    * segments with a boundary stitch, or salting the dedup, was slower in
+    * every sample and never cut both wall time and max task.
     */
   def allViolations(
       turns: DataFrame,

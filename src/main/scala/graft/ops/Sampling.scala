@@ -31,9 +31,9 @@ object Sampling {
     * `row_number() <= k` patterns, so each map task ships at most k rows
     * per stratum: a hot stratum concentrates ≤ k·mapTasks rows on its
     * reducer, not its full size (plan capture + skew measurements in
-    * PLANS.md / BASELINE.md round 3). [[stratifiedSampleSalted]] bounds
-    * the reducer input further to k·saltFactor when k·mapTasks itself is
-    * the problem (huge k on a many-thousand-task scan).
+    * PLANS.md / BASELINE.md round 3). So salting the stratum buys
+    * nothing: a salted two-window form paid a second exchange for a bound
+    * this cap already gives, and was slower on a 4.36M-row hot stratum.
     */
   def stratifiedSample(df: DataFrame, stratumCol: String, keyCol: String, k: Int): DataFrame = {
     val w = Window
@@ -44,34 +44,14 @@ object Sampling {
       .drop("__rn")
   }
 
-  /** Two-phase variant of [[stratifiedSample]]: phase 1 takes the top-k of
-    * each (stratum, salt) sub-partition, phase 2 re-ranks only the
-    * ≤ k·saltFactor survivors per stratum. Output is row-identical to the
-    * plain variant (the global md5-order top-k of a stratum is contained
-    * in the union of its per-salt top-ks, since each global winner is also
-    * a winner within its own salt; law-specced + q65-oracled). The salt
-    * derives from the key, not rand() — deterministic under retry, stable
-    * across partitionings.
-    *
-    * When to use: the plain form's `WindowGroupLimit` pushdown already
-    * caps a hot stratum's reducer input at k·mapTasks rows (see
-    * [[stratifiedSample]]), and measured at 13M rows the second exchange
-    * here costs more than it saves. This variant is for the regime where
-    * k·mapTasks itself overwhelms one reducer — very large k on scans
-    * with many thousands of tasks — where its k·saltFactor bound is the
-    * tighter one.
+  /** Kept only for the frozen `Bench` skew block, whose JSON still reports
+    * a "salted" timing: delegates to [[stratifiedSample]] and ignores
+    * `saltFactor`. No other code may call it.
     */
-  def stratifiedSampleSalted(
+  private[graft] def stratifiedSampleSalted(
       df: DataFrame, stratumCol: String, keyCol: String, k: Int,
-      saltFactor: Int = 16): DataFrame = {
-    val ord = md5(col(keyCol).cast("string"))
-    val salt = pmod(xxhash64(col(keyCol).cast("string")), lit(saltFactor))
-    val w1 = Window.partitionBy(col(stratumCol), salt).orderBy(ord, col(keyCol))
-    val w2 = Window.partitionBy(stratumCol).orderBy(ord, col(keyCol))
-    df.withColumn("__rn1", row_number().over(w1)).filter(col("__rn1") <= k)
-      .withColumn("__rn2", row_number().over(w2)).filter(col("__rn2") <= k)
-      .drop("__rn1", "__rn2")
-  }
+      saltFactor: Int = 16): DataFrame =
+    stratifiedSample(df, stratumCol, keyCol, k)
 
   /** Weighted corpus mixture: per-stratum hashSample rates (training-data
     * mixing — upsample curated sources, downsample crawl). `rates` maps

@@ -44,6 +44,20 @@ object Similarity {
     else nn
   }
 
+  /** The ANN joins' query side: `(query_id, qv)` exploded into one row per
+    * probe of `probes` (`nProbes` elements) as `probeCol`, hinted for
+    * broadcast when the pre-explode frame times `nProbes` passes
+    * [[Validator.fitsBroadcast]]. Sized after the explode, a query set up
+    * to `nProbes`× the budget would broadcast.
+    */
+  private def probedQueries(queries: DataFrame, probeCol: String,
+      probes: Column, nProbes: Int): DataFrame = {
+    val pre = realOnly(queries).select(col("vec_id").as("query_id"),
+      asDouble(col("embedding")).as("qv"))
+    val q = pre.withColumn(probeCol, explode(probes))
+    if (Validator.fitsBroadcast(pre, nProbes)) broadcast(q) else q
+  }
+
   /** Exact brute-force top-k: broadcast the (small) query set against the
     * full embedding table, rank per query. The join is broadcast-nested-loop
     * by construction (no key) — correct baseline; `annTopK` is the scale
@@ -101,16 +115,14 @@ object Similarity {
     val e = realOnly(embeddings)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v"), planes))
-    val probes: Column => Column = b =>
-      if (multiprobe)
-        array((b +: (0 until nBits).map(i => b.bitwiseXOR(lit(1L << i)))): _*)
-      else array(b)
-    val q = realOnly(queries).select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("qv"))
-      .withColumn("bucket", explode(probes(lshBucket(col("qv"), planes))))
+    val b = lshBucket(col("qv"), planes)
+    val probes =
+      if (multiprobe) b +: (0 until nBits).map(i => b.bitwiseXOR(lit(1L << i)))
+      else Seq(b)
+    val q = probedQueries(queries, "bucket", array(probes: _*), probes.size)
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("vec_id"))
-    e.join(Validator.broadcastIfFits(q), Seq("bucket"))
+    e.join(q, Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("v"), col("qv")).as("cos"))
@@ -242,10 +254,8 @@ object Similarity {
       }: _*)
       transform(slice(array_sort(scoredArr), 1, nProbe), x => x.getField("i"))
     }
-    val q = realOnly(queries).select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("qv"))
-      .withColumn("cid", explode(probeList))
-    e.join(Validator.broadcastIfFits(q), Seq("cid"))
+    e.join(probedQueries(queries, "cid", probeList,
+        math.min(nProbe, cents.size)), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("v"), col("qv")).as("cos"))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * `hash % plantRate == 0` (FIXTURES.md plant table), mirroring the rule
   * shapes of reference `src/core/verification.py` (SURVEY.md §2.3). A Zipf-ish
   * hot conversation (conv_seq = 0) holds `hotTurns` rows to exercise the
-  * salted dedup / skew path.
+  * hot-key path of the key window and the dedup.
   */
 object TranscriptGen {
 

@@ -66,6 +66,40 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("ANN query side is gated before its probe fan-out: a query set " +
+    "over budget only after the explode does not broadcast") {
+    // 20k queries of 64 doubles from parquet: ~10 MB estimated before the
+    // probe explode, and Spark keeps that row count after it, but nine
+    // probes per query (LSH multiprobe on 8 bits, IVF nProbe = 9) ship
+    // ~90 MB, over the 64 MB budget
+    val dir = SparkTestSession.tempDir("graft_ann_gate").toString
+    spark.range(20000).select(col("id").as("vec_id"),
+      array((0 until 64).map(i => pmod(xxhash64(col("id"), lit(i)),
+        lit(1000003)).cast("double") / 1000003.0): _*).as("embedding"))
+      .write.parquet(s"$dir/q")
+    val q = spark.read.parquet(s"$dir/q")
+    val cents = (0 until 16).map(c => (0 until 64).map(i => ((c * 64 + i) % 7) - 3.0))
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = confs.map(c => c -> spark.conf.getOption(c))
+    confs.foreach(spark.conf.set(_, "-1"))
+    try {
+      def broadcasts(df: DataFrame): Boolean =
+        plan(df).contains("BroadcastHashJoin")
+      assert(!broadcasts(graft.ops.Similarity.annTopK(q, q)),
+        "LSH probe fan-out over budget must not broadcast")
+      assert(!broadcasts(graft.ops.Similarity.ivfTopK(q, q, nProbe = 9,
+        centroids = Some(cents))), "IVF probe fan-out over budget must not broadcast")
+      // a small query set still broadcasts
+      assert(broadcasts(graft.ops.Similarity.annTopK(q, q.limit(100))))
+      assert(broadcasts(graft.ops.Similarity.ivfTopK(q, q.limit(100),
+        nProbe = 9, centroids = Some(cents))))
+    } finally prev.foreach {
+      case (c, Some(v)) => spark.conf.set(c, v)
+      case (c, None) => spark.conf.unset(c)
+    }
+  }
+
   test("salted dedup hot path stays HashAggregate (no sort-based fallback)") {
     val p = plan(Validator.dupViolations(turns))
     assert(p.contains("HashAggregate"))
@@ -92,8 +126,6 @@ class PlanSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(windows.size === 1, s"expected one Window in:\n${plan(merged)}")
-    // the standalone face still salts, so the absence below is meaningful
-    assert(plan(Validator.dupViolations(onDisk)).contains("xxhash64"))
     assert(!plan(merged).contains("xxhash64"),
       s"salted aggregate in:\n${plan(merged)}")
   }
@@ -193,10 +225,23 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("segmented ts-order window keys include seg (skew split is real)") {
-    val p = plan(Validator.tsOrderViolationsSegmented(turns, segSize = 1000))
-    // the per-row window must partition by (conv_id, seg), not conv_id alone
-    assert(p.contains("seg"), "segment column missing from the plan")
-    assert(p.contains("Window"), "no window operator found")
+    // the segmented window is deleted; this now pins that the ts-order
+    // window's exchange ships the four narrow columns only, never text
+    val exec = Validator.tsOrderViolations(turns).queryExecution.executedPlan
+    val initial = exec match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case p => p
+    }
+    val windowExchanges = initial.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }.flatMap(_.child.collectFirst {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    })
+    assert(windowExchanges.size === 1, s"expected one window exchange in:\n$initial")
+    val shipped = windowExchanges.head.output.map(_.name)
+    assert(!shipped.contains("text"), s"text crosses the window exchange: $shipped")
+    assert(shipped.toSet === Set("conv_id", "turn_idx", "part_id", "ts"))
   }
 
   test("asofJoin: one window, no join operator at all (union formulation)") {

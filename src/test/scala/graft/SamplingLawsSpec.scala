@@ -22,11 +22,10 @@ class SamplingLawsSpec extends AnyFunSuite {
 
   // driver-side md5-prefix replica of the Column expression — equality with
   // the Spark side is pinned by the first test, the laws then run on it
-  private def pfx(id: Long): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(id.toString.getBytes("UTF-8"))
-    d.take(2).map(b => f"$b%02x").mkString
-  }
+  private def md5Hex(id: Long): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  private def pfx(id: Long): String = md5Hex(id).take(4)
   private val ids = (0L until 500L).toVector
   private val prefixes = ids.map(i => i -> pfx(i)).toMap
 
@@ -71,16 +70,17 @@ class SamplingLawsSpec extends AnyFunSuite {
   }
 
   test("law: salted stratified sample is row-identical to the plain one") {
-    // the skew-proof two-phase form must return EXACTLY the plain top-k —
-    // each global md5-order winner also wins within its own salt bucket
-    val df = ids.map(i => (i, if (i % 3 == 0) "hot" else s"s${i % 7}"))
-      .toDF("id", "st")
+    // the salted form is deleted; the stratified sample must return EXACTLY
+    // a driver-side replica's top-k: per stratum, the k smallest
+    // (md5 hex of the key, key)
+    val strata = ids.map(i => i -> (if (i % 3 == 0) "hot" else s"s${i % 7}"))
+    val df = strata.toDF("id", "st")
     Seq(1, 5, 40).foreach { k =>
-      val plain = Sampling.stratifiedSample(df, "st", "id", k)
+      val replica = strata.groupBy(_._2).values
+        .flatMap(_.sortBy { case (i, _) => (md5Hex(i), i) }.take(k)).toSet
+      val got = Sampling.stratifiedSample(df, "st", "id", k)
         .select("id", "st").as[(Long, String)].collect().toSet
-      val salted = Sampling.stratifiedSampleSalted(df, "st", "id", k, 8)
-        .select("id", "st").as[(Long, String)].collect().toSet
-      assert(salted === plain, s"k=$k")
+      assert(got === replica, s"k=$k")
     }
   }
 

@@ -47,11 +47,20 @@ class ValidatorSpec extends AnyFunSuite {
   }
 
   test("duplicate-key parity with plain groupBy recount (salted == unsalted)") {
+    // the standalone face and allViolations' merged tail each report
+    // exactly the recount's duplicate keys with their row counts, once
+    def keyCounts(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("conv_id"), col("turn_idx"),
+        regexp_extract(col("message"), "^(\\d+) duplicate", 1)
+          .cast("long").as("n"))
+      .as[(String, Int, Long)].collect().toSeq.sorted
     val expected = turns.groupBy("conv_id", "turn_idx").count()
-      .filter(col("count") > 1).count()
-    assert(Validator.dupViolations(turns, saltFactor = 16).count() === expected)
-    assert(Validator.dupViolations(turns, saltFactor = 1).count() === expected)
-    assert(Validator.dupViolations(turns, saltFactor = 64).count() === expected)
+      .filter(col("count") > 1)
+      .as[(String, Int, Long)].collect().toSeq.sorted
+    assert(expected.nonEmpty)
+    assert(keyCounts(Validator.dupViolations(turns)) === expected)
+    assert(keyCounts(violations.filter(col("rule_id") === "DUPLICATE_KEY")) ===
+      expected)
   }
 
   test("hot conversation carries duplicates (skew path exercised)") {
@@ -133,38 +142,6 @@ class ValidatorSpec extends AnyFunSuite {
       .map(_.toString).sorted
     assert(a.length === b.length)
     assert(a.sameElements(b))
-  }
-
-  test("segmented ts-order == plain on a pathological hot conversation") {
-    // one conversation with 50k turns (would serialize into a single task
-    // under the plain conv_id window) + normal convs; inversions planted
-    // inside segments AND exactly at segment boundaries (segSize=1000 ->
-    // turns 999|1000 etc.), incl. consecutive boundary-straddling pairs
-    val hot = spark.range(50000).select(
-      lit("hot_conv").as("conv_id"),
-      col("id").cast("int").as("turn_idx"),
-      lit("user").as("role"),
-      concat(lit("t"), col("id")).as("text"),
-      lit(null).cast("string").as("tool"),
-      // base: ts = id seconds; inversions: every 997th turn jumps back 10s,
-      // and turn 1000 (a segment FIRST row) dips below turn 999's ts
-      timestamp_seconds(
-        col("id") * 10 -
-          when(col("id") % 997 === 0 && col("id") > 0, 50).otherwise(0) -
-          when(col("id") === 1000 || col("id") === 32768, 15).otherwise(0))
-        .as("ts"),
-      lit(0).as("part_id"))
-    val normal = TranscriptGen.transcripts(spark, cfg)
-    val all = normal.unionByName(hot.select(normal.columns.map(col): _*))
-    val plain = Validator.tsOrderViolations(all)
-      .select("conv_id", "turn_idx", "message").collect().map(_.toString).sorted
-    val seg = Validator.tsOrderViolationsSegmented(all, segSize = 1000)
-      .select("conv_id", "turn_idx", "message").collect().map(_.toString).sorted
-    assert(plain.length === seg.length,
-      s"plain=${plain.length} seg=${seg.length}")
-    assert(plain.sameElements(seg))
-    // sanity: the planted boundary dip at turn 1000 is present in both
-    assert(plain.exists(_.contains("[hot_conv,1000,")))
   }
 
   test("generator is deterministic: same config twice gives identical bytes") {
@@ -280,6 +257,29 @@ class ValidatorSpec extends AnyFunSuite {
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "part_id")
   }
 
+  /** One 50k-turn conversation (a single task under the conv_id window)
+    * beside the generated ones, with ts inversions every 997th turn and
+    * at turns 1000 and 32768.
+    */
+  private lazy val hotConv = {
+    val hot = spark.range(50000).select(
+      lit("hot_conv").as("conv_id"),
+      col("id").cast("int").as("turn_idx"),
+      lit("user").as("role"),
+      concat(lit("t"), col("id")).as("text"),
+      lit(null).cast("string").as("tool"),
+      // base: ts = id * 10 s; every 997th turn jumps back 50 s, and turns
+      // 1000 and 32768 dip 15 s below their predecessor's ts
+      timestamp_seconds(
+        col("id") * 10 -
+          when(col("id") % 997 === 0 && col("id") > 0, 50).otherwise(0) -
+          when(col("id") === 1000 || col("id") === 32768, 15).otherwise(0))
+        .as("ts"),
+      lit(0).as("part_id"))
+    val normal = TranscriptGen.transcripts(spark, cfg)
+    normal.unionByName(hot.select(normal.columns.map(col): _*))
+  }
+
   test("merged ts+dup tail is row-identical to the standalone branch " +
       "functions (the shared text-attach optimization changes the plan, " +
       "never a byte)") {
@@ -293,12 +293,18 @@ class ValidatorSpec extends AnyFunSuite {
         .unionByName(Validator.dupViolations(t))
         .select(cols.map(col): _*)
     val advMerged = tsDup(Validator.allViolations(adversarial))
+    val hotMerged = tsDup(Validator.allViolations(hotConv))
     Seq("generated" -> (tsDup(violations), branches(turns)),
-      "adversarial" -> (advMerged, branches(adversarial)))
+      "adversarial" -> (advMerged, branches(adversarial)),
+      "hot conversation" -> (hotMerged, branches(hotConv)))
       .foreach { case (name, (merged, expected)) =>
         assert(merged.exceptAll(expected).isEmpty &&
           expected.exceptAll(merged).isEmpty, s"$name input")
       }
+    // sanity: the planted dip at turn 1000 is found
+    assert(hotMerged.filter(col("conv_id") === "hot_conv")
+      .select("conv_id", "turn_idx", "message").collect().map(_.toString)
+      .exists(_.contains("[hot_conv,1000,")))
     // pins today's null-key behaviour: rows with a null conv_id or
     // turn_idx are dropped at the text-attach join, and (a, 0) is flagged
     // because the null-index rows sort before it in the window
